@@ -1,0 +1,9 @@
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+HERE = Path(__file__).resolve().parent
+for p in (HERE.parent.parent, HERE.parent):
+    if str(p) not in sys.path:
+        sys.path.insert(0, str(p))
