@@ -8,8 +8,10 @@ Reference: main() at /root/reference/src/main.rs:159-328. Stages, in order:
 4. early exit when every source was fresh  (src/main.rs:241-244)
 5. cleanse-load the three tables           (src/main.rs:21-58,247-249)
 6. flagship latest-per-(premise,item)      (src/main.rs:252-278)
-7. SQLite artifact + index DDL + VACUUM    (src/main.rs:192-208,280-311)
+7. SQLite artifact + index DDL             (src/main.rs:192-208,280-311)
 8. zip packaging                           (src/main.rs:312-325)
+9. ship gate, then publish .db and .zip    (no counterpart: the reference
+                                           overwrites its outputs in place)
 
 Spark-first differences: the load+cleanse+dedup is ONE lazy DataFrame plan
 per table (no per-row inserts, no collect-and-reinsert round trip); indexes
@@ -24,6 +26,7 @@ the produced .db against a DuckDB oracle of the same transform).
 from __future__ import annotations
 
 import logging
+import os
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -36,7 +39,12 @@ from ..schemas import (
     PRICECATCHER_PREMISES,
     PRICECATCHER_PRICES,
 )
-from ..sinks.sqlite import REFERENCE_INDEXES, write_sqlite
+from ..sinks.sqlite import (
+    REFERENCE_INDEXES,
+    index_name,
+    verify_sqlite_artifact,
+    write_sqlite,
+)
 from ..sinks.zipsink import zip_artifact
 from ..sources.cache import SourceCache, pricecatcher_urls
 from ..sources.catalog import discover_months, pick_month
@@ -105,9 +113,9 @@ def build_tables(
     applied to prices. Pure lazy plans — nothing executes until the sink.
 
     The dimension keys carry the reference's UNIQUE INDEX contract
-    (src/main.rs:198,204); enforcement happens in build_artifact via
-    assert_unique_key so a duplicate aborts the run like the reference's
-    insert unwrap (src/main.rs:42,57).
+    (src/main.rs:198,204). write_sqlite enforces it when it builds those
+    indexes, so a duplicate or NULL key aborts build_artifact like the
+    reference's insert unwrap (src/main.rs:42,57).
 
     Each file's column names/order are verified against the declared
     PRICECATCHER_* contract before any transform — the reference reads
@@ -139,25 +147,33 @@ def build_artifact(
     out_dir: str | Path,
     month: str,
 ) -> tuple[Path, Path, dict[str, int]]:
-    """Tables → pricecatcher_{month}.db (+ reference index DDL + VACUUM)
-    → pricecatcher.zip. Returns (db, zip, row counts)."""
-    out_dir = Path(out_dir)
-    dedup.assert_unique_key(tables["premises"], ["premise_code"])
-    dedup.assert_unique_key(tables["items"], ["item_code"])
-    db = write_sqlite(
-        tables, out_dir / f"pricecatcher_{month}.db", indexes=REFERENCE_INDEXES
-    )
-    z = zip_artifact(db, out_dir / "pricecatcher.zip", arcname="pricecatcher.db")
-    import sqlite3
+    """Tables → pricecatcher_{month}.db (+ reference index DDL) →
+    pricecatcher.zip. Returns (db, zip, row counts).
 
-    con = sqlite3.connect(db)
+    Both files are written under temporary names in out_dir and pass the
+    ship gate (row counts as inserted, the nine reference indexes,
+    integrity_check) before they replace the published pair, .db first.
+    A build that fails at any step leaves the last good .db and .zip as
+    they were.
+    """
+    out_dir = Path(out_dir)
+    db = out_dir / f"pricecatcher_{month}.db"
+    z = out_dir / "pricecatcher.zip"
+    tmp_db, tmp_zip = (p.with_name(f".{p.name}.{os.getpid()}.tmp") for p in (db, z))
     try:
-        counts = {
-            t: con.execute(f'SELECT count(*) FROM "{t}"').fetchone()[0]
-            for t in tables
-        }
+        counts = write_sqlite(tables, tmp_db, indexes=REFERENCE_INDEXES)
+        names = [
+            index_name(t, c) for t, specs in REFERENCE_INDEXES.items() for c, _ in specs
+        ]
+        gate = verify_sqlite_artifact(str(tmp_db), counts, names)
+        if not gate["ok"]:
+            raise RuntimeError(f"artifact failed its ship gate: {gate}")
+        zip_artifact(tmp_db, tmp_zip, arcname="pricecatcher.db")
+        os.replace(tmp_db, db)
+        os.replace(tmp_zip, z)
     finally:
-        con.close()
+        tmp_db.unlink(missing_ok=True)
+        tmp_zip.unlink(missing_ok=True)
     return db, z, counts
 
 

@@ -74,20 +74,30 @@ def write_sqlite(
     db_path: str | Path,
     indexes: dict[str, list[tuple[str, bool]]] | None = None,
     batch_rows: int = 10_000,
-) -> Path:
+) -> dict[str, int]:
     """Write DataFrames into one SQLite file, streaming via toLocalIterator.
+    Returns the number of rows inserted per table.
 
     The driver materializes at most one Spark partition at a time
     (prefetch keeps the executors one partition ahead) — never the full
     table, so memory is bounded by partition size, not table size.
 
     indexes: table -> [(column, unique)] applied after load; mirrors the
-    reference DDL (src/main.rs:194-206) where the caller passes it.
+    reference DDL (src/main.rs:194-206) where the caller passes it. A
+    unique column is a key: a duplicate or a NULL in it raises
+    ValueError("unique key violated ..."). The duplicate is caught by
+    CREATE UNIQUE INDEX itself, the reference's own failure point
+    (src/main.rs:42,57); SQLite's UNIQUE admits repeated NULLs, so those
+    are looked up through the new index.
+
+    The file is written fresh with the journal off, so it has no free
+    pages and needs no VACUUM.
     """
     db_path = Path(db_path)
     db_path.parent.mkdir(parents=True, exist_ok=True)
     if db_path.exists():
         db_path.unlink()
+    counts: dict[str, int] = {}
     con = sqlite3.connect(db_path)
     try:
         con.execute("PRAGMA journal_mode=OFF")  # fresh artifact, no readers
@@ -97,6 +107,7 @@ def write_sqlite(
             placeholders = ", ".join("?" for _ in df.schema.fields)
             insert = f'INSERT INTO "{table}" VALUES ({placeholders})'
             out = _stringify_temporals(df)
+            before = con.total_changes
             buf: list[tuple] = []
             for row in out.toLocalIterator(prefetchPartitions=True):
                 buf.append(tuple(row))
@@ -106,17 +117,37 @@ def write_sqlite(
             if buf:
                 con.executemany(insert, buf)
             con.commit()
+            counts[table] = con.total_changes - before
         for table, specs in (indexes or {}).items():
             for col, unique in specs:
-                uq = "UNIQUE " if unique else ""
-                con.execute(
-                    f'CREATE {uq}INDEX "idx_{table}_{col}" ON "{table}" ("{col}")'
-                )
+                _create_index(con, table, col, unique)
         con.commit()
-        con.execute("VACUUM")  # src/main.rs:281
     finally:
         con.close()
-    return db_path
+    return counts
+
+
+def _create_index(
+    con: sqlite3.Connection, table: str, col: str, unique: bool
+) -> None:
+    uq = "UNIQUE " if unique else ""
+    try:
+        con.execute(
+            f'CREATE {uq}INDEX "{index_name(table, col)}" ON "{table}" ("{col}")'
+        )
+    except sqlite3.IntegrityError as e:
+        raise ValueError(
+            f"unique key violated on {table}.{col}: {e} "
+            "(reference aborts via unique-index insert, src/main.rs:42,57)"
+        ) from e
+    if unique and con.execute(
+        f'SELECT 1 FROM "{table}" WHERE "{col}" IS NULL LIMIT 1'
+    ).fetchone():
+        raise ValueError(f"unique key violated on {table}.{col}: NULL key")
+
+
+def index_name(table: str, col: str) -> str:
+    return f"idx_{table}_{col}"
 
 
 def write_sqlite_sharded(

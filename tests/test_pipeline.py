@@ -273,3 +273,51 @@ def test_unique_key_violation_aborts(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="unique key violated"):
         pipeline.build_artifact(tables, tmp_path / "out", "2024-01")
+
+
+def test_null_dimension_key_aborts(spark, fixture_trio, tmp_path):
+    """A NULL item_code fails the build like a duplicate: SQLite's UNIQUE
+    index admits repeated NULLs, so the sink looks for them explicitly."""
+    d = tmp_path / "nullkey"
+    d.mkdir()
+    items = pq.read_table(fixture_trio / "lookup_item.parquet")
+    codes = items.column("item_code").to_pylist()
+    items = items.set_column(0, "item_code", pa.array([codes[0], None]))
+    pq.write_table(items, d / "lookup_item.parquet")
+    tables = pipeline.build_tables(
+        spark,
+        prices_path=fixture_trio / "pricecatcher_2024-01.parquet",
+        premises_path=fixture_trio / "lookup_premise.parquet",
+        items_path=d / "lookup_item.parquet",
+    )
+    with pytest.raises(ValueError, match="unique key violated"):
+        pipeline.build_artifact(tables, tmp_path / "out", "2024-01")
+
+
+def test_failed_build_keeps_last_good_artifact(spark, fixture_trio, tmp_path):
+    """A build that fails part-way, in Spark or at the unique index, leaves
+    the published .db and .zip byte-identical and no temporary files."""
+    from pyspark.sql import functions as F
+
+    tables = pipeline.build_tables(
+        spark,
+        prices_path=fixture_trio / "pricecatcher_2024-01.parquet",
+        premises_path=fixture_trio / "lookup_premise.parquet",
+        items_path=fixture_trio / "lookup_item.parquet",
+    )
+    out = tmp_path / "out"
+    db, z, _ = pipeline.build_artifact(tables, out, "2024-01")
+    published = {p.name: p.read_bytes() for p in (db, z)}
+
+    # items is written last, so prices and premises are already in the file
+    failing = dict(tables, items=tables["items"].withColumn(
+        "item", F.raise_error(F.lit("upstream failure"))
+    ))
+    with pytest.raises(Exception, match="upstream failure"):
+        pipeline.build_artifact(failing, out, "2024-01")
+    assert {p.name: p.read_bytes() for p in out.iterdir()} == published
+
+    duplicate = dict(tables, items=tables["items"].unionByName(tables["items"]))
+    with pytest.raises(ValueError, match="unique key violated"):
+        pipeline.build_artifact(duplicate, out, "2024-01")
+    assert {p.name: p.read_bytes() for p in out.iterdir()} == published

@@ -10,6 +10,7 @@ from __future__ import annotations
 import sqlite3
 import zipfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from opendosm_parquet_to_sqlite_spark.sinks.sqlite import (
@@ -30,10 +31,12 @@ def test_write_sqlite_multibatch_contents_and_types(spark, tmp_path):
         F.concat(F.lit("name_"), F.col("id")).alias("name"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
     )
-    db = write_sqlite({"t": df}, tmp_path / "out.db", batch_rows=1_000)
+    db = tmp_path / "out.db"
+    counts = write_sqlite({"t": df}, db, batch_rows=1_000)
     con = sqlite3.connect(db)
     try:
         assert con.execute("SELECT count(*) FROM t").fetchone()[0] == n
+        assert counts == {"t": n}
         assert con.execute("SELECT sum(id) FROM t").fetchone()[0] == n * (n - 1) // 2
         row = con.execute(
             "SELECT id, val, name, ts FROM t WHERE id = 7"
@@ -58,9 +61,10 @@ def test_write_sqlite_reference_index_ddl(spark, tmp_path):
         [(10, "milk", "1l", "dairy", "drink")],
         "item_code long, item string, unit string, item_group string, item_category string",
     )
-    db = write_sqlite(
+    db = tmp_path / "pc.db"
+    write_sqlite(
         {"prices": prices, "premises": premises, "items": items},
-        tmp_path / "pc.db",
+        db,
         indexes=REFERENCE_INDEXES,
     )
     con = sqlite3.connect(db)
@@ -87,6 +91,37 @@ def test_write_sqlite_reference_index_ddl(spark, tmp_path):
             assert "UNIQUE" not in idx[key]
     finally:
         con.close()
+
+
+def test_write_sqlite_fresh_file_needs_no_vacuum(spark, tmp_path):
+    """A freshly written artifact, several tables with indexes over many
+    insert batches, has no free pages and passes quick_check, so the
+    sink skips VACUUM."""
+    df = spark.range(20_000).select(
+        F.col("id"), (F.col("id") % 97).alias("g"), F.concat(F.lit("v"), F.col("id")).alias("s")
+    )
+    db = tmp_path / "fresh.db"
+    write_sqlite(
+        {"a": df, "b": df.filter(F.col("g") < 50)},
+        db,
+        indexes={"a": [("id", True), ("g", False)], "b": [("s", False)]},
+        batch_rows=1_000,
+    )
+    con = sqlite3.connect(db)
+    try:
+        assert con.execute("PRAGMA freelist_count").fetchone()[0] == 0
+        assert con.execute("PRAGMA quick_check").fetchone()[0] == "ok"
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("keys", [[1, 2, 2], [1, None, None]], ids=["duplicate", "null"])
+def test_write_sqlite_unique_index_rejects_bad_keys(spark, tmp_path, keys):
+    """A unique index spec makes the column a key: a duplicate (caught by
+    CREATE UNIQUE INDEX) or a NULL (which SQLite's UNIQUE admits) raises."""
+    df = spark.createDataFrame([(k, "x") for k in keys], "k long, v string")
+    with pytest.raises(ValueError, match=r"unique key violated on t\.k"):
+        write_sqlite({"t": df}, tmp_path / "k.db", indexes={"t": [("k", True)]})
 
 
 def test_write_sqlite_sharded_union_equals_input(spark, tmp_path):
@@ -123,10 +158,8 @@ def test_write_sqlite_sharded_applies_index_ddl(spark, tmp_path):
     shards = write_sqlite_sharded(
         df, tmp_path / "shards", "prices", num_shards=3, indexes=specs
     )
-    single = write_sqlite(
-        {"prices": df}, tmp_path / "single.db",
-        indexes={"prices": specs},
-    )
+    single = tmp_path / "single.db"
+    write_sqlite({"prices": df}, single, indexes={"prices": specs})
     con = sqlite3.connect(single)
     try:
         expect = {
