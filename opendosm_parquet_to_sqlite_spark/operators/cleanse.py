@@ -109,8 +109,3 @@ def clean_string(col: Column | str) -> Column:
     trim('UNKNOWN') == 'UNKNOWN' the composition order is immaterial.
     """
     return trim_str(null_default_unknown(col))
-
-
-def cleanse_strings(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Apply clean_string to the named columns, preserving all others."""
-    return df.withColumns({c: clean_string(c) for c in cols})

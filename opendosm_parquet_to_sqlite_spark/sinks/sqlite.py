@@ -21,9 +21,11 @@ from __future__ import annotations
 
 import os
 import sqlite3
+from itertools import islice
 from pathlib import Path
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 _SPARK_TO_SQLITE = {
     "long": "INTEGER",
@@ -45,12 +47,29 @@ def _ddl_type(spark_type: str) -> str:
     return _SPARK_TO_SQLITE.get(spark_type, "TEXT")
 
 
-def _create_table(con: sqlite3.Connection, table: str, df: DataFrame) -> None:
+def table_ddl(table: str, schema: StructType) -> str:
+    """CREATE TABLE IF NOT EXISTS for a DataFrame schema, one SQLite type
+    per Spark type. Every writer of a table takes its DDL from here, so a
+    table has one schema whichever path created it."""
     cols = ", ".join(
-        f'"{f.name}" {_ddl_type(f.dataType.typeName())}' for f in df.schema.fields
+        f'"{f.name}" {_ddl_type(f.dataType.typeName())}' for f in schema.fields
     )
+    return f'CREATE TABLE IF NOT EXISTS "{table}" ({cols})'
+
+
+def _create_table(con: sqlite3.Connection, table: str, schema: StructType) -> None:
     con.execute(f'DROP TABLE IF EXISTS "{table}"')
-    con.execute(f'CREATE TABLE "{table}" ({cols})')
+    con.execute(table_ddl(table, schema))
+
+
+def _insert_rows(
+    con: sqlite3.Connection, sql: str, rows, batch_rows: int = 10_000
+) -> None:
+    """executemany `sql` over an iterable of row tuples, `batch_rows` at a
+    time, so memory holds one batch, never the whole iterable."""
+    it = iter(rows)
+    while batch := list(islice(it, batch_rows)):
+        con.executemany(sql, batch)
 
 
 def _stringify_temporals(df: DataFrame) -> DataFrame:
@@ -103,19 +122,14 @@ def write_sqlite(
         con.execute("PRAGMA journal_mode=OFF")  # fresh artifact, no readers
         con.execute("PRAGMA synchronous=OFF")
         for table, df in tables.items():
-            _create_table(con, table, df)
+            _create_table(con, table, df.schema)
             placeholders = ", ".join("?" for _ in df.schema.fields)
             insert = f'INSERT INTO "{table}" VALUES ({placeholders})'
             out = _stringify_temporals(df)
             before = con.total_changes
-            buf: list[tuple] = []
-            for row in out.toLocalIterator(prefetchPartitions=True):
-                buf.append(tuple(row))
-                if len(buf) >= batch_rows:
-                    con.executemany(insert, buf)
-                    buf.clear()
-            if buf:
-                con.executemany(insert, buf)
+            _insert_rows(
+                con, insert, out.toLocalIterator(prefetchPartitions=True), batch_rows
+            )
             con.commit()
             counts[table] = con.total_changes - before
         for table, specs in (indexes or {}).items():
@@ -175,11 +189,7 @@ def write_sqlite_sharded(
     if num_shards is not None:
         df = df.repartition(num_shards)
     schema = df.schema
-    col_names = [f.name for f in schema.fields]
-    ddl_cols = ", ".join(
-        f'"{f.name}" {_ddl_type(f.dataType.typeName())}' for f in schema.fields
-    )
-    insert = f'INSERT INTO "{table}" VALUES ({", ".join("?" for _ in col_names)})'
+    insert = f'INSERT INTO "{table}" VALUES ({", ".join("?" for _ in schema.fields)})'
     out_str = str(out)
     index_specs = list(indexes or [])
 
@@ -192,16 +202,8 @@ def write_sqlite_sharded(
         c = _sqlite3.connect(path)
         c.execute("PRAGMA journal_mode=OFF")
         c.execute("PRAGMA synchronous=OFF")
-        c.execute(f'DROP TABLE IF EXISTS "{table}"')
-        c.execute(f'CREATE TABLE "{table}" ({ddl_cols})')
-        buf = []
-        for row in rows:
-            buf.append(tuple(row[n] for n in col_names))
-            if len(buf) >= 10_000:
-                c.executemany(insert, buf)
-                buf.clear()
-        if buf:
-            c.executemany(insert, buf)
+        _create_table(c, table, schema)
+        _insert_rows(c, insert, rows)
         for col, unique in index_specs:
             uq = "UNIQUE " if unique else ""
             c.execute(

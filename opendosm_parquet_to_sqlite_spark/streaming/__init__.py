@@ -9,14 +9,18 @@ a per-source freshness check that skips unchanged inputs
   that arrived since the last checkpoint, then stops — the reference's
   "skip if fresh" and "daily microbatch" in one mechanism, with exactly-once
   bookkeeping instead of a size heuristic.
-- latest_per_key_stream: the flagship latest-per-(premise,item) dedup as a
-  continuously-maintained stateful aggregate (update mode) — new prices
-  flow in, the "current latest" table stays correct without a full rebuild.
+- stream_prices_to_sqlite: the PriceCatcher top-up. Each microbatch's
+  latest-per-(premise,item) champions are merged into the SQLite file by a
+  guarded UPSERT; the file is the only state, and a replayed microbatch
+  changes nothing, so there is no state store.
+- latest_per_key_stream: the same champion rule as a stateful aggregate
+  (update mode), for sinks that do not hold the champions themselves.
 - dedup_within_watermark / tumbling_window_agg_stream: bounded-state
   duplicate drop and event-time windowing with late-data handling.
 
-State stores shard by the grouping key, so every operator here scales the
-same way the batch plans do: one hash exchange on the keys, no global state.
+State stores shard by the grouping key, so every stateful operator here
+scales the same way the batch plans do: one hash exchange on the keys, no
+global state.
 """
 
 from .corpus import corpus_ingest_stream, rowwise_repetition_ok

@@ -1,15 +1,13 @@
 """Streaming operators: stateful latest-per-key, watermarked dedup, windows.
 
 Design notes (100 TB stance):
-- latest_per_key_stream is the streaming twin of
-  operators.dedup.latest_per_group_maxby: the SAME max_by(struct, orderkey)
-  aggregate, executed incrementally — state is one row per key, sharded by
-  the grouping key across the state store. Update output mode emits only
-  keys whose champion changed in the microbatch, so a downstream upsert
-  sink (foreachBatch → merge) maintains the "current latest" table with
-  work proportional to the delta, not the history. This is what replaces
-  the reference's drop-table-and-rebuild (src/main.rs:264-277) when data
-  arrives continuously.
+- latest_per_key_stream is operators.dedup.latest_per_group_maxby applied
+  to a stream: the same max_by(struct, orderkey) aggregate, executed
+  incrementally — state is one row per key, sharded by the grouping key
+  across the state store, and update output mode emits only keys whose
+  champion changed in the microbatch. The PriceCatcher top-up
+  (streaming.pipeline) does not use it: its SQLite file already holds the
+  champions, so it runs the batch aggregate per microbatch instead.
 - dedup_within_watermark bounds state: a duplicate arriving later than the
   watermark delay is (by declaration) no longer detected, in exchange for
   state eviction — the knob the batch operators don't need.
@@ -23,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..operators.dedup import latest_per_group_maxby
 
 
 def read_stream_parquet(
@@ -49,18 +49,10 @@ def latest_per_key_stream(
     order_col: str,
     tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Continuously-maintained argmax-per-key (use update output mode).
-
-    Same result columns and champion rule as the batch
-    latest_per_group_maxby; state = one struct per key."""
-    payload_cols = list(sdf.columns)
-    order_key = F.struct(
-        *[F.col(order_col)] + [F.col(c) for c in (tiebreak_cols or [])]
-    )
-    agg = sdf.groupBy(*group_cols).agg(
-        F.max_by(F.struct(*payload_cols), order_key).alias("__best")
-    )
-    return agg.select(*[F.col(f"__best.{c}").alias(c) for c in payload_cols])
+    """Continuously-maintained argmax-per-key (use update output mode):
+    the batch latest_per_group_maxby on a stream; state = one struct per
+    key."""
+    return latest_per_group_maxby(sdf, group_cols, order_col, tiebreak_cols)
 
 
 def dedup_within_watermark(

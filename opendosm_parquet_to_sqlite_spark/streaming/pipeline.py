@@ -3,16 +3,25 @@ plans.pipeline.
 
 The reference rebuilds its whole SQLite artifact from scratch every day
 (script.sh:2-4 → src/main.rs:252-278 drop-and-rebuild). Streaming version:
-monthly price files land in a directory; each run processes ONLY the new
-files (file-source checkpoint), updates the stateful latest-per-(premise,
-item) aggregate, and upserts just the CHANGED champions into the SQLite
-artifact (INSERT OR REPLACE on the key). Work per run is proportional to
-the delta, not the history — at 100 TB of accumulated months that is the
-difference between a daily full rebuild and a minutes-long top-up.
+price files land in a directory; each run reads ONLY the new files
+(file-source checkpoint), takes the latest price per (premise, item) within
+each microbatch, and merges those champions into the SQLite file with a
+guarded UPSERT that replaces a stored row only when the new (date, price)
+orders above it. Work per run is proportional to the delta, not the
+history.
 
-The upsert runs driver-side because SQLite is single-writer; the rows
-crossing the driver are only the changed champions of the microbatch (the
-update-mode delta), never the full table.
+The SQLite file is the only state. The champion rule, max over
+(date, price), is associative, commutative and idempotent, so a
+microbatch can be merged on its own: no Spark state store keeps a second
+copy of the champions, and a replayed microbatch (a crash between the
+SQLite commit and the checkpoint commit, or a deleted checkpoint) changes
+nothing. The target may be a prices-only file or the shipped month
+artifact; the merge adds the (premise_code, item_code) unique index it
+needs to either.
+
+The merge runs driver-side because SQLite is single-writer; the rows
+crossing the driver are the microbatch's champions, streamed in bounded
+chunks, never the full table.
 """
 
 from __future__ import annotations
@@ -23,14 +32,32 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
+from ..operators import dedup
 from ..plans.pipeline import cleanse_prices
-from .incremental import latest_per_key_stream, read_stream_parquet, run_available_now
+from ..sinks.sqlite import _insert_rows, table_ddl
+from .incremental import read_stream_parquet, run_available_now
 
-_DDL = (
-    'CREATE TABLE IF NOT EXISTS "prices" ('
-    '"date" TEXT, "premise_code" INTEGER, "item_code" INTEGER, "price" REAL, '
-    'PRIMARY KEY ("premise_code", "item_code"))'
+_KEY = ["premise_code", "item_code"]
+# The key the UPSERT needs; the month build leaves it out (it would only
+# grow the shipped file), so the first top-up of an artifact adds it.
+_KEY_INDEX = (
+    'CREATE UNIQUE INDEX IF NOT EXISTS "idx_prices_premise_code_item_code" '
+    'ON "prices" ("premise_code", "item_code")'
 )
+
+# Spark's max_by over struct(date, price) orders a NULL field lowest; a
+# SQLite comparison with NULL is NULL, so the guard spells NULLs out.
+_MERGE = """
+INSERT INTO "prices" ("date", "premise_code", "item_code", "price")
+VALUES (?, ?, ?, ?)
+ON CONFLICT ("premise_code", "item_code") DO UPDATE
+SET "date" = excluded."date", "price" = excluded."price"
+WHERE excluded."date" > "prices"."date"
+   OR ("prices"."date" IS NULL AND excluded."date" IS NOT NULL)
+   OR (excluded."date" IS "prices"."date"
+       AND (excluded."price" > "prices"."price"
+            OR ("prices"."price" IS NULL AND excluded."price" IS NOT NULL)))
+"""
 
 
 def stream_prices_to_sqlite(
@@ -40,47 +67,34 @@ def stream_prices_to_sqlite(
     checkpoint_dir: str | Path,
     source_schema: StructType,
 ) -> Path:
-    """Drain new price files into the artifact; returns the db path.
+    """Merge newly landed price files into the SQLite file; returns its path.
 
     Safe to call repeatedly (cron-style): a run with no new files touches
     nothing. The champion rule matches the batch pipeline exactly
     (max date, price tie-break), so a from-scratch batch rebuild and any
     sequence of incremental runs over the same files converge to identical
-    artifacts (pinned in tests/test_streaming_pipeline.py).
+    `prices` rows (pinned in tests/test_streaming_pipeline.py). Each
+    microbatch is one SQLite transaction: a merge that fails part-way
+    leaves the file as it was, and the next run retries the same files.
     """
     db_path = Path(db_path)
     db_path.parent.mkdir(parents=True, exist_ok=True)
-    sdf = read_stream_parquet(spark, str(prices_dir), source_schema)
-    latest = latest_per_key_stream(
-        cleanse_prices(sdf), ["premise_code", "item_code"], "date",
-        tiebreak_cols=["price"],
-    )
+    prices = cleanse_prices(read_stream_parquet(spark, str(prices_dir), source_schema))
 
-    def upsert(batch_df, _batch_id: int, _batch_rows: int = 10_000) -> None:
-        # Stream the update-mode delta through the driver in bounded chunks
-        # (same shape as sinks/sqlite.py): steady-state batches hold only
-        # changed keys, but the FIRST batch of a large corpus is the full
-        # champion set — a collect() there is a driver OOM at scale, while
-        # toLocalIterator holds at most a partition + prefetch in memory.
-        it = (
-            batch_df.select("date", "premise_code", "item_code", "price")
-            .toLocalIterator(prefetchPartitions=True)
-        )
-        con = sqlite3.connect(db_path)
+    def merge(batch_df, _batch_id: int) -> None:
+        latest = dedup.latest_per_group_maxby(batch_df, _KEY, "date", ["price"])
+        # isolation_level=None: the DDL and the merge share one explicit
+        # transaction in the default rollback journal, so a failure at any
+        # statement rolls all of them back.
+        con = sqlite3.connect(db_path, isolation_level=None)
         try:
-            con.execute(_DDL)
-            insert = 'INSERT OR REPLACE INTO "prices" VALUES (?,?,?,?)'
-            buf: list[tuple] = []
-            for row in it:
-                buf.append(tuple(row))
-                if len(buf) >= _batch_rows:
-                    con.executemany(insert, buf)
-                    buf.clear()
-            if buf:
-                con.executemany(insert, buf)
-            con.commit()
+            con.execute("BEGIN")
+            con.execute(table_ddl("prices", latest.schema))
+            con.execute(_KEY_INDEX)
+            _insert_rows(con, _MERGE, latest.toLocalIterator(prefetchPartitions=True))
+            con.execute("COMMIT")
         finally:
             con.close()
 
-    run_available_now(latest, str(checkpoint_dir), upsert, output_mode="update")
+    run_available_now(prices, str(checkpoint_dir), merge, output_mode="append")
     return db_path
