@@ -190,7 +190,7 @@ HEADLINE = [
     "dedup_keep_best",
     # first-touch attribution (event-time RANGE-frame min)
     "attribution_first_touch",
-    # time-windowed dedup (batch twin of the streaming watermark dedup)
+    # time-windowed exact dedup (lag window, chain semantics)
     "dedup_time_window",
     # cluster-aware split: near-dup components hash as one unit (pair
     # graph + union-find + one doc-keyed join + narrow band projection)

@@ -18,8 +18,8 @@ Layout:
   plans/     — queries registry + the end-to-end PriceCatcher pipeline
                (the reference's main(), re-expressed lazily; plans.pipeline)
   sinks/     — SQLite + zip artifact writers (src/main.rs:284-325)
-  streaming/ — Structured Streaming incremental analogs (stateful
-               latest-per-key, watermarked dedup, event-time windows)
+  streaming/ — the Structured Streaming top-up of the SQLite artifact
+               (stream_prices_to_sqlite)
 """
 
 __version__ = "0.1.0"

@@ -117,9 +117,8 @@ def session_agg(
     starts a new session). Emits (keys, session_start, n_events[, avg]).
 
     Scale shape: session_window is a single hash exchange on the keys with
-    in-partition session merging — state is bounded per key, and the same
-    expression runs under Structured Streaming with a watermark for the
-    live path. Oracle-expressible via gaps-and-islands SQL.
+    in-partition session merging — state is bounded per key.
+    Oracle-expressible via gaps-and-islands SQL.
     """
     w = F.session_window(F.col(ts_col), gap)
     aggs = [F.count(F.lit(1)).alias("n_events")]
@@ -198,8 +197,7 @@ def sliding_window_agg(
 
     Scale: fanout is the fixed ratio width/slide (e.g. 2 for 1h/30m), so
     shuffle volume is ratio × the tumbling cost — the standard trade for
-    smoother time series. Streaming-compatible unchanged (watermark +
-    update mode), like the tumbling form.
+    smoother time series.
     """
     w = F.window(F.col(ts_col), width, slide)
     return (
@@ -226,7 +224,7 @@ def tumbling_window_agg(
     width: str = "1 hour",
     extra_group: list[str] | None = None,
 ) -> DataFrame:
-    """Event-time tumbling-window aggregate (batch form; streaming shares it).
+    """Event-time tumbling-window aggregate.
 
     Emits window_start as a string so the same result is expressible in the
     DuckDB oracle via date_trunc.

@@ -174,18 +174,14 @@ def dedup_within_time_window(
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Time-windowed exact dedup: a row survives unless the SAME key
-    occurred within the preceding `window_seconds` — the batch twin of
-    the streaming dedup_within_watermark (whose state eviction implies
-    exactly this semantics), giving the streaming operator a
-    hash-checkable batch restatement.  Emails re-sent within an hour,
-    repeated webhook deliveries, double-clicks: suppressed; genuine
-    recurrences beyond the horizon: kept.
+    occurred within the preceding `window_seconds`.  Emails re-sent
+    within an hour, repeated webhook deliveries, double-clicks:
+    suppressed; genuine recurrences beyond the horizon: kept.
 
     Chain semantics: each occurrence is compared to its IMMEDIATE
     predecessor (kept or dropped), so a chain of sub-window gaps
-    suppresses everything after the first row — matching the streaming
-    operator, whose per-key state refreshes on every arrival, not only
-    on emissions.
+    suppresses everything after the first row: the horizon refreshes on
+    every arrival, not only on emissions.
 
     Shape: ONE key exchange + in-partition sort (lag window) + narrow
     filter — the flagship cost envelope.

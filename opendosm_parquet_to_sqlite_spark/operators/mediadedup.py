@@ -722,46 +722,6 @@ def media_dup_clusters(
     )
 
 
-def with_media_phash(
-    df: DataFrame,
-    payload_col: str,
-    modality: str = "image",
-    out_col: str = "phash",
-    decode_fn=None,
-) -> DataFrame:
-    """Append a 64-bit perceptual-hash column, preserving every other
-    column — the pandas_udf (scalar, Arrow-batched) form of the
-    fingerprint step. mapInPandas (image_phash/audio_phash) is the bulk
-    batch shape; this column form is what STREAMING pipelines and
-    passthrough enrichments need (works on both batch and streaming
-    DataFrames: a scalar pandas_udf is a map-type op)."""
-    from pyspark.sql.functions import pandas_udf
-
-    if modality == "image":
-        decode = decode_fn or gray_decode
-
-        def fp(payload: bytes) -> int:
-            return dhash64(decode(payload))
-
-    elif modality == "audio":
-        decode = decode_fn or audio_decode
-
-        def fp(payload: bytes) -> int:
-            rate, x = decode(payload)
-            return audio_fp64(x, rate)
-
-    else:
-        raise ValueError(f"unknown modality {modality!r}")
-
-    @pandas_udf("long")
-    def _phash(s):
-        import pandas as pd
-
-        return pd.Series([fp(bytes(b)) for b in s], dtype="int64")
-
-    return df.withColumn(out_col, _phash(F.col(payload_col)))
-
-
 # --- persisted fingerprint index (ingest-increment path) ----------------------
 
 

@@ -1,6 +1,6 @@
 """Skew remedies for keyed windows and keyed profiles — the operators the
 rest of the tree points at with "salt upstream if one entity dominates"
-(operators/temporal.py rolling_features, streaming/stateful.py profiles).
+(operators/temporal.py rolling_features, batch_profile below).
 
 Two different skew problems, two different fixes:
 
@@ -35,6 +35,53 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def batch_profile(
+    df: DataFrame,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    tiebreak_col: str | None = None,
+) -> DataFrame:
+    """Per-key value profile via one groupBy: (key, n_events, mean_value,
+    m2_value, min_value, max_value, last_ts, last_value). Hash aggregation
+    partial-combines map-side, so hot keys are already fine here;
+    salted_batch_profile is the row-identical explicit two-phase shape for
+    planner modes without partial aggregation.
+
+    tiebreak_col makes last_value deterministic when (key, ts) collides
+    (inputs with duplicate timestamps need an explicit total order)."""
+    v = F.col(value_col).cast("double")
+    order = (
+        F.struct(F.col("et"), F.col("tb"))
+        if tiebreak_col
+        else F.struct(F.col("et"))
+    )
+    cols = [
+        F.col(key_col).cast("string").alias("key"),
+        F.col(ts_col).cast("long").alias("et"),
+        v.alias("value"),
+    ]
+    if tiebreak_col:
+        cols.append(F.col(tiebreak_col).alias("tb"))
+    return (
+        df.select(*cols)
+        .groupBy("key")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.avg("value"), 6).alias("mean_value"),
+            F.round(
+                F.sum(F.col("value") * F.col("value"))
+                - F.count(F.lit(1)) * F.avg("value") * F.avg("value"),
+                6,
+            ).alias("m2_value"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
+            F.max("et").alias("last_ts"),
+            F.max_by("value", order).alias("last_value"),
+        )
+    )
+
+
 def salted_batch_profile(
     df: DataFrame,
     key_col: str,
@@ -43,8 +90,8 @@ def salted_batch_profile(
     tiebreak_col: str | None = None,
     salt_factor: int = 16,
 ) -> DataFrame:
-    """Two-phase (salted partial + merge) twin of
-    streaming.stateful.batch_profile — identical output schema and values:
+    """Two-phase (salted partial + merge) twin of batch_profile —
+    identical output schema and values:
     (key, n_events, mean_value, m2_value, min_value, max_value, last_ts,
     last_value).
 

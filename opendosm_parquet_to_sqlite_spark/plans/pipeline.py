@@ -2,8 +2,9 @@
 
 Reference: main() at /root/reference/src/main.rs:159-328. Stages, in order:
 
-1. catalog discovery → month keys          (src/main.rs:68-93)
-2. month selection (--latest / pick)       (src/main.rs:169-189)
+1. catalog discovery → month keys          (src/main.rs:68-93; the CLI,
+                                           __main__.py, before run_pipeline)
+2. month selection (--latest / pick)       (src/main.rs:169-189; the CLI)
 3. fetch 3 parquets through the cache      (src/main.rs:214-239)
 4. early exit when every source was fresh  (src/main.rs:241-244)
 5. cleanse-load the three tables           (src/main.rs:21-58,247-249)
@@ -47,7 +48,6 @@ from ..sinks.sqlite import (
 )
 from ..sinks.zipsink import zip_artifact
 from ..sources.cache import SourceCache, pricecatcher_urls
-from ..sources.catalog import discover_months, pick_month
 from ..sources.parquet import _verify_schema
 
 log = logging.getLogger(__name__)
@@ -181,21 +181,16 @@ def run_pipeline(
     spark: SparkSession,
     out_dir: str | Path,
     cache_dir: str | Path,
-    month: str | None = None,
-    latest: bool = True,
+    month: str,
     base_url: str = "https://storage.data.gov.my",
-    catalog_fetch=None,
     force: bool = False,
 ) -> PipelineResult:
-    """The full reference main(): catalog → cache → early-exit → build.
+    """The reference main() for one month: cache → early-exit → build.
 
-    month=None discovers the catalog and picks (latest or interactive is a
-    CLI concern — here latest). catalog_fetch is injectable for tests.
-    force=True rebuilds even when every source was a cache hit.
+    Choosing the month (catalog discovery, latest or interactive pick) is
+    the CLI's job. force=True rebuilds even when every source was a cache
+    hit.
     """
-    if month is None:
-        months = discover_months(fetch=catalog_fetch)
-        month = pick_month(months, latest=latest)
     cache = SourceCache(cache_dir)
     paths, all_fresh = cache.get_all(pricecatcher_urls(month, base=base_url))
     if all_fresh and not force:

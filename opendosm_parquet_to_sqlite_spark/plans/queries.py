@@ -623,7 +623,7 @@ def q_sort(spark: SparkSession, sf: str) -> DataFrame:
     shadow=True,
 )
 def q_window_hourly(spark: SparkSession, sf: str) -> DataFrame:
-    """Tumbling event-time window agg (batch form; streaming/ shares it)."""
+    """Tumbling event-time window agg."""
     ev = load_table(spark, sf, "events")
     return aggregates.tumbling_window_agg(
         ev, "ts", "value", "1 hour", extra_group=["event_type"]
@@ -722,8 +722,7 @@ def q_dedup_keep_first(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_session_window(spark: SparkSession, sf: str) -> DataFrame:
     """Session windows (30-min inactivity gap) per user — merged-gap
-    semantics match the gaps-and-islands oracle exactly; the same
-    expression runs under Structured Streaming with a watermark."""
+    semantics match the gaps-and-islands oracle exactly."""
     ev = load_table(spark, sf, "events")
     return aggregates.session_agg(ev, "ts", ["user_id"], gap="30 minutes")
 
@@ -2432,14 +2431,12 @@ def q_time_resample(spark: SparkSession, sf: str) -> DataFrame:
     shadow=True,  # demoted round 7 (4th rotation): multi-round driver-green
 )
 def q_running_profile(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-user value profile — the BATCH twin of the stateful streaming
-    operator (streaming/stateful.py): identical columns, so the backfill
-    table and the continuously-maintained one are interchangeable.
+    """Per-user value profile (operators.skew.batch_profile).
     last_value tie-breaks (et, event_id) — deterministic under duplicate
-    event seconds; the m2 oracle repeats the stream's exact
+    event seconds; the m2 oracle repeats batch_profile's exact
     sum-of-squares algebra, not var_pop's, so both engines round the same
     number."""
-    from ..streaming.stateful import batch_profile
+    from ..operators.skew import batch_profile
 
     ev = load_table(spark, sf, "events")
     e0 = ev.select(
@@ -4555,8 +4552,7 @@ def q_attribution_first_touch(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_dedup_time_window(spark: SparkSession, sf: str) -> DataFrame:
     """Time-windowed exact dedup (repeats of (user, event_type) within
-    an hour suppressed, chain semantics) — the hash-checkable batch
-    twin of the streaming watermark dedup. One key exchange + lag
+    an hour suppressed, chain semantics). One key exchange + lag
     window + narrow filter."""
     ev = load_table(spark, sf, "events")
     secs = F.floor(

@@ -6,8 +6,10 @@ multi-executor cluster and merely *tested* on local[N]:
 
 - AQE on: runtime coalescing of shuffle partitions + skew-join splitting,
   so the same plan survives sf0.001 and 100 TB.
-- shuffle.partitions sized by env (32 locally; a real cluster overrides —
-  AQE coalesces down, so oversizing is safe, undersizing is not).
+- local[N] and shuffle.partitions both sized by task_cpus(): the
+  SPARK_GRAFT_CPUS override, else the CPUs this process may run on (a real
+  cluster overrides — AQE coalesces down, so oversizing is safe,
+  undersizing is not).
 - Arrow enabled for the (rare) pandas-UDF paths and driver interchange.
 - Session timezone pinned to UTC so date formatting is deterministic and
   matches the DuckDB oracle byte-for-byte.
@@ -19,7 +21,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def task_cpus() -> int:
+    """Task threads for local[N] and the shuffle partition count:
+    SPARK_GRAFT_CPUS if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -37,14 +43,11 @@ def get_spark(
     if active is not None:
         return active
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = task_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's coalescing floor (Spark default 1m) sets the MINIMUM
@@ -86,23 +89,12 @@ def get_spark(
         # allocation-heavy query after the suite paid a multi-second
         # GC/cleanup storm (round-7 contamination_bloom "4.28x" — 0.9x
         # isolated). Headroom keeps old-gen pressure off the timings; a
-        # real cluster sizes the driver independently anyway.
+        # real cluster sizes the driver independently anyway. Still open:
+        # 16g ignores the host's memory, so small boxes must set
+        # SPARK_GRAFT_DRIVER_MEM.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def release_cached(spark: SparkSession) -> None:
-    """Drop every cached/persisted block in the session.
-
-    Some lazy operators persist shared sub-plans (hashed shingle sets in
-    operators.neardup, the permissive-parse split in sources.text_formats)
-    that can only be consumed AFTER the function returns, so they cannot
-    unpersist themselves. MEMORY_AND_DISK + LRU keeps the footprint
-    bounded, but a long-lived session that interleaves many such calls
-    with its own cached data should call this between workloads to avoid
-    eviction pressure on its own blocks."""
-    spark.catalog.clearCache()

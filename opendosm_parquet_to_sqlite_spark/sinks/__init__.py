@@ -1,2 +1,2 @@
-from .sqlite import write_sqlite, write_sqlite_sharded  # noqa: F401
+from .sqlite import write_sqlite  # noqa: F401
 from .zipsink import zip_artifact  # noqa: F401

@@ -2,16 +2,11 @@
 
 Reference: the in-memory DB is exported to a file via the C-level
 sqlite3_backup API, 1000 pages/step (/root/reference/src/main.rs:284-311),
-after per-row prepared-statement inserts (src/main.rs:22-27). Here the
-artifact is written directly:
-
-- write_sqlite: driver write streamed via toLocalIterator — the driver
-  holds at most one Spark partition at a time, never the full table.
-  (SQLite is a single-writer format — a distributed writer cannot append
-  to one .db.) Route truly fact-scale exports to write_sqlite_sharded.
-- write_sqlite_sharded: the 100 TB story — each Spark partition writes its
-  OWN .db shard via foreachPartition (executor-local sqlite3), giving
-  embarrassingly-parallel export; consumers ATTACH shards or query the union.
+after per-row prepared-statement inserts (src/main.rs:22-27). Here
+write_sqlite writes the artifact directly, streamed via toLocalIterator —
+the driver holds at most one Spark partition at a time, never the full
+table. (SQLite is a single-writer format — a distributed writer cannot
+append to one .db.)
 
 Index DDL mirrors src/main.rs:192-207 and is applied AFTER load (the
 reference creates indexes before inserting — strictly slower).
@@ -19,7 +14,6 @@ reference creates indexes before inserting — strictly slower).
 
 from __future__ import annotations
 
-import os
 import sqlite3
 from itertools import islice
 from pathlib import Path
@@ -164,58 +158,6 @@ def index_name(table: str, col: str) -> str:
     return f"idx_{table}_{col}"
 
 
-def write_sqlite_sharded(
-    df: DataFrame,
-    out_dir: str | Path,
-    table: str,
-    num_shards: int | None = None,
-    indexes: list[tuple[str, bool]] | None = None,
-) -> list[Path]:
-    """Each partition writes its own .db shard — distributed SQLite export.
-
-    foreachPartition runs executor-side: no data crosses the driver. Shards
-    are named by partition id; at 1000 executors this is 1000 concurrent
-    local writes instead of one serialized driver write.
-
-    indexes: [(column, unique)] applied per shard AFTER its load, so
-    consumers ATTACHing shards get the same index contract as the
-    single-file path (reference DDL, src/main.rs:192-207). A `unique`
-    index is only locally unique — per-shard, which is the only guarantee
-    a sharded export can make.
-    """
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    df = _stringify_temporals(df)  # no datetime objects through sqlite3 binds
-    if num_shards is not None:
-        df = df.repartition(num_shards)
-    schema = df.schema
-    insert = f'INSERT INTO "{table}" VALUES ({", ".join("?" for _ in schema.fields)})'
-    out_str = str(out)
-    index_specs = list(indexes or [])
-
-    def write_partition(rows) -> None:
-        import sqlite3 as _sqlite3
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_str, f"{table}_shard_{pid:05d}.db")
-        c = _sqlite3.connect(path)
-        c.execute("PRAGMA journal_mode=OFF")
-        c.execute("PRAGMA synchronous=OFF")
-        _create_table(c, table, schema)
-        _insert_rows(c, insert, rows)
-        for col, unique in index_specs:
-            uq = "UNIQUE " if unique else ""
-            c.execute(
-                f'CREATE {uq}INDEX "idx_{table}_{col}" ON "{table}" ("{col}")'
-            )
-        c.commit()
-        c.close()
-
-    df.foreachPartition(write_partition)
-    return sorted(out.glob(f"{table}_shard_*.db"))
-
-
 # The reference's index set (src/main.rs:192-207), keyed by its table names.
 REFERENCE_INDEXES: dict[str, list[tuple[str, bool]]] = {
     "prices": [("premise_code", False), ("item_code", False)],
@@ -231,31 +173,6 @@ REFERENCE_INDEXES: dict[str, list[tuple[str, bool]]] = {
         ("item_category", False),
     ],
 }
-
-
-def read_sqlite(spark, db_path: str, table: str) -> DataFrame:
-    """Read a table from a produced SQLite artifact back into a
-    DataFrame — the inspection path for the reference's own output
-    (pricecatcher_{month}.db): users verify what shipped, diff two
-    months' artifacts (snapshot_diff composes directly), or re-ingest a
-    legacy artifact into the parquet world.
-
-    Driver-side read via the stdlib sqlite3 (no JDBC jar dependency —
-    the offline-environment constraint from SURVEY §7.2.5), streamed in
-    batches into Arrow-friendly chunks. SQLite artifacts are
-    single-file, driver-sized BY CONSTRUCTION of the sink contract
-    (fact-scale exports go through write_sqlite_sharded, whose shards
-    can be read and unioned individually); a multi-GB .db should be
-    re-sharded, not driver-read — documented, not guessed.
-    """
-    import pandas as pd
-
-    con = sqlite3.connect(db_path)
-    try:
-        pdf = pd.read_sql_query(f'SELECT * FROM "{table}"', con)
-    finally:
-        con.close()
-    return spark.createDataFrame(pdf)
 
 
 def verify_sqlite_artifact(

@@ -35,7 +35,6 @@ from pyspark.sql.types import StructType
 from ..operators import dedup
 from ..plans.pipeline import cleanse_prices
 from ..sinks.sqlite import _insert_rows, table_ddl
-from .incremental import read_stream_parquet, run_available_now
 
 _KEY = ["premise_code", "item_code"]
 # The key the UPSERT needs; the month build leaves it out (it would only
@@ -79,7 +78,12 @@ def stream_prices_to_sqlite(
     """
     db_path = Path(db_path)
     db_path.parent.mkdir(parents=True, exist_ok=True)
-    prices = cleanse_prices(read_stream_parquet(spark, str(prices_dir), source_schema))
+    # The file source records processed files in the checkpoint: the
+    # exactly-once form of the reference's size-based freshness skip
+    # (src/main.rs:134-146).
+    prices = cleanse_prices(
+        spark.readStream.schema(source_schema).parquet(str(prices_dir))
+    )
 
     def merge(batch_df, _batch_id: int) -> None:
         latest = dedup.latest_per_group_maxby(batch_df, _KEY, "date", ["price"])
@@ -96,5 +100,14 @@ def stream_prices_to_sqlite(
         finally:
             con.close()
 
-    run_available_now(prices, str(checkpoint_dir), merge, output_mode="append")
+    # availableNow drains every file that landed since the last run, batch
+    # by batch, then stops: the reference's daily cron run (script.sh:2-4).
+    (
+        prices.writeStream.outputMode("append")
+        .option("checkpointLocation", str(checkpoint_dir))
+        .foreachBatch(merge)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return db_path

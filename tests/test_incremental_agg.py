@@ -179,33 +179,6 @@ def test_merge_upsert_dataset_recovers_stranded_old(spark, tmp_path):
     assert not os.path.exists(path + ".merge")
 
 
-def test_streaming_maintenance_matches_batch(spark, events, tmp_path):
-    """Drained stream state == one-shot batch aggregation, exactly —
-    microbatch boundaries are arbitrary splits and the partials are a
-    monoid, so the streaming twin inherits batch correctness."""
-    from opendosm_parquet_to_sqlite_spark.streaming.incremental import (
-        maintain_agg_stream,
-        read_stream_parquet,
-    )
-
-    src = str(tmp_path / "src")
-    events.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    sdf = read_stream_parquet(spark, src, schema, max_files_per_trigger=1)
-    state_path = str(tmp_path / "state")
-    maintain_agg_stream(
-        sdf, state_path, ["event_type"], "value", str(tmp_path / "ckpt")
-    )
-    final = incremental.finalize_agg(
-        spark.read.parquet(state_path), ["event_type"]
-    )
-    whole = incremental.finalize_agg(
-        incremental.agg_state(events, ["event_type"], "value"),
-        ["event_type"],
-    )
-    assert _canon(final) == _canon(whole)
-
-
 def test_redelivered_batch_is_skipped(spark, events, tmp_path):
     """At-least-once redelivery cannot double-count: a batch id at or
     below the atomic marker is a no-op."""
@@ -287,36 +260,6 @@ def test_hll_state_maintenance_estimates_match_whole(spark, tmp_path):
     assert got == whole
     for k in exact:
         assert abs(got[k] - exact[k]) <= max(3, 0.05 * exact[k])
-
-
-@pytest.mark.slow
-def test_mg_state_exact_under_any_split_when_capacity_covers(spark, tmp_path):
-    """With capacity >= universe no decrement ever fires, so the drained
-    streaming state is EXACT counts regardless of microbatch boundaries."""
-    from opendosm_parquet_to_sqlite_spark.streaming.incremental import (
-        heavy_hitters_stream,
-        read_stream_parquet,
-    )
-
-    rows = [(f"item_{i % 17}",) for i in range(500)]
-    df = spark.createDataFrame(rows, "item string")
-    src = str(tmp_path / "src")
-    df.repartition(5).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    sdf = read_stream_parquet(spark, src, schema, max_files_per_trigger=1)
-    state_path = str(tmp_path / "state")
-    heavy_hitters_stream(
-        sdf, state_path, "item", str(tmp_path / "ckpt"), capacity=64
-    )
-    got = {
-        r["item"]: r["est_count"]
-        for r in spark.read.parquet(state_path).collect()
-    }
-    exact = {
-        r["item"]: r["cnt"]
-        for r in df.groupBy("item").agg(F.count("*").alias("cnt")).collect()
-    }
-    assert got == exact
 
 
 def test_mg_state_capacity_bound_and_one_sided_error(spark, tmp_path):

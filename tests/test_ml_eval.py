@@ -546,63 +546,6 @@ def test_centroid_classify_accuracy_on_separated_blobs(spark):
     assert total == 120 and correct / total > 0.99
 
 
-# --- eval_monitor_stream -----------------------------------------------------
-
-
-def test_eval_monitor_stream_matches_batch(spark, tmp_path):
-    """Each microbatch's streamed threshold report equals
-    classification_report on that batch directly."""
-    from opendosm_parquet_to_sqlite_spark.operators.stats import (
-        classification_report,
-    )
-    from opendosm_parquet_to_sqlite_spark.streaming.incremental import (
-        eval_monitor_stream,
-        read_stream_parquet,
-    )
-
-    batches = {
-        0: [(0.9, True), (0.7, False), (0.2, True), (0.1, False)],
-        1: [(0.8, True), (0.6, True), (0.4, False)],
-    }
-    src = str(tmp_path / "src")
-    for i, rows in batches.items():
-        spark.createDataFrame(rows, "s double, y boolean").withColumn(
-            "b", F.lit(i)
-        ).coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-    sdf = read_stream_parquet(spark, src, schema, max_files_per_trigger=1)
-
-    got = []
-
-    def sink(report, batch_id):
-        rows = report.collect()
-        if rows:
-            got.append(
-                frozenset(
-                    (r.threshold, r.tp, r.fp, r.fn, r.tn) for r in rows
-                )
-            )
-
-    eval_monitor_stream(
-        sdf, "s", "y", [0.5], str(tmp_path / "ckpt"), sink
-    )
-    expected = {
-        frozenset(
-            (r.threshold, r.tp, r.fp, r.fn, r.tn)
-            for r in classification_report(
-                spark.createDataFrame(rows, "s double, y boolean"),
-                "s", "y", [0.5],
-            ).collect()
-        )
-        for rows in batches.values()
-    }
-    assert set(got) == expected and len(got) == 2
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        eval_monitor_stream(sdf, "s", "y", [], str(tmp_path / "c2"), sink)
-
-
 # --- l_diversity_report ------------------------------------------------------
 
 

@@ -2,7 +2,7 @@
 
 Reference behaviors covered: index DDL set (src/main.rs:192-207), the
 backup-to-file export (src/main.rs:284-311 — here a direct streamed write),
-and zip packaging (src/main.rs:312-325). Plus the sharded 100 TB path.
+and zip packaging (src/main.rs:312-325).
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from opendosm_parquet_to_sqlite_spark.sinks.sqlite import (
     REFERENCE_INDEXES,
     write_sqlite,
-    write_sqlite_sharded,
 )
 from opendosm_parquet_to_sqlite_spark.sinks.zipsink import zip_artifact
 
@@ -124,63 +123,6 @@ def test_write_sqlite_unique_index_rejects_bad_keys(spark, tmp_path, keys):
         write_sqlite({"t": df}, tmp_path / "k.db", indexes={"t": [("k", True)]})
 
 
-def test_write_sqlite_sharded_union_equals_input(spark, tmp_path):
-    """Shards are independently readable and their union is exactly the
-    input — including a timestamp column (bound as TEXT, not datetime)."""
-    df = spark.range(1000).select(
-        F.col("id"),
-        F.concat(F.lit("v"), F.col("id")).alias("s"),
-        F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
-    )
-    shards = write_sqlite_sharded(df, tmp_path, "events", num_shards=4)
-    assert len(shards) == 4
-    seen = []
-    for p in shards:
-        con = sqlite3.connect(p)
-        try:
-            seen += con.execute("SELECT id, s, ts FROM events").fetchall()
-        finally:
-            con.close()
-    assert len(seen) == 1000
-    assert sorted(r[0] for r in seen) == list(range(1000))
-    by_id = {r[0]: r for r in seen}
-    assert by_id[3][1] == "v3"
-    assert isinstance(by_id[3][2], str) and by_id[3][2].startswith("2023-11-14")
-
-
-def test_write_sqlite_sharded_applies_index_ddl(spark, tmp_path):
-    """Every shard carries the same index contract as the single-file
-    driver path: PRAGMA index_list must match for the same index spec."""
-    df = spark.range(200).select(
-        F.col("id"), (F.col("id") % 10).alias("premise_code")
-    )
-    specs = [("premise_code", False), ("id", True)]
-    shards = write_sqlite_sharded(
-        df, tmp_path / "shards", "prices", num_shards=3, indexes=specs
-    )
-    single = tmp_path / "single.db"
-    write_sqlite({"prices": df}, single, indexes={"prices": specs})
-    con = sqlite3.connect(single)
-    try:
-        expect = {
-            (r[1], r[2])  # (index name, unique flag)
-            for r in con.execute("PRAGMA index_list('prices')").fetchall()
-        }
-    finally:
-        con.close()
-    assert expect  # the driver path did create indexes
-    for p in shards:
-        con = sqlite3.connect(p)
-        try:
-            got = {
-                (r[1], r[2])
-                for r in con.execute("PRAGMA index_list('prices')").fetchall()
-            }
-        finally:
-            con.close()
-        assert got == expect
-
-
 def test_zip_artifact_roundtrip(tmp_path):
     src = tmp_path / "pricecatcher.db"
     src.write_bytes(b"sqlite-bytes" * 1000)
@@ -232,21 +174,6 @@ def test_partitioned_dataset_prunes_at_scan(spark, tmp_path):
         "PartitionFilters"
     )[1][:80]
     assert scan.count() == 200
-
-
-def test_read_sqlite_roundtrip(spark, tmp_path):
-    from opendosm_parquet_to_sqlite_spark.sinks.sqlite import (
-        read_sqlite,
-        write_sqlite,
-    )
-
-    df = spark.range(100).withColumn("v", F.col("id") * 2.0)
-    db = str(tmp_path / "x.db")
-    write_sqlite({"t": df}, db)
-    back = read_sqlite(spark, db, "t")
-    assert back.count() == 100
-    assert back.agg(F.sum("v")).collect()[0][0] == float(sum(2 * i for i in range(100)))
-    assert set(back.columns) == {"id", "v"}
 
 
 def test_verify_sqlite_artifact_gates(spark, tmp_path):

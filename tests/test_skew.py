@@ -8,13 +8,13 @@ import random
 import pytest
 
 from opendosm_parquet_to_sqlite_spark.operators.skew import (
+    batch_profile,
     rolling_features_sliced,
     salted_batch_profile,
 )
 from opendosm_parquet_to_sqlite_spark.operators.temporal import (
     rolling_features,
 )
-from opendosm_parquet_to_sqlite_spark.streaming.stateful import batch_profile
 
 SCHEMA = "user_id long, et long, value double"
 

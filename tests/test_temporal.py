@@ -132,9 +132,7 @@ def test_range_join_result_independent_of_bin_width(spark):
 
 
 def test_batch_profile_tiebreak_on_duplicate_ts(spark):
-    from opendosm_parquet_to_sqlite_spark.streaming.stateful import (
-        batch_profile,
-    )
+    from opendosm_parquet_to_sqlite_spark.operators.skew import batch_profile
 
     # two events share the max ts; event_id orders them
     rows = [("a", 10, 1.0, 1), ("a", 20, 7.0, 2), ("a", 20, 3.0, 5)]
