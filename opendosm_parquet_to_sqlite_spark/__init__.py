@@ -17,7 +17,8 @@ Layout:
                multimodal (binary payload metadata + mapInPandas decode)
   plans/     — queries registry + the end-to-end PriceCatcher pipeline
                (the reference's main(), re-expressed lazily; plans.pipeline)
-  sinks/     — SQLite + zip artifact writers (src/main.rs:284-325)
+  sinks/     — SQLite + zip artifact writers (src/main.rs:284-325) and the
+               parquet dataset writer (write_dataset)
   streaming/ — the Structured Streaming top-up of the SQLite artifact
                (stream_prices_to_sqlite)
 """

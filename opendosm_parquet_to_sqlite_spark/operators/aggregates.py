@@ -17,23 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def group_metrics(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    round_dp: int = 4,
-) -> DataFrame:
-    """count/avg/min/max/sum of value_col per group (SURVEY §2.4 implied)."""
-    v = F.col(value_col)
-    return df.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.round(F.avg(v), round_dp).alias("avg_value"),
-        F.round(F.min(v), round_dp).alias("min_value"),
-        F.round(F.max(v), round_dp).alias("max_value"),
-        F.round(F.sum(v), round_dp).alias("sum_value"),
-    )
-
-
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1-shaped pricing summary over lineitem — the bench headline.
 
@@ -179,41 +162,6 @@ def sketch_quantiles(
         *group_cols,
         prob_arr.getItem(F.col("__pos")).cast("double").alias("prob"),
         F.round("value", 6).alias("value"),
-    )
-
-
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    width: str = "1 hour",
-    slide: str = "30 minutes",
-    extra_group: list[str] | None = None,
-) -> DataFrame:
-    """Event-time SLIDING (hopping) window aggregate: each event lands in
-    width/slide overlapping windows (F.window emits one row per covering
-    window — a built-in bounded explode, not a join). Same output schema
-    as tumbling_window_agg; slide == width degenerates to tumbling.
-
-    Scale: fanout is the fixed ratio width/slide (e.g. 2 for 1h/30m), so
-    shuffle volume is ratio × the tumbling cost — the standard trade for
-    smoother time series.
-    """
-    w = F.window(F.col(ts_col), width, slide)
-    return (
-        df.groupBy(w.alias("__w"), *(extra_group or []))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.avg(value_col), 4).alias("avg_value"),
-        )
-        .select(
-            F.date_format("__w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            *(extra_group or []),
-            "n_events",
-            "avg_value",
-        )
     )
 
 
@@ -495,39 +443,6 @@ def mg_summary(df: DataFrame, col: str, capacity: int = 4096) -> DataFrame:
     )
 
 
-def mg_truncate(summary: DataFrame, capacity: int) -> DataFrame:
-    """MG decrement step on a summary TABLE: if it holds more than
-    `capacity` items, subtract the (capacity+1)-th largest count from
-    every item and drop the non-positives — the same batched decrement
-    the per-partition pass uses, expressed as one window over the
-    (small) summary. Keeps merged standing state capacity-bounded while
-    preserving the one-sided-undercount guarantee."""
-    from pyspark.sql.window import Window as W
-
-    w = W.orderBy(F.col("est_count").desc(), F.col("item"))
-    ranked = summary.withColumn("__rank", F.row_number().over(w))
-    delta = ranked.filter(F.col("__rank") == int(capacity) + 1).select(
-        F.col("est_count").alias("__delta")
-    )
-    return (
-        ranked.crossJoin(F.broadcast(delta))
-        .select(
-            "item",
-            (F.col("est_count") - F.col("__delta")).alias("est_count"),
-        )
-        .filter(F.col("est_count") > 0)
-        .unionByName(
-            # no (capacity+1)-th row -> delta table empty -> cross join
-            # drops everything; recover the untouched summary
-            ranked.join(
-                F.broadcast(delta.select(F.lit(1).alias("__has"))),
-                F.lit(True),
-                "left_anti",
-            ).select("item", "est_count")
-        )
-    )
-
-
 def cm_build(
     df: DataFrame,
     item_col: str,
@@ -547,8 +462,7 @@ def cm_build(
 
     Output: (row, bucket, cnt) — depth·width cells max, independent of
     corpus size. Mergeable by construction: sketches of disjoint slices
-    sum cell-wise (cm_merge), so the build partial-combines map-side and
-    the state works with incremental maintenance. Hash rows are
+    sum cell-wise, so the build partial-combines map-side. Hash rows are
     xxhash64(item, seed·100+row) — engine-deterministic, so the sketch
     is a pure function of (items, params).
 
@@ -576,18 +490,6 @@ def cm_build(
         .groupBy(F.col("p.row").alias("row"), F.col("p.bucket").alias("bucket"))
         .agg(F.sum("__w").alias("cnt"))
     )
-
-
-def cm_merge(sketches: list[DataFrame]) -> DataFrame:
-    """Cell-wise sum of CM sketches built with identical (width, depth,
-    seed) — the monoid op that makes the sketch maintainable
-    incrementally (same contract as operators.incremental)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return u.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cm_estimate(

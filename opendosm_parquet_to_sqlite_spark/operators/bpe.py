@@ -33,7 +33,7 @@ table + a narrow fold.  The corpus is touched exactly once, ever.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import _ckpt_ids, _unpersist_rdd_ids
@@ -137,43 +137,3 @@ def bpe_train(
     return spark.createDataFrame(
         rules, "rank long, left string, right string, merged string, n long"
     )
-
-
-def bpe_segment(
-    df: DataFrame, text_col: str, rules: list[tuple[str, str]]
-) -> DataFrame:
-    """Apply an ordered merge-rule list to segment text into BPE units:
-    adds `bpe_units` (array<string>).  Each rule is one narrow fold over
-    the token symbol arrays — rules.length chained expressions, zero
-    exchanges, zero Python; the scale path for applying a trained
-    tokenizer to a fresh corpus shard."""
-    toks = tokens(F.lower(F.col(text_col)))
-    chars = F.transform(
-        toks,
-        lambda w: F.concat(
-            F.slice(
-                F.split(w, ""), 1, F.greatest(F.size(F.split(w, "")) - 1, F.lit(0))
-            ),
-            F.array(F.concat(F.element_at(F.split(w, ""), -1), F.lit(END_MARK))),
-        ),
-    )
-    out = chars
-    for left, right in rules:
-        merged = left + right
-        out = F.transform(
-            out,
-            lambda syms: F.aggregate(
-                syms,
-                F.expr("cast(array() as array<string>)"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(left))
-                    & (x == F.lit(right)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(F.lit(merged)),
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ),
-        )
-    return df.withColumn("bpe_units", F.flatten(out))

@@ -73,27 +73,6 @@ def latest_per_group_maxby(
     return agg.select(*[F.col(f"__best.{c}").alias(c) for c in payload_cols])
 
 
-def enforce_unique_key(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Uniqueness enforcement analog of the reference's UNIQUE INDEX
-    (src/main.rs:198,204): duplicate keys there abort the load (insert
-    unwrap, src/main.rs:42,57). Relaxed distributed version: keep ONE row
-    per key, chosen DETERMINISTICALLY as the minimum over the full sort
-    order of all non-key columns (dropDuplicates would keep an arbitrary,
-    partitioning-dependent row). Executes as a min(struct) hash aggregate —
-    map-side partial agg, one shuffle of (key, best-so-far).
-    """
-    non_key = [c for c in df.columns if c not in key_cols]
-    if not non_key:
-        return df.dropDuplicates(key_cols)  # rows are just keys: any copy is the same row
-    agg = df.groupBy(*key_cols).agg(F.min(F.struct(*non_key)).alias("__best"))
-    return agg.select(
-        *[
-            F.col(c) if c in key_cols else F.col(f"__best.{c}").alias(c)
-            for c in df.columns
-        ]
-    )
-
-
 def assert_unique_key(df: DataFrame, key_cols: list[str]) -> None:
     """Strict variant: raise if the key is not unique (one aggregate job)."""
     row = df.agg(

@@ -20,8 +20,7 @@ needs); the change classification is a narrow projection over the joined
 row.  No digests: comparing columns directly with null-safe equality
 avoids cross-engine string-formatting hazards entirely, which is what
 makes the operator oracle-checkable (DuckDB's IS DISTINCT FROM has the
-identical semantics).  At 100 TB both sides bucket/sort by the key at
-write time (sinks/bucketed.py) and the diff becomes exchange-free.
+identical semantics).
 """
 
 from __future__ import annotations

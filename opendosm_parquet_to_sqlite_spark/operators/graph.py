@@ -93,7 +93,6 @@ def _unpersist_rdd_ids(spark: SparkSession, ids: set) -> None:
             jmap.get(rid).unpersist(False)
 
 
-
 class _BlockReleaser:
     """release_cached()-compatible handle for loop-final checkpoint
     blocks (see caching.track_unpersist)."""
@@ -381,17 +380,6 @@ def connected_components(
     )
 
 
-def cluster_representatives(components: DataFrame) -> DataFrame:
-    """Distinct (cluster_id) representative set = the kept doc per cluster.
-
-    Because cluster_id IS the min member id, the representative table is
-    just the distinct labels — no extra aggregation over members.
-    """
-    return components.select(
-        F.col("cluster_id").alias("doc_id")
-    ).distinct()
-
-
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -561,10 +549,10 @@ def keep_best_per_cluster(
 ) -> DataFrame:
     """Quality-aware cluster survivors: per connected component, keep
     the member with the HIGHEST score (ties → smallest id) instead of
-    the smallest id.  Min-id survivorship (cluster_representatives) is
-    deterministic but quality-blind — when a near-dup cluster holds a
-    clean original and a truncated scrape, production dedup wants the
-    best copy, not the first-crawled one.
+    the smallest id.  Min-id survivorship is deterministic but
+    quality-blind — when a near-dup cluster holds a clean original and a
+    truncated scrape, production dedup wants the best copy, not the
+    first-crawled one.
 
     Output: cluster_id, keep_id, keep_score, n_members.
 

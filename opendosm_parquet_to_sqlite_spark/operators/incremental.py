@@ -1,10 +1,8 @@
-"""Incremental aggregate maintenance: keep per-key MERGEABLE partials as a
-standing state table and fold each new batch in — the aggregation analog
-of ingest_increment (operators/corpus.py). The reference recomputes its
-whole output table every run (src/main.rs:252-278); at 100 TB the daily
-job must instead touch only the daily delta: state size is KEY-count-
-bound, batch cost is BATCH-size-bound, and the historical corpus is
-never rescanned.
+"""Incremental aggregates: per-key MERGEABLE partials that fold batch by
+batch to the same result as one pass over the union. The reference
+recomputes its whole output table every run (src/main.rs:252-278); at
+100 TB a daily job touches only the daily delta, and partials are what
+make that exact.
 
 The algebra: (count, sum, sumsq, min, max) per key is a commutative
 monoid under (+, +, +, min, max) — merge order, batch boundaries, and
@@ -14,54 +12,16 @@ only at FINALIZE time from the partials; they are not themselves
 mergeable and never stored.
 
 Scale shape: each batch contributes one partial-combined aggregation
-(map-side combine on the batch only) + one key-sized merge with the
-state table. With the state bucket-written on the key (sinks.bucketed)
-the merge is exchange-free on the standing side. Variance uses the
-sumsq formulation guarded by max(_, 0) — catastrophic cancellation can
-produce tiny negative values; at extreme dynamic ranges switch the
-value column to a shifted/scaled unit upstream.
+(map-side combine on the batch only) + one key-sized merge. Variance
+uses the sumsq formulation guarded by max(_, 0) — catastrophic
+cancellation can produce tiny negative values; at extreme dynamic ranges
+switch the value column to a shifted/scaled unit upstream.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-STATE_COLS = ["n", "s", "ss", "mn", "mx"]
-
-
-def recover_swap(path: str, staging_suffixes: tuple[str, ...] = (".next", ".merge")) -> None:
-    """Repair the write-then-swap staging area around `path` before a run.
-
-    The swap is two sequential os.renames (state → .old, .next → state):
-    a crash in the window between them leaves NO dataset at `path` with
-    the previous state stranded at '.old'; a crash before either rename
-    leaves a stale staging dir that would make the next run's rename
-    raise. Recovery rules, in order:
-
-    - `path` missing but '.old' present → the crash hit mid-swap; rename
-      '.old' back (the previous state is intact and becomes current —
-      the batch marker was never updated, so re-applying the batch is
-      safe under the exactly-once discipline).
-    - `path` present and '.old' present → crash after the swap completed
-      but before cleanup; drop '.old'.
-    - any stale staging dir ('.next'/'.merge') → drop it; it is either
-      half-written or fully superseded by the recovery above.
-    """
-    import os
-    import shutil
-
-    base = path.rstrip("/")
-    old = base + ".old"
-    if os.path.exists(old):
-        if not os.path.exists(base):
-            os.rename(old, base)
-        else:
-            shutil.rmtree(old)
-    for suffix in staging_suffixes:
-        stale = base + suffix
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
 
 
 def agg_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
@@ -113,214 +73,4 @@ def finalize_agg(state: DataFrame, keys: list[str]) -> DataFrame:
         F.round(F.when(nz, F.col("mn")), 6).alias("min_value"),
         F.round(F.when(nz, F.col("mx")), 6).alias("max_value"),
         F.round(F.when(nz, F.sqrt(var)), 6).alias("std_value"),
-    )
-
-
-def maintain_agg_dataset(
-    spark,
-    state_path: str,
-    batch: DataFrame,
-    keys: list[str],
-    value_col: str,
-    batch_id: int | None = None,
-) -> dict:
-    """Fold `batch` into the standing state parquet at `state_path`
-    (created on first call) with the repo's write-then-swap atomicity:
-    the merged state materializes beside the original before the rename,
-    so a crashed maintenance run leaves the previous state intact and
-    the batch can simply be re-applied. Returns {'keys_before',
-    'keys_after', 'applied'}.
-
-    Aggregation is additive, so re-applying an already-applied batch
-    would double-count — at-least-once delivery (Spark's foreachBatch
-    contract) is NOT enough. Passing `batch_id` closes the gap: the id
-    is recorded in a `_applied_batch` marker INSIDE the state directory
-    (underscore-prefixed files are invisible to parquet readers, like
-    _SUCCESS), so marker and state swap in the SAME atomic rename. A
-    redelivered batch whose id is <= the marker is skipped ('applied':
-    False) — genuine exactly-once from at-least-once delivery, the
-    standard idempotent-sink recipe. Ids must be monotonically
-    increasing (streaming batch ids are). Without batch_id the caller
-    owns deduplication.
-    """
-    return maintain_state_dataset(
-        spark,
-        state_path,
-        lambda: agg_state(batch, keys, value_col),
-        lambda standing, incoming: merge_agg_states(
-            [standing, incoming], keys
-        ),
-        batch_id=batch_id,
-    )
-
-
-def maintain_state_dataset(
-    spark,
-    state_path: str,
-    build_incoming,
-    merge,
-    batch_id: int | None = None,
-) -> dict:
-    """The generic monoid-state maintenance step every incremental
-    operator here shares: `build_incoming()` produces the batch's state
-    DataFrame, `merge(standing, incoming)` folds it into the standing
-    table, and the result swaps in atomically with the optional
-    batch-id marker (exactly-once discipline — see
-    maintain_agg_dataset's docstring). Reused by the per-key stats
-    state (maintain_agg_dataset) and the count-min sketch state
-    (maintain_cm_dataset); any cell-wise-mergeable state (HLL
-    registers, KLL sketches, inverted-index postings) plugs in the
-    same way.
-
-    Crash contract: the swap itself is two renames, NOT one atomic op —
-    recover_swap() runs first and repairs any state a previous crash
-    left (stranded '.old', stale '.next'), so the previous state is
-    recovered AT state_path and the batch can simply be re-applied
-    (the marker only advances after a completed swap)."""
-    import os
-    import shutil
-
-    recover_swap(state_path, (".next",))
-    marker = os.path.join(state_path, "_applied_batch")
-    if batch_id is not None and os.path.exists(marker):
-        with open(marker) as fh:
-            last = int(fh.read().strip())
-        if batch_id <= last:
-            n = spark.read.parquet(state_path).count()
-            return {"keys_before": n, "keys_after": n, "applied": False}
-
-    incoming = build_incoming()
-    if os.path.exists(state_path):
-        standing = spark.read.parquet(state_path)
-        before = standing.count()
-        merged = merge(standing, incoming)
-    else:
-        before = 0
-        merged = incoming
-    tmp = state_path.rstrip("/") + ".next"
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        with open(os.path.join(tmp, "_applied_batch"), "w") as fh:
-            fh.write(str(batch_id))
-    if os.path.exists(state_path):
-        old = state_path.rstrip("/") + ".old"
-        os.rename(state_path, old)
-        os.rename(tmp, state_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, state_path)
-    after = spark.read.parquet(state_path).count()
-    return {"keys_before": before, "keys_after": after, "applied": True}
-
-
-def maintain_cm_dataset(
-    spark,
-    state_path: str,
-    batch: DataFrame,
-    item_col: str,
-    width: int = 1024,
-    depth: int = 4,
-    seed: int = 42,
-    batch_id: int | None = None,
-) -> dict:
-    """Count-min sketch as STANDING state: each batch's sketch merges
-    cell-wise into the persisted (row, bucket, cnt) table — point
-    frequencies over the full history at depth·width state, the stream
-    never re-read. Same exactly-once marker discipline as the stats
-    state; (width, depth, seed) must match across batches (the cells
-    are meaningless otherwise — parameters are the caller's contract,
-    mirroring the neardup index param guard)."""
-    from . import aggregates as _agg
-
-    return maintain_state_dataset(
-        spark,
-        state_path,
-        lambda: _agg.cm_build(
-            batch, item_col, width=width, depth=depth, seed=seed
-        ),
-        lambda standing, incoming: _agg.cm_merge([standing, incoming]),
-        batch_id=batch_id,
-    )
-
-
-def maintain_hll_dataset(
-    spark,
-    state_path: str,
-    batch: DataFrame,
-    keys: list[str],
-    id_col: str,
-    lg_k: int = 12,
-    batch_id: int | None = None,
-) -> dict:
-    """Per-key DISTINCT-count state via mergeable HLL sketches — the
-    third instance of the generic monoid maintainer (stats, count-min,
-    now HLL): each batch contributes one sketch per key, standing
-    sketches merge via hll_union. Distinct counts are the canonical
-    "cannot maintain incrementally without sketches" aggregate — exact
-    maintenance needs the full id set per key as state; this keeps
-    KBs per key with ~1.6% relative error at lg_k=12, and the union is
-    order/batching-insensitive (estimate equality under any split is
-    test-pinned). Query the state with hll_sketch_estimate(sketch)."""
-    from pyspark.sql import functions as F2
-
-    def build():
-        return batch.groupBy(*keys).agg(
-            F2.hll_sketch_agg(F2.col(id_col), F2.lit(int(lg_k))).alias(
-                "sketch"
-            )
-        )
-
-    def merge(standing, incoming):
-        return (
-            standing.unionByName(incoming)
-            .groupBy(*keys)
-            .agg(F2.hll_union_agg("sketch").alias("sketch"))
-        )
-
-    return maintain_state_dataset(
-        spark, state_path, build, merge, batch_id=batch_id
-    )
-
-
-def maintain_mg_dataset(
-    spark,
-    state_path: str,
-    batch: DataFrame,
-    item_col: str,
-    capacity: int = 4096,
-    batch_id: int | None = None,
-) -> dict:
-    """Misra-Gries heavy-hitter summary as STANDING state — the fourth
-    instance of the generic monoid maintainer (stats, count-min, HLL,
-    now MG): each batch contributes its capacity-bounded summary, the
-    standing summary merges by per-item sum, and the MERGED table is
-    re-truncated with the same batched decrement (aggregates.
-    mg_truncate) so state stays ≤ capacity rows forever.  Merge-by-sum
-    + truncate preserves the one-sided guarantee (estimates never
-    overcount; total undercount ≤ Σ decrements, each bounded by its
-    pass's N/(capacity+1)) — the Agarwal-et-al mergeable-summaries
-    result, error-bound-pinned in tests.  capacity must match across
-    batches (caller's contract, as with the CM sketch parameters).
-    Query the state ordered by est_count for the current top-k."""
-    from . import aggregates as _agg
-
-    return maintain_state_dataset(
-        spark,
-        state_path,
-        lambda: _agg.mg_summary(batch, item_col, capacity=capacity),
-        lambda standing, incoming: _agg.mg_truncate(
-            merge_mg_states(standing, incoming), capacity
-        ),
-        batch_id=batch_id,
-    )
-
-
-def merge_mg_states(standing: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Per-item sum of two MG summaries (the un-truncated merge)."""
-    from pyspark.sql import functions as F2
-
-    return (
-        standing.unionByName(incoming)
-        .groupBy("item")
-        .agg(F2.sum("est_count").alias("est_count"))
     )

@@ -53,7 +53,7 @@ from pyspark.sql.types import (
 
 from ..caching import persist_tracked
 from .multimodal import _PNG_SIG, png_pixels
-from .neardup import hamming_band_pairs, hamming_chunk_rows
+from .neardup import hamming_band_pairs
 from .text import spread_small_input
 
 # Default member-pair valve for the pair-contract APIs: generous enough
@@ -723,242 +723,3 @@ def media_dup_clusters(
 
 
 # --- persisted fingerprint index (ingest-increment path) ----------------------
-
-
-def _media_fp(
-    df: DataFrame, payload_col: str, id_col: str, modality: str, decode_fn
-) -> DataFrame:
-    if modality == "image":
-        return image_phash(df, payload_col, id_col, decode_fn=decode_fn)
-    if modality == "audio":
-        return audio_phash(df, payload_col, id_col, decode_fn=decode_fn)
-    raise ValueError(f"unknown modality {modality!r}")
-
-
-def build_media_fp_index(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    path: str,
-    modality: str = "image",
-    max_hamming: int = 6,
-    decode_fn=None,
-) -> None:
-    """Persist a media-fingerprint near-dup index: the pigeonhole
-    (chunk, key) rows of every item's 64-bit perceptual hash, written as
-    plain parquet — (doc_id, phash, chunk, key), (d+1) 24-byte rows per
-    item. Indexing N new items costs O(N), never O(corpus): media bytes
-    are read ONCE at build/append time and never again (the incremental
-    twin of the text MinHash index, build_neardup_index).
-
-    Build parameters (modality, max_hamming) are stamped into the chunk
-    column's schema metadata — a probe with mismatched banding would
-    silently collapse recall, so probe_media_fp_index raises instead.
-
-    Append = build over the new batch with mode='append' (see
-    append_media_fp_index): the banding is stateless, so no retrain and
-    no rewrite of standing rows.
-    """
-    fp = _media_fp(df, payload_col, id_col, modality, decode_fn)
-    rows = hamming_chunk_rows(fp, "doc_id", "phash", max_hamming, 64)
-    rows = rows.withColumn(
-        "chunk",
-        F.col("chunk").alias(
-            "chunk", metadata={"modality": modality, "max_hamming": max_hamming}
-        ),
-    )
-    rows.write.mode("overwrite").parquet(path)
-
-
-def append_media_fp_index(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    path: str,
-    modality: str = "image",
-    max_hamming: int = 6,
-    decode_fn=None,
-) -> None:
-    """Append a new batch's fingerprint rows to the standing index —
-    O(batch) cost, no retrain (stateless banding), standing rows
-    untouched. Parameters must match the build's (the probe-side guard
-    reads the stamped metadata of whichever file schema wins the merge;
-    keeping them identical is the caller's contract, same as the IVF
-    and MinHash indexes).
-
-    Re-appending a deleted id RESURRECTS it, IVF-style: its old physical
-    rows are rewritten out first, then the fresh rows land, then its
-    tombstone clears — exactly one live copy per (chunk, key), and a
-    crash mid-sequence leaves the id deleted, never duplicated. Zero
-    cost on the common path (no tombstone overlap → no rewrite)."""
-    from . import tombstones as ts
-
-    spark = df.sparkSession
-    ts.recover_swap(path, (".next",))
-    tpath = _media_tombstone_path(path)
-    tomb = ts.load_tombstones(spark, tpath, "doc_id")
-    resurrect = None
-    if tomb is not None:
-        resurrect = tomb.join(
-            df.select(F.col(id_col).alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        if resurrect.limit(1).count() == 0:
-            resurrect = None
-        else:
-            live = spark.read.parquet(path).join(
-                F.broadcast(resurrect), "doc_id", "left_anti"
-            )
-            ts.swap_rewrite_parquet(live, path)
-    fp = _media_fp(df, payload_col, id_col, modality, decode_fn)
-    rows = hamming_chunk_rows(fp, "doc_id", "phash", max_hamming, 64)
-    rows = rows.withColumn(
-        "chunk",
-        F.col("chunk").alias(
-            "chunk", metadata={"modality": modality, "max_hamming": max_hamming}
-        ),
-    )
-    rows.write.mode("append").parquet(path)
-    if resurrect is not None:
-        ts.clear_tombstones_for(spark, tpath, resurrect, "doc_id")
-
-
-def _media_tombstone_path(path: str) -> str:
-    # sibling dir: the index itself is a FLAT parquet dataset at `path`,
-    # so a nested dir would be swept into (or break) the parquet read
-    return path.rstrip("/") + "_tombstones"
-
-
-def delete_from_media_fp_index(spark, path: str, ids: DataFrame) -> int:
-    """Tombstone-delete media items from the persisted fingerprint index
-    — the takedown/opt-out path, O(ids), no index row touched. Every
-    probe anti-joins the (broadcast-small) tombstone set against the
-    index rows BEFORE banding-join, so deleted ids can never surface;
-    their dead rows are scanned until compact_media_fp_tombstones runs.
-    Re-appending a deleted id via append_media_fp_index resurrects it.
-    Returns the number of NEW tombstones (already-tombstoned or foreign
-    ids count 0). Mirrors similarity.delete_from_ivf_index."""
-    from . import tombstones as ts
-
-    ts.recover_swap(path, (".next",))
-    return ts.append_tombstone_ids(
-        spark,
-        _media_tombstone_path(path),
-        ids,
-        spark.read.parquet(path).select("doc_id"),
-    )
-
-
-def compact_media_fp_tombstones(
-    spark, path: str, max_tombstone_fraction: float = 0.2
-) -> dict:
-    """Threshold-gated tombstone GC: when tombstoned rows exceed
-    `max_tombstone_fraction` of the index rows, rewrite the row table
-    without them (write-then-swap, crash-safe) and clear the tombstone
-    set — probe cost returns to the live fraction and the anti-join
-    disappears. Below the threshold: a counted no-op, so a scheduled
-    maintenance job costs nothing at steady state. The rewrite is whole-
-    table (the index is flat, unlike IVF's cell partitions) but rows are
-    24-byte fingerprints — ~3 orders of magnitude under the media bytes
-    they stand for. Returns {"skipped", "total_rows", "n_tombstoned",
-    "fraction"}."""
-    import shutil
-
-    from . import tombstones as ts
-
-    if not (0 < max_tombstone_fraction <= 1):
-        raise ValueError(
-            "max_tombstone_fraction must be in (0, 1], got "
-            f"{max_tombstone_fraction}"
-        )
-    ts.recover_swap(path, (".next",))
-    rows = spark.read.parquet(path)
-    total = rows.count()
-    tpath = _media_tombstone_path(path)
-    tomb = ts.load_tombstones(spark, tpath, "doc_id")
-    if tomb is None or total == 0:
-        return {
-            "skipped": True, "total_rows": total, "n_tombstoned": 0,
-            "fraction": 0.0,
-        }
-    n_dead = rows.join(F.broadcast(tomb), "doc_id", "left_semi").count()
-    frac = n_dead / total
-    if frac <= max_tombstone_fraction:
-        return {
-            "skipped": True, "total_rows": total, "n_tombstoned": n_dead,
-            "fraction": round(frac, 6),
-        }
-    live = rows.join(F.broadcast(tomb), "doc_id", "left_anti")
-    ts.swap_rewrite_parquet(live, path)
-    shutil.rmtree(tpath, ignore_errors=True)
-    return {
-        "skipped": False, "total_rows": total, "n_tombstoned": n_dead,
-        "fraction": round(frac, 6),
-    }
-
-
-def probe_media_fp_index(
-    spark,
-    path: str,
-    new_media: DataFrame,
-    payload_col: str,
-    id_col: str,
-    modality: str = "image",
-    max_hamming: int = 6,
-    decode_fn=None,
-) -> DataFrame:
-    """Near-dups of a new batch AGAINST the persisted index:
-    (new_id, index_id, hamming), hamming ≤ max_hamming.
-
-    The batch fingerprints and bands with the SAME parameters (stamped
-    metadata is validated — a silent mismatch would band differently
-    and return near-empty candidates), equi-joins the index's
-    (chunk, key) rows, and exact-verifies by bit_count(xor) of the two
-    phashes carried through the join. Cost scales with the batch +
-    collisions; the indexed corpus's media bytes are never re-read.
-    Self-pairs (same id on both sides) are excluded so re-probing an
-    already-indexed item reports only its OTHER near-dups. Tombstoned
-    (deleted) ids are anti-joined out of the index rows before the
-    banding join — broadcast, so the only overhead is scanning the dead
-    fraction until compaction."""
-    from . import tombstones as ts
-
-    ts.recover_swap(path, (".next",))
-    index = ts.apply_tombstones(
-        spark.read.parquet(path),
-        ts.load_tombstones(spark, _media_tombstone_path(path), "doc_id"),
-        "doc_id",
-    )
-    meta = index.schema["chunk"].metadata or {}
-    if meta:
-        got = (meta.get("modality"), meta.get("max_hamming"))
-        want = (modality, max_hamming)
-        if got != want:
-            raise ValueError(
-                f"index at {path} was built with (modality, max_hamming)="
-                f"{got}, probe called with {want} — parameters must match"
-            )
-    fp = _media_fp(new_media, payload_col, id_col, modality, decode_fn)
-    probe_rows = hamming_chunk_rows(fp, "doc_id", "phash", max_hamming, 64)
-    joined = probe_rows.select(
-        F.col("doc_id").alias("new_id"),
-        F.col("phash").alias("__fp_new"),
-        "chunk",
-        "key",
-    ).join(
-        index.select(
-            F.col("doc_id").alias("index_id"),
-            F.col("phash").alias("__fp_idx"),
-            "chunk",
-            "key",
-        ),
-        ["chunk", "key"],
-    )
-    ham = F.bit_count(F.col("__fp_new").bitwiseXOR(F.col("__fp_idx")))
-    return (
-        joined.filter(F.col("new_id") != F.col("index_id"))
-        .select("new_id", "index_id", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )

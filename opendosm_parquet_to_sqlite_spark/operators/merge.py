@@ -1,22 +1,15 @@
-"""MERGE INTO semantics for keyed parquet datasets — the upsert primitive
-the reference approximates by dropping and rebuilding its whole `prices`
+"""MERGE INTO semantics for keyed datasets — the upsert primitive the
+reference approximates by dropping and rebuilding its whole `prices`
 table every run (src/main.rs:252-278, materialize-overwrite). At 100 TB a
 full rebuild per delta is not a strategy; MERGE applies a (usually small)
 change set against the standing dataset in one pass.
 
-Two layers, deliberately split:
+`merge_plan` is the pure relational core: one keyed full-outer join
+classifying every row as kept / updated / inserted / deleted. Being a
+plain DataFrame plan it is hash-checkable against a DuckDB oracle
+(plans.queries: merge_upsert) and reusable against any source.
 
-- `merge_plan` — the PURE relational core: one keyed full-outer join
-  classifying every row as kept / updated / inserted / deleted. Being a
-  plain DataFrame plan it is hash-checkable against a DuckDB oracle
-  (plans.queries: merge_upsert) and reusable against any source.
-- `merge_upsert_dataset` — the sink wrapper: read standing parquet →
-  merge_plan → write-then-swap (same crash-safety contract as
-  sinks.dataset.compact_small_files: a failed merge leaves the standing
-  dataset untouched; never a half-dataset).
-
-Scale shape: ONE exchange of each side keyed by the merge key — and when
-both sides are bucket-written on the key (sinks.bucketed), zero. The
+Scale shape: ONE exchange of each side keyed by the merge key. The
 standing dataset never passes through the driver. Updates must be
 key-unique (enforced: a duplicate-key update set is a bug, and silently
 picking one of N conflicting updates is the worst possible behavior).
@@ -129,40 +122,3 @@ def merge_plan(
             ~F.coalesce(F.col("__matched") & delete_condition, F.lit(False))
         )
     return merged.drop("__matched", "__from_updates")
-
-
-def merge_upsert_dataset(
-    spark,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    delete_condition: Column | None = None,
-) -> dict:
-    """Apply merge_plan against the standing parquet dataset at `path`
-    with write-then-swap atomicity. Returns {'rows_before', 'rows_after'}.
-
-    The merged copy is fully materialized to `path + '.merge'` BEFORE the
-    standing data is touched (the read and the overwrite cannot overlap —
-    Spark reads lazily, so writing in place would consume half-overwritten
-    input). The swap is two renames, not one atomic op: recover_swap()
-    (operators/incremental.py) runs first and repairs anything a previous
-    crash left mid-swap ('.old' stranded, stale '.merge'), so the
-    original dataset is always present at `path` when the merge starts.
-    """
-    import os
-    import shutil
-
-    from .incremental import recover_swap
-
-    recover_swap(path, (".merge",))
-    target = spark.read.parquet(path)
-    before = target.count()
-    merged = merge_plan(target, updates, keys, delete_condition)
-    tmp = path.rstrip("/") + ".merge"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = spark.read.parquet(path).count()
-    return {"rows_before": before, "rows_after": after}

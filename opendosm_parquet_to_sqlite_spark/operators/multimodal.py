@@ -8,8 +8,8 @@ src/main.rs:20,30,48). Contract:
 - Cheap metadata (size, digest, container sniff) is NATIVE column
   expressions — magic-byte dispatch runs inside whole-stage codegen over a
   12-byte prefix, never touching Python.
-- Decode-class work (pixel decode, feature extraction, resize, frame
-  sampling) runs as Arrow-batched mapInPandas: the ONLY sane shape for
+- Decode-class work (pixel decode, feature extraction) runs as
+  Arrow-batched mapInPandas: the ONLY sane shape for
   per-payload Python at scale — payload bytes stream executor-side in Arrow
   batches, one Python worker per core, no driver involvement. The codec is
   pluggable: `real_decode` does FULL stdlib decode for PNG (zlib inflate +
@@ -34,7 +34,6 @@ from struct import error as struct_error
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -94,32 +93,6 @@ def wav_metadata(df: DataFrame, payload_col: str) -> DataFrame:
             "wav_sample_rate": F.when(is_wav, rate).otherwise(null_l),
             "wav_bits": F.when(is_wav, bits).otherwise(null_l),
             "wav_duration_ms": F.when(is_wav, duration_ms).otherwise(null_l),
-        }
-    )
-
-
-def _be_uint(payload: Column, pos: int, nbytes: int) -> Column:
-    """Big-endian unsigned int from payload bytes [pos, pos+nbytes)
-    (1-based pos) — hex the slice, parse base-16. Codegen, no Python."""
-    return F.conv(F.hex(F.substring(payload, pos, nbytes)), 16, 10).cast("long")
-
-
-def png_metadata(df: DataFrame, payload_col: str) -> DataFrame:
-    """Image dimensions from the PNG IHDR chunk — native byte surgery,
-    the image analog of wav_metadata: the 8-byte signature is followed by
-    the IHDR length/type (8 bytes), then width and height as big-endian
-    uint32 at offsets 16 and 20 (0-based). IHDR is REQUIRED first by the
-    PNG spec, so a fixed-offset read is spec-correct, not a heuristic.
-    Non-PNG payloads (and PNGs truncated before the IHDR) yield nulls."""
-    p = F.col(payload_col)
-    is_png = (sniff_media_type(p) == "image/png") & (
-        F.octet_length(p) >= 24
-    ) & (F.hex(F.substring(p, 13, 4)) == "49484452")  # 'IHDR'
-    null_l = F.lit(None).cast("long")
-    return df.withColumns(
-        {
-            "png_width": F.when(is_png, _be_uint(p, 17, 4)).otherwise(null_l),
-            "png_height": F.when(is_png, _be_uint(p, 21, 4)).otherwise(null_l),
         }
     )
 
@@ -489,102 +462,3 @@ def decode_media_features(
             )
 
     return df.select(id_col, payload_col).mapInPandas(run, MEDIA_FEATURES_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    frame_bytes: int = 64,
-    stride: int = 2,
-) -> DataFrame:
-    """Row-EXPANDING mapInPandas: emit every stride-th fixed-size chunk of
-    the payload as a 'frame' (the video frame-sampling batch shape — a real
-    deployment swaps the chunker for a container demuxer). One input row →
-    ceil(n_chunks/stride) output rows; Arrow batches both ways.
-
-    VIDEO/CONTAINER SCOPE (explicit design decision, not an omission):
-    real MP4/MKV/WebM demux and codec decode (H.264/VP9/AV1) require
-    codec libraries this environment does not ship, and — unlike PNG and
-    canonical WAV — cannot be reimplemented as pure byte/zlib work. So
-    video decode is a PLUG-IN concern, with the SAME contract proven for
-    JPEG (real_decode's decode_fn=..., demonstrated end-to-end with a
-    from-scratch baseline-JPEG codec in tests/jpeg_codec.py): the
-    Spark-side plumbing here — binary column in, Arrow-batched
-    row-expanding frames out, FRAME_SCHEMA — is the real, tested
-    machinery. Frame-level video dedup then composes with the existing
-    operators: demux via a decode_fn-style chunker here, then
-    mediadedup.image_phash + hamming_band_pairs over the sampled frames
-    (each frame is just an (id, payload) row), exactly as for still
-    images. What ships in this repo is that composition with the
-    deterministic chunker standing in for the demuxer."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                chunks = range(0, max(len(data), 1), frame_bytes)
-                for fi, off in enumerate(chunks):
-                    if fi % stride:
-                        continue
-                    ids.append(int(pid))
-                    idxs.append(fi)
-                    frames.append(data[off : off + frame_bytes])
-            yield pd.DataFrame(
-                {
-                    "id": pd.array(ids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame": frames,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_image(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    width: int,
-    height: int,
-    resize_fn: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """payload → resized payload (same row count). Default resizer is a
-    deterministic fake (sha1-seeded bytes of the requested size, capped);
-    a real deployment passes resize_fn backed by PIL/libvips."""
-
-    def fake_resize(data: bytes, w: int, h: int) -> bytes:
-        seed = hashlib.sha1(data + f"{w}x{h}".encode()).digest()
-        return (seed * (min(w * h, 4096) // len(seed) + 1))[: min(w * h, 4096)]
-
-    resize = resize_fn or fake_resize
-    schema = StructType(
-        [StructField("id", LongType()), StructField("resized", BinaryType())]
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "resized": [
-                        resize(bytes(b), width, height) for b in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)

@@ -285,34 +285,6 @@ def _signatures_from_hashed_sets(sets: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-) -> DataFrame:
-    """Per-doc MinHash signature: sig[i] = min over shingles of h_i(shingle).
-
-    Each shingle is string-hashed ONCE (xxhash64), then the i-th hash family
-    member is xxhash64(i, base_hash) — long-only mixing, no per-family string
-    work. One explode + one groupBy with num_hashes min() partial aggregates;
-    map-side combine keeps the shuffle at O(docs · num_hashes).
-    """
-    posts = with_hashed_shingles(df, text_col, id_col, n).select(
-        "doc_id", F.explode("sh").alias("h")
-    )
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = posts.groupBy("doc_id").agg(*aggs)
-    return sig.select(
-        "doc_id",
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature"),
-    )
-
-
 def _band_rows(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     """(doc_id, band, bucket) — each signature split into `bands` hashed
     band keys (variadic xxhash64 over the band's slots, long-only)."""
@@ -446,150 +418,6 @@ def probe_neardup_index(
     )
 
 
-def _neardup_tombstone_path(path: str) -> str:
-    return f"{path.rstrip('/')}/tombstones"
-
-
-def save_neardup_index(bands: DataFrame, sets: DataFrame, path: str) -> None:
-    """Persist a (band_table, shingle_sets) pair under one index root:
-    `path/bands` + `path/sets` parquet. The root layout is what gives the
-    index a delete story (delete_from_neardup_index tombstones under the
-    same root) — callers managing two loose dirs can keep doing so, but
-    get no takedown path."""
-    bands.write.mode("overwrite").parquet(f"{path}/bands")
-    sets.write.mode("overwrite").parquet(f"{path}/sets")
-
-
-def load_neardup_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(band_table, shingle_sets) from an index root, with tombstoned
-    (deleted) doc ids anti-joined out of BOTH tables — a probe through
-    this loader can never surface a deleted doc. The tombstone set is
-    broadcast-small by the maintenance contract
-    (compact_neardup_tombstones); self-heals crashed swaps first."""
-    from . import tombstones as ts
-
-    for part in ("bands", "sets"):
-        ts.recover_swap(f"{path}/{part}", (".next",))
-    tomb = ts.load_tombstones(
-        spark, _neardup_tombstone_path(path), "doc_id"
-    )
-    return (
-        ts.apply_tombstones(
-            spark.read.parquet(f"{path}/bands"), tomb, "doc_id"
-        ),
-        ts.apply_tombstones(
-            spark.read.parquet(f"{path}/sets"), tomb, "doc_id"
-        ),
-    )
-
-
-def append_neardup_index(
-    spark, path: str, new_bands: DataFrame, new_sets: DataFrame
-) -> None:
-    """Append a new batch's index rows (from build_neardup_index over the
-    batch) to the standing root — O(batch), standing rows untouched.
-
-    Re-appending a deleted doc RESURRECTS it, IVF-style: its old rows
-    are rewritten out of bands+sets first, the fresh rows land, then its
-    tombstone clears — exactly one live copy, and a crash mid-sequence
-    leaves the doc deleted, never duplicated. Zero cost on the common
-    path (no tombstone overlap → no rewrite)."""
-    from . import tombstones as ts
-
-    for part in ("bands", "sets"):
-        ts.recover_swap(f"{path}/{part}", (".next",))
-    tpath = _neardup_tombstone_path(path)
-    tomb = ts.load_tombstones(spark, tpath, "doc_id")
-    resurrect = None
-    if tomb is not None:
-        resurrect = tomb.join(
-            new_sets.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
-        if resurrect.limit(1).count() == 0:
-            resurrect = None
-        else:
-            for part in ("bands", "sets"):
-                live = spark.read.parquet(f"{path}/{part}").join(
-                    F.broadcast(resurrect), "doc_id", "left_anti"
-                )
-                ts.swap_rewrite_parquet(live, f"{path}/{part}")
-    new_bands.write.mode("append").parquet(f"{path}/bands")
-    new_sets.write.mode("append").parquet(f"{path}/sets")
-    if resurrect is not None:
-        ts.clear_tombstones_for(spark, tpath, resurrect, "doc_id")
-
-
-def delete_from_neardup_index(spark, path: str, ids: DataFrame) -> int:
-    """Tombstone-delete docs from a persisted MinHash index root — the
-    takedown/opt-out path for text, O(ids), no index row touched. Loads
-    via load_neardup_index anti-join the (broadcast-small) tombstone set
-    out of bands AND shingle sets, so deleted docs can never surface
-    from a probe; their dead rows are scanned until
-    compact_neardup_tombstones runs. Re-appending a deleted doc via
-    append_neardup_index resurrects it. Returns the number of NEW
-    tombstones (already-tombstoned or foreign ids count 0). Mirrors
-    similarity.delete_from_ivf_index."""
-    from . import tombstones as ts
-
-    ts.recover_swap(f"{path}/sets", (".next",))
-    return ts.append_tombstone_ids(
-        spark,
-        _neardup_tombstone_path(path),
-        ids,
-        spark.read.parquet(f"{path}/sets").select("doc_id"),
-    )
-
-
-def compact_neardup_tombstones(
-    spark, path: str, max_tombstone_fraction: float = 0.2
-) -> dict:
-    """Threshold-gated tombstone GC for a MinHash index root: when
-    tombstoned docs exceed `max_tombstone_fraction` of indexed docs,
-    rewrite bands+sets without them (write-then-swap, crash-safe) and
-    clear the tombstone set. Below the threshold: counted no-op. The
-    rewrite is whole-table (every doc has a row in every band, so no
-    partition subset can contain the dead rows) but index rows are
-    signature-sized — far under the corpus text they stand for. Returns
-    {"skipped", "total_docs", "n_tombstoned", "fraction"}."""
-    import shutil
-
-    from . import tombstones as ts
-
-    if not (0 < max_tombstone_fraction <= 1):
-        raise ValueError(
-            "max_tombstone_fraction must be in (0, 1], got "
-            f"{max_tombstone_fraction}"
-        )
-    for part in ("bands", "sets"):
-        ts.recover_swap(f"{path}/{part}", (".next",))
-    sets = spark.read.parquet(f"{path}/sets")
-    total = sets.count()
-    tpath = _neardup_tombstone_path(path)
-    tomb = ts.load_tombstones(spark, tpath, "doc_id")
-    if tomb is None or total == 0:
-        return {
-            "skipped": True, "total_docs": total, "n_tombstoned": 0,
-            "fraction": 0.0,
-        }
-    n_dead = sets.join(F.broadcast(tomb), "doc_id", "left_semi").count()
-    frac = n_dead / total
-    if frac <= max_tombstone_fraction:
-        return {
-            "skipped": True, "total_docs": total, "n_tombstoned": n_dead,
-            "fraction": round(frac, 6),
-        }
-    for part in ("bands", "sets"):
-        live = spark.read.parquet(f"{path}/{part}").join(
-            F.broadcast(tomb), "doc_id", "left_anti"
-        )
-        ts.swap_rewrite_parquet(live, f"{path}/{part}")
-    shutil.rmtree(tpath, ignore_errors=True)
-    return {
-        "skipped": False, "total_docs": total, "n_tombstoned": n_dead,
-        "fraction": round(frac, 6),
-    }
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -699,9 +527,8 @@ def hamming_chunk_rows(
 ) -> DataFrame:
     """Explode each fingerprint into its (chunk, key) pigeonhole rows —
     (id, fp, chunk, key), one row per chunk. The shared banding-key
-    producer behind hamming_band_pairs (in-corpus pair search) and the
-    persisted media fingerprint index (mediadedup.build_media_fp_index —
-    the rows ARE the index layout). Chunk widths: ceil(bits/(d+1)), last
+    producer behind hamming_band_pairs (in-corpus pair search). Chunk
+    widths: ceil(bits/(d+1)), last
     chunk clipped; a full-64-bit chunk takes no mask (1<<64 would
     overflow a long literal), shiftrightunsigned keeps the sign bit a
     data bit."""

@@ -1,11 +1,9 @@
-"""Embedding dimensionality reduction: distributed PCA and Gaussian random
-projection (north-star M5 — embedding-table hygiene at corpus scale).
+"""Embedding dimensionality reduction: distributed PCA (north-star M5 —
+embedding-table hygiene at corpus scale).
 
 Shrinking `array<float>` embedding columns is standard pipeline work before
 clustering / ANN indexing / near-dup sweeps: a 64->8 PCA cuts every
-downstream shuffle and BLAS pass ~8x, and a seeded random projection gives
-the same bytes-saving without a fit when Johnson-Lindenstrauss distortion
-is acceptable.
+downstream shuffle and BLAS pass ~8x.
 
 Scale design — PCA via the method of moments, never the data matrix:
 the fit collects exactly (1 + d + d*d) doubles to the driver — count,
@@ -35,8 +33,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_RP_SEED = 1729
 
 
 def gram_moments(df: DataFrame, vec_col: str) -> tuple[int, np.ndarray, np.ndarray]:
@@ -124,33 +120,6 @@ def pca_project(
     """Fit + project in one call (two corpus passes: moments, matmul)."""
     comps, mean, _ = pca_fit(df, vec_col, r)
     return project(df, id_col, vec_col, comps, mean, out_col)
-
-
-def random_projection_matrix(d: int, r: int, seed: int = _RP_SEED) -> np.ndarray:
-    """Seeded Gaussian JL projection, rows scaled by 1/sqrt(r) so expected
-    squared norms are preserved."""
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((r, d)) / np.sqrt(r)
-
-
-def random_project(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    r: int,
-    seed: int = _RP_SEED,
-    out_col: str = "proj",
-) -> DataFrame:
-    """Johnson-Lindenstrauss projection to r dims — no fit pass at all
-    (the matrix is a pure function of (d, r, seed)), so it is the
-    incremental-ingest-friendly reducer: tomorrow's batch projects
-    identically without refitting. Distance distortion is the JL bound,
-    not data-adaptive like PCA."""
-    first = df.select(vec_col).first()
-    if first is None or first[0] is None:
-        raise ValueError("embedding frame is empty — nothing to project")
-    W = random_projection_matrix(len(first[0]), r, seed)
-    return project(df, id_col, vec_col, W, None, out_col)
 
 
 def embedding_drift(

@@ -14,7 +14,6 @@ Rule vocabulary (each compiles to a native boolean expression per row):
                                    is its own rule; double-counting a
                                    missing value as a range breach would
                                    misattribute the defect)
-- matches(col, regex)            — NULL passes, same rationale
 - in_set(col, values)
 - unique(col)                    — violations = rows beyond the first
                                    per duplicated value (count - distinct)
@@ -69,18 +68,6 @@ class in_range(Rule):
         return (
             c.isNotNull()
             & ((c < F.lit(self.lo)) | (c > F.lit(self.hi)))
-        ).cast("int")
-
-
-class matches(Rule):
-    def __init__(self, col: str, pattern: str):
-        super().__init__(f"matches[{pattern}]", col)
-        self.pattern = pattern
-
-    def violation(self, df):
-        c = F.col(self.col)
-        return (
-            c.isNotNull() & ~c.rlike(self.pattern)
         ).cast("int")
 
 

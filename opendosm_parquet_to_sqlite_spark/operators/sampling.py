@@ -561,7 +561,7 @@ def neyman_allocation(
 
     Shape: ONE partial-combined stats agg to a strata-sized table;
     allocation is narrow arithmetic over it. Feed the rates into
-    stratified_sample for the deterministic draw (neyman_sample)."""
+    stratified_sample for the deterministic draw."""
     s = df.groupBy(F.col(strata_col).alias("stratum")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.coalesce(F.stddev_pop(F.col(value_col)), F.lit(0.0)).alias(
@@ -586,33 +586,6 @@ def neyman_allocation(
         F.round(F.col("__s"), 6).alias("std_value"),
         alloc_capped.cast("long").alias("alloc_n"),
         F.round(alloc_capped / F.col("n_rows"), 6).alias("alloc_rate"),
-    )
-
-
-def neyman_sample(
-    df: DataFrame,
-    strata_col: str,
-    id_col: str,
-    value_col: str,
-    total_n: int,
-    namespace: str = "neyman",
-) -> DataFrame:
-    """Deterministic draw at the Neyman allocation: compute per-stratum
-    rates (one strata-sized collect — the domain_mix pattern) and apply
-    the md5-band stratified sampler. Same determinism contract as every
-    sampler here; realized sizes are Binomial around alloc_n (hash
-    banding is per-row, not exact-k — swap sample_per_group's
-    WindowGroupLimit cap when exact counts matter more than one-pass
-    narrowness)."""
-    rates = {
-        r["stratum"]: r["alloc_rate"]
-        for r in neyman_allocation(
-            df, strata_col, value_col, total_n
-        ).collect()
-    }
-    return stratified_sample(
-        df, strata_col, id_col, rates, default_rate=0.0,
-        namespace=namespace,
     )
 
 

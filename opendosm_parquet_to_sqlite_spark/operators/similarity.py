@@ -585,11 +585,7 @@ def build_ivf_index(
                        asymmetric ADC scoring — recall vs the float index
                        is test-pinned)
       path/meta      — one row of build parameters, validated on probe
-
-    Incremental ingest: append_ivf_index assigns NEW vectors with the saved
-    centroids and appends their cell partitions — the existing corpus is
-    never rescanned and the quantizer never retrained (mirroring the
-    MinHash build/probe pair, neardup.build_neardup_index)."""
+    """
     spark = corpus.sparkSession
     cent = train_ivf_centroids(
         corpus, n_centroids, train_sample, id_col, vec_col, seed
@@ -617,417 +613,6 @@ def _load_ivf_meta(spark, path: str) -> tuple["np.ndarray", dict]:
             f"meta ({meta['n_centroids']}, {meta['dim']})"
         )
     return cent, meta
-
-
-def append_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cell_fraction: float | None = None,
-) -> None:
-    """Assign NEW vectors with the SAVED centroids and append — O(new)
-    work, no retrain, no rescan of the existing index.
-
-    max_cell_fraction guards against ingest drift: appended batches whose
-    distribution shifted away from the training sample pile into few
-    cells, and an unbounded cell degrades the per-cell probe toward brute
-    force. When set, oversized cells (count > fraction × total) are split
-    after the append via rebalance_ivf_index — O(oversized cells), never
-    a full rebuild."""
-    spark = new_vectors.sparkSession
-    cent, meta = _load_ivf_meta(spark, path)
-    rows = _cell_rows(
-        new_vectors, cent, bool(meta.get("quantized", 0)), id_col, vec_col
-    )
-    # re-appending a previously deleted id RESURRECTS it. Resurrection
-    # must rewrite the old physical rows out of their cells BEFORE the
-    # new rows land: clearing the tombstone alone would leave BOTH rows
-    # visible to the probe-time anti-join, and the duplicate would occupy
-    # two of the k ranks (displacing a genuine neighbor) and inflate the
-    # compaction-trigger fraction. The rewrite touches only the cells
-    # holding resurrected ids — O(resurrected), zero cost on the common
-    # append path (no tombstone overlap → no rewrite). Crash ordering is
-    # safe: rewrite-then-append-then-clear means a crash mid-sequence
-    # leaves the id tombstoned (still deleted — consistent), and a retry
-    # of the append self-heals by rewriting the half-landed row first.
-    tomb = _load_tombstones(spark, path, id_col)
-    resurrect = None
-    if tomb is not None:
-        resurrect = tomb.join(
-            new_vectors.select(id_col).distinct(), id_col, "left_semi"
-        )
-        if resurrect.limit(1).count() == 0:
-            resurrect = None
-        else:
-            _rewrite_cells_without(spark, path, resurrect, id_col)
-    rows.write.mode("append").partitionBy("cell").parquet(f"{path}/cells")
-    if resurrect is not None:
-        _clear_tombstones_for(spark, path, resurrect, id_col)
-    if max_cell_fraction is not None:
-        rebalance_ivf_index(
-            spark, path, max_cell_fraction, id_col=id_col, vec_col=vec_col,
-        )
-
-
-def _tombstone_path(path: str) -> str:
-    return f"{path}/tombstones"
-
-
-def _load_tombstones(spark, path: str, id_col: str) -> DataFrame | None:
-    """The index's tombstone set as a one-column (`id_col`) DataFrame, or
-    None when nothing was ever deleted. Tombstones are SMALL by the
-    maintenance contract (compact_ivf_tombstones rewrites cells once the
-    fraction passes a cap), so probe-time anti-joins broadcast them.
-
-    Self-heals a crashed _clear_tombstones_for swap first (recover_swap
-    over the '__new' staging suffix), so a mid-swap crash can never
-    silently un-delete data: either the pre-swap tombstone set is
-    restored from '.old' or the completed swap's leftovers are dropped."""
-    import os
-
-    from .incremental import recover_swap
-
-    tpath = _tombstone_path(path)
-    recover_swap(tpath, ("__new",))
-    if not os.path.exists(tpath):
-        return None
-    return spark.read.parquet(tpath).select(
-        F.col("tomb_id").alias(id_col)
-    ).distinct()
-
-
-def _apply_tombstones(spark, path: str, cells: DataFrame, id_col: str) -> DataFrame:
-    tomb = _load_tombstones(spark, path, id_col)
-    if tomb is None:
-        return cells
-    return cells.join(F.broadcast(tomb), id_col, "left_anti")
-
-
-def _clear_tombstones_for(spark, path: str, ids: DataFrame, id_col: str) -> None:
-    """Remove tombstones matching `ids` via the incremental.recover_swap
-    two-rename contract: stage '__new', rename live → '.old', rename
-    staging → live, drop '.old'. A crash in any window is recoverable —
-    _load_tombstones runs recover_swap first, which restores '.old' when
-    the live dir is missing (mid-swap crash) and drops stale staging.
-    The old rmtree-then-rename order had an unrecoverable window in which
-    every deleted id silently resurfaced (no tombstone dir at all); an
-    object store would swap a manifest instead of renaming."""
-    import os
-    import shutil
-
-    from .incremental import recover_swap
-
-    tpath = _tombstone_path(path)
-    recover_swap(tpath, ("__new",))
-    if not os.path.exists(tpath):
-        return
-    kept = spark.read.parquet(tpath).join(
-        ids.select(F.col(id_col).alias("tomb_id")).distinct(),
-        "tomb_id",
-        "left_anti",
-    )
-    staging = tpath + "__new"
-    kept.coalesce(1).write.mode("overwrite").parquet(staging)
-    old = tpath + ".old"
-    os.rename(tpath, old)
-    os.rename(staging, tpath)
-    shutil.rmtree(old)
-
-
-def delete_from_ivf_index(
-    spark,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "vec_id",
-) -> int:
-    """Tombstone-delete vectors from a persisted IVF/IVFADC index — the
-    removal path a curated-corpus retrieval stack needs (license
-    revocation, takedown, opt-out) WITHOUT a full index rebuild.
-
-    Deletes are O(ids): the id set appends to `path/tombstones` and no
-    cell partition is touched. Every probe (probe_ivf_index /
-    probe_ivfpq_index) anti-joins the tombstone set against the probed
-    cell scan BEFORE any scoring, so deleted ids can never surface — at
-    the cost of scanning their dead rows until compaction. Run
-    compact_ivf_tombstones on a maintenance schedule to bound that cost;
-    the probe-side anti-join broadcasts, so the scan overhead stays the
-    dead-row fraction, not a shuffle.
-
-    Re-appending a deleted id via append_ivf_index clears its tombstone
-    (resurrect semantics). Returns the number of NEW tombstones written
-    (ids already tombstoned or absent from the index count 0).
-    """
-    tpath = _tombstone_path(path)
-    new_ids = ids.select(
-        F.col(ids.columns[0]).alias("tomb_id")
-    ).distinct()
-    existing = None
-    import os
-
-    if os.path.exists(tpath):
-        existing = spark.read.parquet(tpath)
-        new_ids = new_ids.join(existing, "tomb_id", "left_anti")
-    # only tombstone ids that actually live in the index — foreign ids
-    # would inflate the compaction-trigger fraction forever
-    new_ids = new_ids.join(
-        spark.read.parquet(f"{path}/cells").select(
-            F.col(id_col).alias("tomb_id")
-        ),
-        "tomb_id",
-        "left_semi",
-    )
-    n = new_ids.count()
-    if n:
-        new_ids.coalesce(1).write.mode("append").parquet(tpath)
-    return n
-
-
-def _rewrite_cells_without(spark, path: str, ids: DataFrame, id_col: str) -> int:
-    """Physically remove `ids` (one-column DataFrame named `id_col`,
-    broadcast-small) from the persisted index by rewriting ONLY the cell
-    partitions that contain them: staging + dynamic partition overwrite
-    (the rebalance_ivf_index idiom), with fully-emptied cells dropped
-    explicitly (dynamic overwrite only replaces partitions PRESENT in
-    the staged data). Shared by compact_ivf_tombstones (bulk GC) and
-    append_ivf_index's resurrect path (targeted rewrite). Returns the
-    number of cells rewritten."""
-    import os
-    import shutil
-
-    cells = spark.read.parquet(f"{path}/cells")
-    dead = cells.join(F.broadcast(ids), id_col, "left_semi")
-    affected = [r["cell"] for r in dead.select("cell").distinct().collect()]
-    if not affected:
-        return 0
-    live = (
-        cells.filter(F.col("cell").isin(affected))
-        .join(F.broadcast(ids), id_col, "left_anti")
-    )
-    staging = f"{path}/cells__compact"
-    live.write.mode("overwrite").partitionBy("cell").parquet(staging)
-    staged_cells = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(staging)
-        if d.startswith("cell=")
-    }
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    if staged_cells:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-                "cell"
-            ).parquet(f"{path}/cells")
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-    # a cell whose every row was removed stages nothing and must be
-    # dropped explicitly (object stores would drop its manifest entry)
-    for c in set(affected) - staged_cells:
-        shutil.rmtree(f"{path}/cells/cell={c}", ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-    return len(affected)
-
-
-def compact_ivf_tombstones(
-    spark,
-    path: str,
-    max_tombstone_fraction: float = 0.2,
-    id_col: str = "vec_id",
-) -> dict:
-    """Threshold-gated tombstone compaction for a persisted IVF/IVFADC
-    index: when tombstoned rows exceed `max_tombstone_fraction` of the
-    stored rows, rewrite ONLY the cell partitions that contain them
-    (staging + dynamic partition overwrite, the rebalance_ivf_index
-    idiom) and clear the tombstone set — probe cost returns to the
-    live-row fraction and the anti-join disappears entirely.
-
-    Below the threshold it is a footer-count + tombstone-count no-op, so
-    a scheduled maintenance job costs nothing at steady state (the
-    layout.compact_if_needed policy, applied to the index).
-
-    Returns {"skipped", "total_rows", "n_tombstoned", "fraction",
-    "cells_rewritten"}; the same stats row is stamped to
-    `path/maintenance` on every compaction so operators can audit when
-    and at what fraction the index was last rewritten.
-    """
-    import os
-    import shutil
-
-    if not (0 < max_tombstone_fraction <= 1):
-        raise ValueError(
-            "max_tombstone_fraction must be in (0, 1], got "
-            f"{max_tombstone_fraction}"
-        )
-    cells = spark.read.parquet(f"{path}/cells")
-    total = cells.count()
-    tomb = _load_tombstones(spark, path, id_col)
-    if tomb is None or total == 0:
-        return {
-            "skipped": True, "total_rows": total, "n_tombstoned": 0,
-            "fraction": 0.0, "cells_rewritten": 0,
-        }
-    dead = cells.join(F.broadcast(tomb), id_col, "left_semi")
-    n_dead = dead.count()
-    frac = n_dead / total
-    if frac <= max_tombstone_fraction:
-        return {
-            "skipped": True, "total_rows": total, "n_tombstoned": n_dead,
-            "fraction": round(frac, 6), "cells_rewritten": 0,
-        }
-    n_rewritten = _rewrite_cells_without(spark, path, tomb, id_col)
-    shutil.rmtree(_tombstone_path(path), ignore_errors=True)
-    stats = {
-        "skipped": False, "total_rows": total, "n_tombstoned": n_dead,
-        "fraction": round(frac, 6), "cells_rewritten": n_rewritten,
-    }
-    spark.createDataFrame(
-        [(total, n_dead, round(frac, 6), n_rewritten,
-          float(max_tombstone_fraction))],
-        "total_rows long, n_tombstoned long, fraction double, "
-        "cells_rewritten int, max_tombstone_fraction double",
-    ).coalesce(1).write.mode("append").parquet(f"{path}/maintenance")
-    return stats
-
-
-def rebalance_ivf_index(
-    spark,
-    path: str,
-    max_cell_fraction: float,
-    train_sample: int = 10_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = _LSH_SEED,
-    max_splits: int = 16,
-) -> int:
-    """Split every cell holding more than max_cell_fraction of the index
-    into two via local 2-means until the cap holds (or max_splits / an
-    unsplittable all-duplicates cell stops the loop). Returns the number
-    of splits performed.
-
-    Per split: the cell-count agg is a partition-pruned footer-count job;
-    2-means trains on a deterministic md5-sampled subset of ONLY the
-    oversized cell; reassignment rewrites ONLY that cell's partition
-    (dynamic partition overwrite) plus the new cell's — the rest of the
-    index is untouched on disk, so cost is O(oversized cell), not
-    O(index). The centroid table grows by one row per split (old id keeps
-    sub-centroid 0, the new id takes sub-centroid 1) and every persisted
-    probe keeps working because probe always reloads centroids + meta.
-    Quantized indexes split on their stored int8 codes — codes preserve
-    direction, which is all spherical 2-means reads.
-
-    The one-cell rewrite stages through `path/cells__rebalance` because
-    Spark refuses to overwrite a parquet source it is reading in the same
-    job; an object-store deployment would swap manifests instead."""
-    import shutil
-
-    if not (0 < max_cell_fraction <= 1):
-        raise ValueError(
-            f"max_cell_fraction must be in (0, 1], got {max_cell_fraction}"
-        )
-    n_splits = 0
-    while n_splits < max_splits:
-        cent, meta = _load_ivf_meta(spark, path)
-        quant = bool(meta.get("quantized", 0))
-        data_col = "q_codes" if quant else vec_col
-        cells = spark.read.parquet(f"{path}/cells")
-        counts = {
-            r["cell"]: r["n"]
-            for r in cells.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        total = sum(counts.values())
-        if total == 0:
-            break
-        over = [
-            (c, n) for c, n in counts.items() if n > max_cell_fraction * total
-        ]
-        if not over:
-            break
-        cell_id = max(over, key=lambda t: t[1])[0]
-        sample_rows = (
-            cells.filter(F.col("cell") == cell_id)
-            .select(id_col, data_col)
-            .orderBy(
-                F.md5(
-                    F.concat(
-                        F.lit(f"split{seed + n_splits}:"),
-                        F.col(id_col).cast("string"),
-                    )
-                ),
-                F.col(id_col),
-            )
-            .limit(train_sample)
-            .collect()
-        )
-        X = np.array(
-            [np.asarray(r[data_col], dtype=np.float64) for r in sample_rows]
-        )
-        X = X[np.linalg.norm(X, axis=1) > 0]
-        if len(X) < 2:
-            break  # all-zero cell: nothing to split on
-        sub = _kmeans_centroids(X, 2, seed=seed + n_splits)
-        new_id = int(meta["n_centroids"])
-        reassigned = (
-            cells.filter(F.col("cell") == cell_id)
-            .select(
-                id_col,
-                data_col,
-                F.when(
-                    _assign_cell_udf(sub)(F.col(data_col)) == 0,
-                    F.lit(cell_id),
-                )
-                .otherwise(F.lit(new_id))
-                .alias("cell"),
-            )
-        )
-        staging = f"{path}/cells__rebalance"
-        reassigned.write.mode("overwrite").partitionBy("cell").parquet(staging)
-        staged = spark.read.parquet(staging)
-        sides = staged.select("cell").distinct().count()
-        if sides < 2:
-            # 2-means put everything on one side (duplicate-dominated
-            # cell): splitting cannot help, stop rather than livelock
-            shutil.rmtree(staging, ignore_errors=True)
-            break
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            staged.write.mode("overwrite").partitionBy("cell").parquet(
-                f"{path}/cells"
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-        cent_new = np.vstack([cent, sub[1][None, :]])
-        cent_new[cell_id] = sub[0]
-        spark.createDataFrame(
-            [(i, c.tolist()) for i, c in enumerate(cent_new)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame(
-            [
-                (
-                    int(meta["dim"]),
-                    new_id + 1,
-                    int(meta["train_sample"]),
-                    int(meta["seed"]),
-                    int(quant),
-                )
-            ],
-            "dim int, n_centroids int, train_sample int, seed int, "
-            "quantized int",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        n_splits += 1
-    return n_splits
 
 
 def probe_ivf_index(
@@ -1067,9 +652,7 @@ def probe_ivf_index(
         raise ValueError(
             f"query dim {qdim} != index dim {meta['dim']} (index at {path})"
         )
-    cells = _apply_tombstones(
-        spark, path, spark.read.parquet(f"{path}/cells"), id_col
-    )
+    cells = spark.read.parquet(f"{path}/cells")
     if allowed is not None:
         cells = cells.join(
             allowed.select(F.col(allowed.columns[0]).alias(id_col)),
@@ -1080,24 +663,6 @@ def probe_ivf_index(
         cells, queries, cent, k, n_probe, id_col, vec_col, query_id_col,
         cell_col="cell", quantized=bool(meta.get("quantized", 0)),
     )
-
-
-def normalize_vectors(
-    df: DataFrame, vec_col: str = "embedding", out_col: str | None = None
-) -> DataFrame:
-    """Unit-normalize an embedding column (vectorized Pandas UDF — one
-    numpy matrix op per Arrow batch). Normalizing at WRITE time turns
-    every downstream cosine into a dot product and makes quantization
-    scales uniform."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<float>")
-    def norm(vs: pd.Series) -> pd.Series:
-        M = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        return pd.Series(list(M.astype(np.float32)))
-
-    return df.withColumn(out_col or vec_col, norm(F.col(vec_col)))
 
 
 def quantize_int8(
@@ -1125,23 +690,6 @@ def quantize_int8(
         out.withColumn(f"{prefix}_codes", F.col("__q.codes"))
         .withColumn(f"{prefix}_scale", F.col("__q.scale"))
         .drop("__q")
-    )
-
-
-def dequantize_int8(
-    df: DataFrame, prefix: str = "q", out_col: str = "embedding_deq"
-) -> DataFrame:
-    """Inverse of quantize_int8: codes · scale → array<float>."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<float>")
-    def dq(codes: pd.Series, scale: pd.Series) -> pd.Series:
-        C = np.stack(codes.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        S = scale.to_numpy(dtype=np.float64)[:, None]
-        return pd.Series(list((C * S).astype(np.float32)))
-
-    return df.withColumn(
-        out_col, dq(F.col(f"{prefix}_codes"), F.col(f"{prefix}_scale"))
     )
 
 
@@ -1392,26 +940,6 @@ def semantic_dedup_pairs(
             _block_pair_scorer(id_col, vec_col, threshold), _PAIR_SCHEMA
         )
     )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    n_centroids: int = 16,
-    train_sample: int = 10_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = _LSH_SEED,
-) -> DataFrame:
-    """Corpus rows surviving semantic dedup: for every within-cell pair
-    with cosine ≥ threshold, the larger id is dropped (deterministic
-    min-id survivor; for chain/cluster semantics feed
-    semantic_dedup_pairs to graph.connected_components instead)."""
-    pairs = semantic_dedup_pairs(
-        corpus, threshold, n_centroids, train_sample, id_col, vec_col, seed
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return corpus.join(losers, id_col, "left_anti")
 
 
 def cosine_pairs(
@@ -1990,9 +1518,7 @@ def probe_ivfpq_index(
                 "corpora cannot be detected; rebuild the index when the "
                 "embedding model changes"
             )
-    cells = _apply_tombstones(
-        spark, path, spark.read.parquet(f"{path}/cells"), id_col
-    )
+    cells = spark.read.parquet(f"{path}/cells")
     if allowed is not None:
         cells = cells.join(
             allowed.select(F.col(allowed.columns[0]).alias(id_col)),

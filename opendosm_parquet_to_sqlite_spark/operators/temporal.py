@@ -207,10 +207,8 @@ def rolling_features(
 
     Scale: cost is the exchange + sort, the frame state is O(rows in the
     largest window); a window function has no partial phase, so a
-    dominant key serializes into one task — use
-    skew.rolling_features_sliced (row-identical, partitions by
-    (keys…, time-slice) with carry-in replication) when one entity
-    dominates. Emits events' columns + roll_{n,sum,mean,min,max}.
+    dominant key serializes into one task. Emits events' columns +
+    roll_{n,sum,mean,min,max}.
     """
     win = int(window_seconds)
     if win <= 0:
@@ -377,8 +375,7 @@ def transition_matrix(
     window (the rolling_features shape — no self-join), then a
     partial-combined (from, to) count agg; the probability window runs
     over the CELL table (|events|² cells at most — tiny). For a
-    single-user-dominated stream the keyed window is the skew surface;
-    the time-sliced remedy in operators/skew.py applies unchanged.
+    single-user-dominated stream the keyed window is the skew surface.
     """
     from pyspark.sql.window import Window
 
@@ -437,9 +434,8 @@ def ewma(
     Shape: ONE key exchange (the collect_list groupBy); everything after
     is a narrow in-partition fold.  Per-key memory is O(series length) —
     same envelope as any keyed sort-window over the same data; for keys
-    whose history exceeds executor memory, slice time first
-    (operators/skew.py's carry-band trick applies: fold slices in order,
-    seeding each slice with the previous slice's final state).
+    whose history exceeds executor memory, slice time first (fold slices
+    in order, seeding each slice with the previous slice's final state).
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     tb = tiebreak_col if tiebreak_col is not None else ts_col
@@ -621,7 +617,7 @@ def attribute_last_touch(
     carries the latest touch (ts, id) struct forward to every later row;
     the lookback check is a narrow filter on the carried timestamp.
     Skew note: single-user domination hits the keyed sort exactly like
-    rolling_features — the time-sliced remedy applies unchanged.
+    rolling_features.
     """
     secs = (
         ts_seconds

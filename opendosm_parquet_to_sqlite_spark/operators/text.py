@@ -567,22 +567,6 @@ def bigram_logprob_score(
     )
 
 
-def text_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """One-pass per-document profile: all metrics as a narrow projection."""
-    c = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        char_count(c).alias("n_chars"),
-        token_count(c).alias("n_tokens"),
-        bpe_token_estimate(c).alias("bpe_tokens"),
-        punct_ratio(c).alias("punct_ratio"),
-        stopword_ratio(c).alias("stopword_ratio"),
-        quality_score(c).alias("quality"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 def remove_boilerplate_lines(
     df: DataFrame,
     text_col: str,

@@ -392,9 +392,9 @@ def unigram_segment(
     pieces: list[tuple[str, float]],
     out_col: str = "unigram_units",
 ) -> DataFrame:
-    """Viterbi-segment `text_col` under a trained piece table — the
-    unigram twin of bpe_segment. Adds `out_col` (array<string>): the
-    concatenation of each token's best segmentation, in token order.
+    """Viterbi-segment `text_col` under a trained piece table. Adds
+    `out_col` (array<string>): the concatenation of each token's best
+    segmentation, in token order.
     Characters absent from the vocabulary segment as single-char units
     at (min piece logprob - 10) — the byte-fallback analog, so every
     word segments and the op is total.

@@ -296,7 +296,7 @@ def wordpiece_segment(
     max_word_len: int = 100,
 ) -> DataFrame:
     """Greedy longest-match segmentation under a trained vocabulary —
-    the WordPiece twin of bpe_segment / unigram_segment. Adds `out_col`
+    the WordPiece twin of unigram_segment. Adds `out_col`
     (array<string>): each token's pieces in token order; a word with an
     unmatchable position contributes a single [UNK] (the BERT
     convention), as does a word longer than `max_word_len`.

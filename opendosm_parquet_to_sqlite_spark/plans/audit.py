@@ -126,39 +126,3 @@ def assert_plan(df: DataFrame, **expectations) -> dict:
             + f"\nreport={report}"
         )
     return report
-
-
-def schema_diff(df_a: DataFrame, df_b: DataFrame) -> dict:
-    """Dataset-evolution audit between two DataFrames (yesterday's
-    snapshot vs today's ingest, a producer's contract vs what arrived):
-    added / removed columns, type changes, and nullability relaxations —
-    the pre-flight that catches silent upstream schema drift before a
-    union/merge explodes mid-job (or worse, succeeds with implicit
-    casts).
-
-    Driver-only metadata comparison — no data is read. Returns
-    {"added": [...], "removed": [...], "type_changed": [(col, a, b)],
-    "nullability_relaxed": [...], "compatible": bool} where compatible
-    means b can be unionByName'd onto a without loss (no removed
-    columns, no type changes).
-    """
-    a = {f.name: f for f in df_a.schema.fields}
-    b = {f.name: f for f in df_b.schema.fields}
-    added = sorted(set(b) - set(a))
-    removed = sorted(set(a) - set(b))
-    type_changed = sorted(
-        (c, a[c].dataType.simpleString(), b[c].dataType.simpleString())
-        for c in set(a) & set(b)
-        if a[c].dataType != b[c].dataType
-    )
-    relaxed = sorted(
-        c for c in set(a) & set(b)
-        if not a[c].nullable and b[c].nullable
-    )
-    return {
-        "added": added,
-        "removed": removed,
-        "type_changed": type_changed,
-        "nullability_relaxed": relaxed,
-        "compatible": not removed and not type_changed,
-    }

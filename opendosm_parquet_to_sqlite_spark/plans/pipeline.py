@@ -68,11 +68,23 @@ class PipelineResult:
 def cleanse_prices(raw: DataFrame) -> DataFrame:
     """push_price (src/main.rs:21-28): date→'YYYY-MM-DD' string, strict i64
     codes, strict f64 price. Strict = ANSI cast, which throws on malformed
-    input exactly where the reference unwrap-panics."""
+    input exactly where the reference unwrap-panics.
+
+    A NULL key fails the run too (the reference's unwrap panics on it): the
+    cast passes NULL through, max_by would keep one row per NULL-keyed
+    group, and SQLite's UNIQUE index treats NULLs as distinct, so the
+    top-up's ON CONFLICT would append such a row on every replay."""
+
+    def key(name: str):
+        code = cleanse.cast_strict_long(name)
+        return F.when(
+            code.isNull(), F.raise_error(F.lit(f"NULL {name} in prices"))
+        ).otherwise(code).alias(name)
+
     return raw.select(
         cleanse.trim_str(cleanse.date_trunc10("date")).alias("date"),
-        cleanse.cast_strict_long("premise_code").alias("premise_code"),
-        cleanse.cast_strict_long("item_code").alias("item_code"),
+        key("premise_code"),
+        key("item_code"),
         cleanse.cast_strict_double("price").alias("price"),
     )
 

@@ -3620,12 +3620,11 @@ def q_unigram_lm_vocab(spark: SparkSession, sf: str) -> DataFrame:
 
 @query("unigram_segment")
 def q_unigram_segment(spark: SparkSession, sf: str) -> DataFrame:
-    """Viterbi segmentation under a trained unigram-LM piece table —
-    the unigram twin of bpe_segment: train a small vocabulary (same
-    discipline as unigram_lm_vocab), broadcast the piece dict in an
-    Arrow pandas_udf closure, and segment every document with a
-    per-batch word memo; tokenization and the output shaping stay
-    native. Rows-only (training is iterative; no SQL oracle) —
+    """Viterbi segmentation under a trained unigram-LM piece table:
+    train a small vocabulary (same discipline as unigram_lm_vocab),
+    broadcast the piece dict in an Arrow pandas_udf closure, and segment
+    every document with a per-batch word memo; tokenization and the
+    output shaping stay native. Rows-only (training is iterative; no SQL oracle) —
     determinism + rebuild-property pins in tests/test_unigram.py."""
     from ..operators import unigram
 
@@ -6161,7 +6160,7 @@ def q_interval_union(spark: SparkSession, sf: str) -> DataFrame:
 def q_neyman_allocation(spark: SparkSession, sf: str) -> DataFrame:
     """Minimum-variance allocation of a 1000-row sample budget across
     event types (n_h ∝ N_h·S_h, capped at N_h): the labeling-budget
-    optimizer behind neyman_sample. One stats agg; hash-checked."""
+    optimizer. One stats agg; hash-checked."""
     ev = load_table(spark, sf, "events")
     return sampling.neyman_allocation(ev, "event_type", "value", 1000)
 
@@ -9694,7 +9693,7 @@ def q_wordpiece_vocab(spark: SparkSession, sf: str) -> DataFrame:
 @query("wordpiece_segment")
 def q_wordpiece_segment(spark: SparkSession, sf: str) -> DataFrame:
     """Greedy longest-match segmentation under a trained WordPiece
-    vocabulary — the WordPiece twin of bpe_segment/unigram_segment:
+    vocabulary — the WordPiece twin of unigram_segment:
     train a small ruleset, induce the final vocabulary (seed alphabet +
     merged symbols), broadcast it in an Arrow pandas_udf closure with a
     per-batch word memo, segment every document ([UNK] fallback);

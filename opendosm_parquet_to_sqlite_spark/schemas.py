@@ -157,5 +157,3 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
         ]
     ),
 }
-
-TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)

@@ -30,8 +30,6 @@ def task_cpus() -> int:
 
 def get_spark(
     app_name: str = "opendosm-parquet-to-sqlite-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -46,8 +44,8 @@ def get_spark(
     cpus = task_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's coalescing floor (Spark default 1m) sets the MINIMUM
@@ -63,12 +61,8 @@ def get_spark(
         # per-task overhead (~ms) and the floor only binds when a stage's
         # TOTAL shuffle is under parallelism × 64k — at production scale
         # those stages are sub-second either way, while mis-coalescing a
-        # compute-dense small shuffle serializes the cluster at any
-        # scale. Env-overridable for clusters that want the 1m default.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # compute-dense small shuffle serializes the cluster at any scale.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -17,7 +17,6 @@ matter at scale:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def write_dataset(
@@ -38,282 +37,3 @@ def write_dataset(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    target_file_rows: int | None = None,
-    compression: str = "gzip",
-    mode: str = "overwrite",
-) -> None:
-    """JSONL shard export — the lingua-franca interchange format of
-    LLM training stacks (one JSON object per line; WebDataset/Dolma/
-    RedPajama-style consumers read it directly).
-
-    Same scale knobs as the parquet dataset writer: hive partitioning
-    for pruning, maxRecordsPerFile for even shards, per-file codec
-    compression (gzip default — ubiquitous; use 'none' for
-    line-seekable shards). Executors write shards in parallel; nothing
-    flows through the driver.
-
-    Parquet remains the engine-side format (columnar pruning, typed
-    schema); JSONL is the EXPORT boundary only.
-    """
-    writer = df.write.mode(mode)
-    if compression and compression != "none":
-        writer = writer.option("compression", compression)
-    if target_file_rows is not None:
-        writer = writer.option("maxRecordsPerFile", target_file_rows)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
-
-
-def read_jsonl(spark, path: str, schema=None) -> DataFrame:
-    """Read a JSONL dataset back (declared schema recommended — schema
-    inference scans the data twice)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def zorder_key(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 8,
-    accuracy: int = 10000,
-    out_col: str = "__zorder",
-) -> DataFrame:
-    """Morton (Z-order) clustering key over `cols`: each column maps to
-    its quantile bucket (2^bits buckets from one percentile_approx pass),
-    and the bucket ids bit-interleave into one long.  Sorting by this key
-    clusters data so min/max row-group stats stay TIGHT ON EVERY listed
-    column at once — the multi-dimensional data-skipping layout (the
-    public Delta/Iceberg OPTIMIZE ZORDER idea) that a single-column sort
-    cannot give: sorting by (a) leaves (b) shuffled, so predicates on b
-    prune nothing.
-
-    Quantile cutpoints (not equi-width) make bucket occupancy uniform
-    under any value distribution — skewed columns still split evenly, so
-    no Morton prefix region is hot.  The cutpoint pass is one mergeable
-    percentile_approx aggregation; cutpoints ship as expression literals
-    (2^bits doubles per column — driver/model-sized); the bucket lookup
-    and bit interleave are pure codegen'd arithmetic, zero Python and
-    zero extra exchanges.
-    """
-    n_buckets = 1 << int(bits)
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    agg = df.agg(
-        *[
-            F.percentile_approx(
-                F.col(c).cast("double"),
-                F.array(*[F.lit(q) for q in fracs]),
-                F.lit(int(accuracy)),
-            ).alias(c)
-            for c in cols
-        ]
-    ).first()
-    out = df
-    bucket_cols = []
-    for c in cols:
-        cuts = sorted(set(x for x in agg[c] if x is not None))
-        # bucket = #cutpoints strictly below the value, via a fold over
-        # the literal cutpoint array — ONE compact loop in codegen (a
-        # 2^bits-term when-chain would blow Janino's 64 KB method limit,
-        # the lang_id_ngram lesson)
-        v = F.col(c).cast("double")
-        b = F.aggregate(
-            F.array(*[F.lit(float(x)) for x in cuts]),
-            F.lit(0),
-            lambda acc, cut: acc
-            + F.when(v > cut, F.lit(1)).otherwise(F.lit(0)),
-        )
-        bucket_cols.append(F.coalesce(b, F.lit(0)).alias(f"__b_{c}"))
-    out = out.select("*", *bucket_cols)
-    morton = F.lit(0).cast("long")
-    k = len(cols)
-    for i in range(int(bits)):
-        for j, c in enumerate(cols):
-            bit = F.shiftright(F.col(f"__b_{c}"), i).bitwiseAND(F.lit(1))
-            morton = morton + F.shiftleft(
-                bit.cast("long"), i * k + j
-            )
-    return out.withColumn(out_col, morton).drop(
-        *[f"__b_{c}" for c in cols]
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 8,
-    compression: str = "zstd",
-) -> None:
-    """Write `df` as parquet range-partitioned AND sorted by the Z-order
-    key of `cols`: every file and every row group covers a contiguous
-    Morton range, so min/max stats prune on ALL listed columns for
-    point/range predicates.  One range exchange (sampled boundaries) +
-    in-partition sort — the same cost as any total sort, paid once at
-    write time; every later scan with a predicate on any z-column reads
-    a fraction of the data."""
-    keyed = zorder_key(df, cols, bits=bits)
-    (
-        keyed.repartitionByRange(int(n_files), F.col("__zorder"))
-        .sortWithinPartitions("__zorder")
-        .drop("__zorder")
-        .write.mode("overwrite")
-        .option("compression", compression)
-        .parquet(path)
-    )
-
-
-def compact_small_files(
-    spark,
-    path: str,
-    target_file_rows: int = 1_000_000,
-    compression: str = "zstd",
-) -> dict:
-    """Rewrite a parquet dataset into ceil(rows / target_file_rows)
-    right-sized files — the maintenance pass every long-lived dataset
-    needs, because incremental appends (streaming microbatches, daily
-    jobs, per-partition writers) accumulate small files until file-open
-    overhead and driver file-listing dominate scans (the classic small-
-    files problem; at 100 TB a 10 KB-file layout means hundreds of
-    millions of objects).
-
-    Write-then-swap: the compacted copy lands in `path + '.compact'`
-    first, then atomically (rename-wise) replaces the original — a
-    crashed compaction leaves the source intact, never a half-dataset.
-    Row content is preserved exactly (pinned in tests); only layout
-    changes.  Returns {'files_before', 'files_after', 'rows'}.
-    """
-    import glob as _glob
-    import os
-    import shutil
-
-    df = spark.read.parquet(path)
-    rows = df.count()
-    before = len(_glob.glob(os.path.join(path, "*.parquet")))
-    n_files = max(1, -(-rows // int(target_file_rows)))
-    tmp = path.rstrip("/") + ".compact"
-    (
-        df.repartition(n_files)
-        .write.mode("overwrite")
-        .option("compression", compression)
-        .parquet(tmp)
-    )
-    old = path.rstrip("/") + ".old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = len(_glob.glob(os.path.join(path, "*.parquet")))
-    return {"files_before": before, "files_after": after, "rows": rows}
-
-
-def rowgroup_stats(spark, path: str, columns: list[str] | None = None):
-    """Distributed parquet-footer audit: one row per (file, row group,
-    column) with min/max/null stats — the ground truth behind every
-    data-skipping claim. Scans that "should" prune (Z-order layouts,
-    partition-adjacent sorts) prune exactly as well as these row-group
-    ranges allow, and nothing in a query plan shows that; this table
-    does. The in-repo Z-order tests use the same footer arithmetic —
-    this is that audit promoted to a first-class operator.
-
-    Footer reads distribute via mapInPandas over the FILE LIST (one
-    footer per file — KBs of IO regardless of data size; the data pages
-    are never touched). min/max are emitted as strings alongside a
-    numeric cast (NULL for non-numeric types) so callers filter
-    natively.
-
-    Output: (file, row_group, column, num_rows, null_count,
-    min_str, max_str, min_num, max_num).
-    """
-    import glob as _glob
-    import os as _os
-
-    import pandas as _pd
-
-    files = sorted(_glob.glob(_os.path.join(path, "**", "*.parquet"),
-                              recursive=True))
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    fdf = spark.createDataFrame([(f,) for f in files], "file string")
-    want = columns
-
-    def read_footers(batches):
-        import pyarrow.parquet as _pq
-
-        for pdf in batches:
-            out = []
-            for f in pdf["file"]:
-                md = _pq.ParquetFile(f).metadata
-                names = [md.schema.column(i).name
-                         for i in range(md.num_columns)]
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci, name in enumerate(names):
-                        if want is not None and name not in want:
-                            continue
-                        st = g.column(ci).statistics
-                        mn = getattr(st, "min", None) if st else None
-                        mx = getattr(st, "max", None) if st else None
-                        nulls = st.null_count if st else None
-
-                        def _num(v):
-                            try:
-                                return float(v)
-                            except (TypeError, ValueError):
-                                return None
-
-                        out.append(
-                            (
-                                f,
-                                rg,
-                                name,
-                                g.num_rows,
-                                nulls,
-                                None if mn is None else str(mn),
-                                None if mx is None else str(mx),
-                                _num(mn),
-                                _num(mx),
-                            )
-                        )
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "file", "row_group", "column", "num_rows",
-                    "null_count", "min_str", "max_str", "min_num",
-                    "max_num",
-                ],
-            )
-
-    schema = (
-        "file string, row_group int, column string, num_rows long, "
-        "null_count long, min_str string, max_str string, "
-        "min_num double, max_num double"
-    )
-    return fdf.mapInPandas(read_footers, schema)
-
-
-def prunable_fraction(stats, column: str, lo: float, hi: float) -> float:
-    """Fraction of `column`'s row groups a [lo, hi] range predicate can
-    SKIP given min/max footer stats — the layout-quality score: ~0 on a
-    random layout, high on sorted/Z-ordered ones. Driver-side arithmetic
-    over the (small) stats table."""
-    from pyspark.sql import functions as F2
-
-    col_stats = stats.filter(
-        (F2.col("column") == column) & F2.col("min_num").isNotNull()
-    )
-    total = col_stats.count()
-    if total == 0:
-        return 0.0
-    overlapping = col_stats.filter(
-        ~((F2.col("max_num") < lo) | (F2.col("min_num") > hi))
-    ).count()
-    return (total - overlapping) / total

@@ -16,6 +16,6 @@ SF001 = "/root/testdata/sf0.01"
 def spark():
     from opendosm_parquet_to_sqlite_spark.session import get_spark
 
-    s = get_spark(app_name="pytest", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="pytest")
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -158,36 +158,6 @@ def test_column_entropy_key_vs_constant(spark):
     assert out["nul"]["entropy"] == 0.0 and out["nul"]["n_distinct"] == 1
 
 
-def test_schema_diff_detects_evolution(spark):
-    from opendosm_parquet_to_sqlite_spark.plans.audit import schema_diff
-
-    a = spark.createDataFrame([(1, "x", 1.0)], "id long, s string, v double")
-    b = spark.createDataFrame([(1, 2, True)], "id long, v int, extra boolean")
-    d = schema_diff(a, b)
-    assert d["added"] == ["extra"]
-    assert d["removed"] == ["s"]
-    assert d["type_changed"] == [("v", "double", "int")]
-    assert not d["compatible"]
-    same = schema_diff(a, a)
-    assert same["compatible"] and not same["added"] and not same["removed"]
-
-
-def test_schema_diff_nullability_relaxation(spark):
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from opendosm_parquet_to_sqlite_spark.plans.audit import schema_diff
-
-    strict = spark.createDataFrame(
-        [(1,)], StructType([StructField("id", LongType(), nullable=False)])
-    )
-    loose = spark.createDataFrame(
-        [(1,)], StructType([StructField("id", LongType(), nullable=True)])
-    )
-    d = schema_diff(strict, loose)
-    assert d["nullability_relaxed"] == ["id"]
-    assert d["compatible"]  # relaxation is lossless for union
-
-
 @pytest.mark.slow
 def test_cli_explain_reports_plan_facts():
     import json

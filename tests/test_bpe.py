@@ -1,6 +1,6 @@
 """Distributed BPE trainer vs a pure-Python reference implementation of
 the same (public, Sennrich-style) algorithm — identical merge sequence
-under the identical tie-break, plus segmentation round-trip properties."""
+under the identical tie-break, plus the leftmost-greedy merge fold."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import pytest
 
 from opendosm_parquet_to_sqlite_spark.operators.bpe import (
     END_MARK,
-    bpe_segment,
+    _apply_merge,
     bpe_train,
     build_word_vocab,
 )
@@ -84,35 +84,11 @@ def test_bpe_overlapping_pair_is_leftmost_greedy(spark):
     df = spark.createDataFrame([("aaaa aaaa",)], "text string")
     rules = bpe_train(df, "text", n_merges=1, min_freq=1).collect()
     assert (rules[0].left, rules[0].right) == ("a", "a")
-    seg = (
-        bpe_segment(df.limit(1), "text", [("a", "a")])
-        .select("bpe_units")
-        .first()[0]
-    )
+    seg = _apply_merge(build_word_vocab(df, "text"), "a", "a").first().syms
     # per word [a,a,a,a▁]: leftmost pair merges, the next 'a' cannot chain
     # onto the merged token, and the sentinel keeps the final symbol
     # distinct -> [aa, a, a▁] (identical to the reference greedy scan)
-    assert seg == ["aa", "a", "a" + END_MARK] * 2
-
-
-def test_bpe_segment_applies_trained_rules(spark):
-    df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
-    rule_rows = bpe_train(df, "text", n_merges=8).orderBy("rank").collect()
-    rules = [(r.left, r.right) for r in rule_rows]
-    seg = bpe_segment(df, "text", rules).select("text", "bpe_units").collect()
-    _, ref_vocab = _ref_bpe(TEXTS, 8)
-    for row in seg:
-        expect = []
-        for w in re.findall(r"\S+", row.text.lower()):
-            expect.extend(ref_vocab[w])
-        assert row.bpe_units == expect
-    # mass conservation: concatenated units reproduce each word + sentinel
-    for row in seg:
-        joined = "".join(row.bpe_units)
-        rebuilt = "".join(
-            w + END_MARK for w in re.findall(r"\S+", row.text.lower())
-        )
-        assert joined == rebuilt
+    assert seg == ["aa", "a", "a" + END_MARK]
 
 
 def test_bpe_vocab_sentinel(spark):

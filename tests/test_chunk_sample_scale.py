@@ -304,7 +304,7 @@ def test_robust_scale_approx_close_to_exact(spark):
     assert max(diffs) < 0.05  # sketch accuracy=10000 on 5k rows is tight
 
 
-# --- neyman allocation / sample ----------------------------------------------
+# --- neyman allocation -----------------------------------------------------
 
 
 def test_neyman_allocation_favors_large_and_variable_strata(spark):
@@ -312,7 +312,6 @@ def test_neyman_allocation_favors_large_and_variable_strata(spark):
 
     from opendosm_parquet_to_sqlite_spark.operators.sampling import (
         neyman_allocation,
-        neyman_sample,
     )
     from pyspark.sql import functions as F2
 
@@ -343,16 +342,6 @@ def test_neyman_allocation_favors_large_and_variable_strata(spark):
     ).collect()
     for r in tiny:
         assert r.alloc_n <= r.n_rows
-
-    # the draw: realized sizes near allocation, deterministic
-    samp = neyman_sample(df, "s", "id", "v", 1000)
-    sizes = {r["s"]: r["n"] for r in
-             samp.groupBy("s").agg(F2.count("*").alias("n")).collect()}
-    assert "D" not in sizes
-    assert abs(sizes["A"] - alloc["A"].alloc_n) < 0.25 * alloc["A"].alloc_n
-    assert sorted(map(tuple, samp.collect())) == sorted(
-        map(tuple, neyman_sample(df, "s", "id", "v", 1000).collect())
-    )
 
 
 # --- shuffle_for_training -------------------------------------------------------

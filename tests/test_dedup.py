@@ -74,18 +74,6 @@ def test_assert_unique_key(spark):
         dedup.assert_unique_key(df, ["k"])
 
 
-def test_enforce_unique_key_deterministic_survivor(spark):
-    """The survivor per key is the min over non-key columns — identical
-    regardless of partitioning (dropDuplicates would be arbitrary)."""
-    rows = [(1, "b", 2.0), (1, "a", 9.0), (1, "a", 3.0), (2, "z", 1.0)]
-    df = spark.createDataFrame(rows, ["k", "s", "v"])
-    expected = {(1, "a", 3.0), (2, "z", 1.0)}
-    for parts in (1, 3, 7):
-        out = dedup.enforce_unique_key(df.repartition(parts), ["k"])
-        assert out.columns == ["k", "s", "v"]
-        assert {tuple(r) for r in out.collect()} == expected
-
-
 def test_golden_record_per_column_survivorship(spark):
     from opendosm_parquet_to_sqlite_spark.operators.dedup import (
         golden_record,

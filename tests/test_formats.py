@@ -1,75 +1,13 @@
-"""CSV/JSONL ingestion semantics + parquet dataset export."""
+"""Parquet dataset export and schema evolution across parquet writes."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from opendosm_parquet_to_sqlite_spark.sinks.dataset import write_dataset
 from opendosm_parquet_to_sqlite_spark.sources.parquet import load_table
-from opendosm_parquet_to_sqlite_spark.sources.text_formats import (
-    read_csv,
-    read_jsonl,
-    split_rejects,
-)
 
 from .conftest import SF0001
-
-SCHEMA = StructType(
-    [
-        StructField("code", LongType()),
-        StructField("name", StringType()),
-        StructField("price", DoubleType()),
-    ]
-)
-
-
-@pytest.fixture()
-def csv_file(tmp_path):
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "code,name,price\n"
-        "1,milk,5.50\n"
-        "2,bread,abc\n"      # malformed price
-        "3,eggs,9.90\n"
-    )
-    return str(p)
-
-
-def test_csv_permissive_splits_rejects(spark, csv_file):
-    df = read_csv(spark, csv_file, SCHEMA, strict=False)
-    clean, rejects = split_rejects(df)
-    assert sorted(r["code"] for r in clean.collect()) == [1, 3]
-    assert rejects.count() == 1
-    raw = rejects.first()["_corrupt_record"]
-    assert "abc" in raw  # quarantined raw record, reference's skip-with-log
-
-
-def test_csv_strict_aborts(spark, csv_file):
-    df = read_csv(spark, csv_file, SCHEMA, strict=True)
-    with pytest.raises(Exception):  # FAILFAST = the reference's panic
-        df.collect()
-
-
-def test_jsonl_permissive_and_strict(spark, tmp_path):
-    p = tmp_path / "in.jsonl"
-    p.write_text(
-        '{"code": 1, "name": "milk", "price": 5.5}\n'
-        "this is not json\n"
-        '{"code": 3, "name": "eggs", "price": 9.9}\n'
-    )
-    clean, rejects = split_rejects(read_jsonl(spark, str(p), SCHEMA))
-    assert sorted(r["code"] for r in clean.collect()) == [1, 3]
-    assert rejects.count() == 1
-    with pytest.raises(Exception):
-        read_jsonl(spark, str(p), SCHEMA, strict=True).collect()
 
 
 def test_write_dataset_partitioned_and_bounded(spark, tmp_path):
@@ -124,38 +62,3 @@ def test_schema_evolution_merge_read(spark, tmp_path):
         .toString()
     )
     assert "ReadSchema: struct<id:bigint>" in plan
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    from opendosm_parquet_to_sqlite_spark.sources.text_formats import (
-        read_orc,
-        write_orc,
-    )
-
-    path = str(tmp_path / "orc")
-    df = spark.range(1000).withColumn("v", F.col("id") * 3)
-    write_orc(df, path)
-    back = read_orc(spark, path)
-    assert back.count() == 1000
-    assert back.agg(F.sum("v")).collect()[0][0] == 3 * sum(range(1000))
-    # predicate pushdown reaches the ORC scan
-    plan_buf = read_orc(spark, path).filter(F.col("id") > 900)
-    plan = plan_buf._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,900)]" in plan
-    assert plan_buf.count() == 99
-
-
-def test_orc_declared_schema_verifies(spark, tmp_path):
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from opendosm_parquet_to_sqlite_spark.sources.text_formats import (
-        read_orc,
-        write_orc,
-    )
-
-    path = str(tmp_path / "orc2")
-    write_orc(spark.range(10), path)
-    ok = read_orc(
-        spark, path, StructType([StructField("id", LongType())])
-    )
-    assert ok.count() == 10

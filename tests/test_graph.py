@@ -130,15 +130,6 @@ def test_nonconvergence_raises(spark):
         graph.connected_components(df, max_iter=1)
 
 
-def test_cluster_representatives(spark):
-    df = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], ["id_a", "id_b"])
-    comp = graph.connected_components(df)
-    reps = sorted(
-        r["doc_id"] for r in graph.cluster_representatives(comp).collect()
-    )
-    assert reps == [1, 7]
-
-
 def test_corpus_clean_clustered_keeps_one_per_chain(spark):
     """Chain of three near-identical docs (A~B, B~C, A≁C by threshold):
     greedy keeps only A (B and C are each id_b of some pair), while

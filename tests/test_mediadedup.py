@@ -282,75 +282,6 @@ def test_media_dup_clusters_audio_modality_and_bad_modality(spark):
         M.media_dup_clusters(wav, "payload", "doc_id", modality="video")
 
 
-@pytest.mark.slow
-def test_media_fp_index_roundtrip_append_probe(spark, tmp_path):
-    """Persisted fingerprint index: build over a corpus, probe a new
-    batch (re-encodes collide against the index, novel content doesn't),
-    append without retrain, re-probe sees the appended items; parameter
-    mismatch raises instead of silently collapsing recall."""
-    path = str(tmp_path / "fpidx")
-    ids = spark.range(20).withColumnRenamed("id", "doc_id")
-    corpus = M.synth_png_corpus(ids, "doc_id", n_bases=20)  # 20 distinct
-    M.build_media_fp_index(corpus, "payload", "doc_id", path)
-
-    # probe: one re-encode of base 3 (id 103) + one novel image (id 999)
-    probe = spark.createDataFrame(
-        [
-            (103, M.encode_png_gray(M._base_gray(3, 24), level=0)),
-            (999, M.encode_png_gray(M._base_gray(77, 24))),
-        ],
-        "doc_id long, payload binary",
-    )
-    got = {
-        (r.new_id, r.index_id)
-        for r in M.probe_media_fp_index(
-            spark, path, probe, "payload", "doc_id"
-        ).collect()
-    }
-    assert got == {(103, 3)}
-
-    # append the probe batch; a fresh probe of base 77 now hits id 999
-    M.append_media_fp_index(probe, "payload", "doc_id", path)
-    probe2 = spark.createDataFrame(
-        [(555, M.encode_png_gray(M._base_gray(77, 24), level=9))],
-        "doc_id long, payload binary",
-    )
-    got2 = {
-        (r.new_id, r.index_id, r.hamming)
-        for r in M.probe_media_fp_index(
-            spark, path, probe2, "payload", "doc_id"
-        ).collect()
-    }
-    assert got2 == {(555, 999, 0)}
-
-    with pytest.raises(ValueError, match="parameters must match"):
-        M.probe_media_fp_index(
-            spark, path, probe2, "payload", "doc_id", max_hamming=3
-        )
-
-
-@pytest.mark.slow
-def test_media_fp_index_self_probe_excludes_self_pairs(spark, tmp_path):
-    path = str(tmp_path / "fpidx2")
-    ids = spark.range(10).withColumnRenamed("id", "doc_id")
-    corpus = M.synth_png_corpus(ids, "doc_id", n_bases=5)
-    M.build_media_fp_index(corpus, "payload", "doc_id", path)
-    # probing the corpus against its own index = the pair search, one
-    # direction per pair plus the mirrored direction; no (x, x) rows
-    got = {
-        (r.new_id, r.index_id)
-        for r in M.probe_media_fp_index(
-            spark, path, corpus, "payload", "doc_id"
-        ).collect()
-    }
-    assert all(a != b for a, b in got)
-    sym = {(min(a, b), max(a, b)) for a, b in got}
-    expected = {
-        (a, b) for a in range(10) for b in range(a + 1, 10) if a % 5 == b % 5
-    }
-    assert sym == expected
-
-
 def test_media_dup_clusters_pair_volume_is_fingerprint_bounded(spark):
     """The sf1-probe regression pin: clustering a corpus of large
     exact-duplicate groups must NEVER materialize member-level pairs —

@@ -1,11 +1,8 @@
-"""MERGE INTO: relational core (merge_plan) + write-then-swap dataset
-wrapper. Oracle parity for the composed query runs in
-tests/test_oracle_parity.py (shadow oracle merge_upsert); this module
-pins semantics, contract guards, and sink atomicity."""
+"""MERGE INTO: the relational core (merge_plan). Oracle parity for the
+composed query runs in tests/test_oracle_parity.py (shadow oracle
+merge_upsert); this module pins semantics and contract guards."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -91,38 +88,6 @@ def test_missing_column_raises(spark, target):
     upd = spark.createDataFrame([(2, "x")], "k long, name string")
     with pytest.raises(ValueError, match="missing target columns"):
         merge.merge_plan(target, upd, ["k"])
-
-
-def test_dataset_upsert_roundtrip_and_idempotence(spark, target, tmp_path):
-    path = str(tmp_path / "ds")
-    target.write.parquet(path)
-    upd = spark.createDataFrame(
-        [(2, "B", 99.0), (9, "new", 1.0)], "k long, name string, v double"
-    )
-    r1 = merge.merge_upsert_dataset(spark, path, upd, ["k"])
-    assert r1 == {"rows_before": 3, "rows_after": 4}
-    state1 = sorted(map(tuple, spark.read.parquet(path).collect()))
-    # same MERGE applied again: update set already applied -> fixed point
-    r2 = merge.merge_upsert_dataset(spark, path, upd, ["k"])
-    assert r2 == {"rows_before": 4, "rows_after": 4}
-    state2 = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert state1 == state2
-    # no leftover staging dirs
-    assert not os.path.exists(path + ".merge")
-    assert not os.path.exists(path + ".old")
-
-
-def test_dataset_survives_failed_merge(spark, target, tmp_path):
-    """A merge that fails during materialization leaves the standing
-    dataset byte-identical (write-then-swap contract)."""
-    path = str(tmp_path / "ds")
-    target.write.parquet(path)
-    bad = spark.createDataFrame(
-        [(2, "x", 1.0), (2, "y", 2.0)], "k long, name string, v double"
-    )
-    with pytest.raises(Exception):
-        merge.merge_upsert_dataset(spark, path, bad, ["k"])
-    assert sorted(r.k for r in spark.read.parquet(path).collect()) == [1, 2, 3]
 
 
 from hypothesis import given, settings, strategies as st

@@ -468,26 +468,6 @@ def test_decode_media_features_real_png_end_to_end(spark):
     assert out[2]["media_type"] == "fake/decoded"
 
 
-def test_sample_frames_row_expansion(spark):
-    payload = bytes(range(256)) * 2  # 512 bytes → 8 chunks of 64
-    df = spark.createDataFrame([(7, payload)], ["id", "payload"])
-    out = multimodal.sample_frames(df, "payload", "id", frame_bytes=64, stride=2)
-    rows = sorted(out.collect(), key=lambda r: r["frame_idx"])
-    assert [r["frame_idx"] for r in rows] == [0, 2, 4, 6]
-    assert all(r["id"] == 7 for r in rows)
-    assert bytes(rows[0]["frame"]) == payload[:64]
-    assert bytes(rows[1]["frame"]) == payload[128:192]
-
-
-def test_resize_image_deterministic(spark, media):
-    a = multimodal.resize_image(media, "payload", "id", 32, 32).collect()
-    b = multimodal.resize_image(media, "payload", "id", 32, 32).collect()
-    assert sorted((r["id"], bytes(r["resized"])) for r in a) == sorted(
-        (r["id"], bytes(r["resized"])) for r in b
-    )
-    assert all(len(bytes(r["resized"])) == 32 * 32 for r in a)
-
-
 def _wav_bytes(channels=2, rate=44100, bits=16, n_frames=44100) -> bytes:
     """Canonical 44-byte PCM WAV header + silent data."""
     import struct
@@ -528,31 +508,6 @@ def test_binary_from_text_rotating_magic(spark):
     assert out[0][:4] == bytes.fromhex("89504E47") and out[0][4:] == b"zero"
     assert out[1][:4] == bytes.fromhex("FFD8FFE0") and out[1][4:] == b"one"
     assert out[2] == b"two"
-
-
-def test_png_metadata_native_header_parse(spark):
-    import struct
-
-    def png_bytes(w, h):
-        sig = b"\x89PNG\r\n\x1a\n"
-        ihdr = struct.pack(">I", 13) + b"IHDR" + struct.pack(">II", w, h) + b"\x08\x06\x00\x00\x00"
-        return sig + ihdr + b"\x00" * 8
-
-    from opendosm_parquet_to_sqlite_spark.operators.multimodal import png_metadata
-
-    rows = [
-        (1, bytearray(png_bytes(640, 480))),
-        (2, bytearray(png_bytes(1, 1_000_000))),  # >16-bit dims parse fine
-        (3, bytearray(b"\xff\xd8\xff\xe0 not a png")),
-        (4, bytearray(b"\x89PNG\r\n\x1a\n")),  # truncated before IHDR
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r.doc_id: (r.png_width, r.png_height)
-           for r in png_metadata(df, "payload").collect()}
-    assert out[1] == (640, 480)
-    assert out[2] == (1, 1_000_000)
-    assert out[3] == (None, None)
-    assert out[4] == (None, None)
 
 
 # --- decode_fn plug-in contract with a real non-stdlib codec -----------------

@@ -295,8 +295,9 @@ def test_null_dimension_key_aborts(spark, fixture_trio, tmp_path):
 
 
 def test_failed_build_keeps_last_good_artifact(spark, fixture_trio, tmp_path):
-    """A build that fails part-way, in Spark or at the unique index, leaves
-    the published .db and .zip byte-identical and no temporary files."""
+    """A build that fails part-way, in Spark, at the unique index or on a
+    NULL price key, leaves the published .db and .zip byte-identical and
+    no temporary files."""
     from pyspark.sql import functions as F
 
     tables = pipeline.build_tables(
@@ -320,4 +321,25 @@ def test_failed_build_keeps_last_good_artifact(spark, fixture_trio, tmp_path):
     duplicate = dict(tables, items=tables["items"].unionByName(tables["items"]))
     with pytest.raises(ValueError, match="unique key violated"):
         pipeline.build_artifact(duplicate, out, "2024-01")
+    assert {p.name: p.read_bytes() for p in out.iterdir()} == published
+
+    # a NULL item_code in prices: max_by would keep one row for the
+    # NULL-keyed group, so the cleanse fails the run as the reference does
+    d = tmp_path / "nullprice"
+    d.mkdir()
+    prices = pq.read_table(fixture_trio / "pricecatcher_2024-01.parquet")
+    codes = prices.column("item_code").to_pylist()
+    prices = prices.set_column(
+        prices.schema.get_field_index("item_code"), "item_code",
+        pa.array(codes[:-1] + [None], pa.string()),
+    )
+    pq.write_table(prices, d / "pricecatcher_2024-01.parquet")
+    null_key = pipeline.build_tables(
+        spark,
+        prices_path=d / "pricecatcher_2024-01.parquet",
+        premises_path=fixture_trio / "lookup_premise.parquet",
+        items_path=fixture_trio / "lookup_item.parquet",
+    )
+    with pytest.raises(Exception, match="NULL item_code in prices"):
+        pipeline.build_artifact(null_key, out, "2024-01")
     assert {p.name: p.read_bytes() for p in out.iterdir()} == published

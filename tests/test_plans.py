@@ -852,93 +852,7 @@ def test_lof_composed_query_reads_vectors_once_per_knn_leg(spark):
     release_cached()
 
 
-# --- round-9 plan pins: tombstoned probes, targeted compaction, and the six
-# §2.13 round-9 registrations (round-8 verdict item 7) -------------------------
-
-
-def test_ivf_probe_with_tombstones_broadcast_anti_no_extra_shuffle(spark, tmp_path):
-    """A probe against an index with LIVE tombstones anti-joins the
-    deleted-id set as a BROADCAST (the tombstone set is maintenance-
-    bounded small), keeps the dynamic cell pruning, and adds no
-    data-scale exchange: the only hashpartitioning beyond the no-
-    tombstone plan's per-query top-k window is the tombstone-table
-    distinct — tombstone-sized, never corpus-sized."""
-    from pyspark.sql import functions as F
-
-    from opendosm_parquet_to_sqlite_spark.operators.similarity import (
-        build_ivf_index,
-        delete_from_ivf_index,
-        probe_ivf_index,
-    )
-
-    corpus = spark.read.parquet(f"{SF0001}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    build_ivf_index(corpus, path, n_centroids=8)
-    delete_from_ivf_index(spark, path, corpus.limit(5).select("vec_id"))
-    queries = corpus.filter("vec_id < 3").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    df = probe_ivf_index(spark, path, queries, k=3, n_probe=2)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert plan.count("BroadcastHashJoin LeftAnti") == 1
-    assert "SortMergeJoin" not in plan
-    assert "dynamicpruningexpression(cell" in plan
-    # top-k window exchange + tombstone distinct — nothing else
-    assert plan.count("Arguments: hashpartitioning") == 2
-
-
-def test_ivf_compaction_rewrites_only_affected_cell_partitions(spark, tmp_path):
-    """compact_ivf_tombstones stages ONLY the cell partitions that hold
-    dead rows (dynamic partition overwrite): the parquet files of every
-    unaffected cell dir are byte-for-byte untouched on disk after the
-    rewrite — at 100 TB that is the difference between rewriting one
-    cell and rewriting the index."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from opendosm_parquet_to_sqlite_spark.operators.similarity import (
-        build_ivf_index,
-        compact_ivf_tombstones,
-        delete_from_ivf_index,
-    )
-
-    corpus = spark.read.parquet(f"{SF0001}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    build_ivf_index(corpus, path, n_centroids=8)
-    cells = spark.read.parquet(f"{path}/cells")
-    # victims: every row of exactly ONE cell's first two ids
-    victim_cell = cells.groupBy("cell").count().orderBy("cell").first()["cell"]
-    victims = (
-        cells.filter(F.col("cell") == victim_cell)
-        .select("vec_id").limit(2)
-    )
-    def listing(cell_dir):
-        d = f"{path}/cells/cell={cell_dir}"
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)), os.path.getsize(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-    all_cells = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{path}/cells")
-        if d.startswith("cell=")
-    )
-    before = {c: listing(c) for c in all_cells}
-    delete_from_ivf_index(spark, path, victims)
-    res = compact_ivf_tombstones(spark, path, max_tombstone_fraction=0.0001)
-    assert not res["skipped"]
-    assert res["cells_rewritten"] == 1
-    after = {c: listing(c) for c in all_cells}
-    for c in all_cells:
-        if c == victim_cell:
-            assert after[c] != before[c]
-        else:
-            assert after[c] == before[c], f"cell {c} was rewritten needlessly"
+# --- round-9 plan pins: the six §2.13 round-9 registrations -------------------
 
 
 def test_readability_plan_is_exchange_free_native(spark):

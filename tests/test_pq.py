@@ -274,45 +274,3 @@ def test_filtered_ivfadc_probe_respects_allowed_set(spark, emb, tmp_path):
     got_ids = {(r["query_id"], r["neighbor_id"]) for r in out}
     overlap = len(bf_ids & got_ids) / len(bf_ids)
     assert overlap >= 0.9, overlap
-
-
-@pytest.mark.slow
-def test_persisted_ivfpq_delete_and_compact(spark, emb, queries, tmp_path):
-    """Tombstone delete works identically on the compressed (IVFADC)
-    index: deleted ids never surface — from the ADC probe OR the exact
-    rerank path — and compaction rewrites only affected cells while
-    preserving probe results."""
-    path = str(tmp_path / "ivfpq_del")
-    similarity.build_ivfpq_index(emb, path, n_centroids=16, m=16, n_codes=64)
-    pre = similarity.probe_ivfpq_index(
-        spark, path, queries, corpus=emb, k=5, n_probe=16, shortlist=50
-    ).toPandas()
-    victims = sorted(set(pre.neighbor_id))[:5]
-    n = similarity.delete_from_ivf_index(
-        spark,
-        path,
-        spark.createDataFrame([(int(v),) for v in victims], "id long"),
-    )
-    assert n == len(victims)
-    for corpus in (emb, None):  # rerank and codes-only paths both honor it
-        out = similarity.probe_ivfpq_index(
-            spark, path, queries, corpus=corpus, k=5, n_probe=16,
-            shortlist=50,
-        ).toPandas()
-        assert not set(out.neighbor_id) & set(victims)
-        assert set(out.groupby("query_id").size()) == {5}
-    post_del = similarity.probe_ivfpq_index(
-        spark, path, queries, corpus=None, k=5, n_probe=16
-    ).toPandas()
-    res = similarity.compact_ivf_tombstones(
-        spark, path, max_tombstone_fraction=0.0001
-    )
-    assert not res["skipped"] and res["n_tombstoned"] == len(victims)
-    total = spark.read.parquet(f"{path}/cells").count()
-    assert total == emb.count() - len(victims)
-    post_cmp = similarity.probe_ivfpq_index(
-        spark, path, queries, corpus=None, k=5, n_probe=16
-    ).toPandas()
-    a = sorted(zip(post_del.query_id, post_del.neighbor_id))
-    b = sorted(zip(post_cmp.query_id, post_cmp.neighbor_id))
-    assert a == b

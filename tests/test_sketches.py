@@ -176,24 +176,6 @@ def test_cm_overcount_only_and_bounded(spark):
     assert violations <= max(2, int(0.05 * len(true)))
 
 
-def test_cm_merge_equals_whole(spark):
-    """Monoid: sketches of disjoint slices merged cell-wise == the
-    sketch of the union — exactly, not approximately."""
-    rows = [(f"k{i % 50}", i) for i in range(2000)]
-    df = spark.createDataFrame(rows, "item string, i long")
-    whole = aggregates.cm_build(df, "item", width=128, depth=3)
-    parts = [
-        aggregates.cm_build(
-            df.filter(F.col("i") % 3 == j), "item", width=128, depth=3
-        )
-        for j in range(3)
-    ]
-    merged = aggregates.cm_merge(parts)
-    a = sorted(map(tuple, whole.collect()))
-    b = sorted(map(tuple, merged.collect()))
-    assert a == b
-
-
 def test_cm_absent_item_estimates_from_cells(spark):
     """An item never inserted estimates min over its cells — usually 0
     at generous widths, never negative, and still >= its true count (0)."""

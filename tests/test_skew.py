@@ -1,5 +1,6 @@
-"""Skew remedies: salted/sliced twins must be row-identical to the plain
-operators under a synthetic 90%-one-hot-key distribution."""
+"""Keyed operators under a synthetic 90%-one-hot-key distribution: a hot
+key must not change their results, checked against pure-Python
+references."""
 
 from __future__ import annotations
 
@@ -7,12 +8,9 @@ import random
 
 import pytest
 
-from opendosm_parquet_to_sqlite_spark.operators.skew import (
-    batch_profile,
-    rolling_features_sliced,
-    salted_batch_profile,
-)
+from opendosm_parquet_to_sqlite_spark.operators.skew import batch_profile
 from opendosm_parquet_to_sqlite_spark.operators.temporal import (
+    ewma,
     rolling_features,
 )
 
@@ -37,151 +35,105 @@ def skewed(spark):
     return spark.createDataFrame(_skewed_rows(), SCHEMA)
 
 
-def _by_key(df):
-    return {r.key: tuple(r)[1:] for r in df.collect()}
+def test_batch_profile_hot_key_matches_python(spark, skewed):
+    got = {r.key: r for r in batch_profile(skewed, "user_id", "et", "value").collect()}
+    by_key = {}
+    for uid, ts, v in _skewed_rows():
+        by_key.setdefault(str(uid), []).append((ts, v))
+    assert got.keys() == by_key.keys()
+    for key, evs in by_key.items():
+        r, vals = got[key], [v for _, v in evs]
+        n, mean = len(vals), sum(vals) / len(vals)
+        assert r.n_events == n
+        assert abs(r.mean_value - mean) <= 1e-6
+        assert abs(r.m2_value - (sum(v * v for v in vals) - n * mean * mean)) <= 1e-6 * max(1, n)
+        assert (r.min_value, r.max_value) == (min(vals), max(vals))
+        assert (r.last_ts, r.last_value) == max(evs)
 
 
-def test_salted_profile_matches_plain(spark, skewed):
-    plain = _by_key(batch_profile(skewed, "user_id", "et", "value"))
-    for factor in (1, 16):
-        salted = _by_key(
-            salted_batch_profile(
-                skewed, "user_id", "et", "value", salt_factor=factor
-            )
-        )
-        assert salted == plain
+def test_rolling_features_hot_key_matches_python(spark, skewed):
+    window = 3600
+    got = {
+        (r.user_id, r.et): (r.roll_n, r.roll_sum, r.roll_min, r.roll_max)
+        for r in rolling_features(skewed, ["user_id"], "et", "value", window).collect()
+    }
+    rows = _skewed_rows()
+    assert len(got) == len(rows)
+    for uid, et, _ in rows:
+        frame = [v for u, t, v in rows if u == uid and et - window <= t <= et]
+        n, total, lo, hi = got[(uid, et)]
+        assert n == len(frame)
+        assert abs(total - sum(frame)) <= 1e-6
+        assert (lo, hi) == (min(frame), max(frame))
 
 
-def test_salted_profile_matches_plain_with_tiebreak(spark):
-    # duplicate (key, ts) pairs force the tiebreak path
-    rows = [(1, 10, 5.0, "a"), (1, 10, 7.0, "b"), (1, 20, 1.0, "a"),
-            (2, 10, 3.0, "z")]
-    df = spark.createDataFrame(
-        rows, "user_id long, et long, value double, src string"
-    )
-    plain = _by_key(
-        batch_profile(df, "user_id", "et", "value", tiebreak_col="src")
-    )
-    salted = _by_key(
-        salted_batch_profile(
-            df, "user_id", "et", "value", tiebreak_col="src", salt_factor=8
-        )
-    )
-    assert salted == plain
-
-
-def test_sliced_rolling_matches_plain(spark, skewed):
-    def canon(df):
-        return sorted(
-            (r.user_id, r.et, r.roll_n, r.roll_sum, r.roll_mean,
-             r.roll_min, r.roll_max)
-            for r in df.collect()
-        )
-
-    plain = canon(
-        rolling_features(skewed, ["user_id"], "et", "value", 3600)
-    )
-    # slice == window (max replication) and slice >> window (min slices):
-    # both must be row-identical, including frames that straddle a
-    # slice boundary
-    for sl in (3600, 7200, 100_000):
-        got = canon(
-            rolling_features_sliced(
-                skewed, ["user_id"], "et", "value", 3600, sl
-            )
-        )
-        assert got == plain
-
-
-def test_sliced_rolling_boundary_exact(spark):
-    # hand-built boundary band: slice = 100, window = 50; events at
-    # 49/99/100/101 — the 99 row must carry into slice 1 and feed the
-    # frames of 100/101 but emit only its own slice-0 row
+def test_rolling_features_boundary_exact(spark):
+    # window = 50; events at 49/99/100/101: the frame is [et - 50, et]
     rows = [(1, 49, 1.0), (1, 99, 2.0), (1, 100, 4.0), (1, 101, 8.0)]
     df = spark.createDataFrame(rows, SCHEMA)
     got = {
         r.et: (r.roll_n, r.roll_sum)
-        for r in rolling_features_sliced(
-            df, ["user_id"], "et", "value", 50, 100
-        ).collect()
+        for r in rolling_features(df, ["user_id"], "et", "value", 50).collect()
     }
     assert got == {
         49: (1, 1.0),
         99: (2, 3.0),       # 49 within [49, 99]
-        100: (2, 6.0),      # 99 carried across the boundary; 49 aged out
+        100: (2, 6.0),      # 49 aged out
         101: (3, 14.0),     # 99 + 100 + 101 all within [51, 101]
     }
-    assert len(got) == len(rows)  # carry copies emit no rows
 
 
-def test_sliced_rejects_short_slice(spark, skewed):
-    with pytest.raises(ValueError):
-        rolling_features_sliced(skewed, ["user_id"], "et", "value", 100, 99)
+# --- seeded EWMA --------------------------------------------------------------
 
 
-# --- time-sliced seeded EWMA -------------------------------------------------
+def _ewma_py(rows, alpha):
+    """(key, ts) -> ewma, folding in ts order per key."""
+    out, state = {}, {}
+    for k, ts, v in sorted(rows):
+        s = state.get(k)
+        state[k] = s = v if s is None else alpha * v + (1 - alpha) * s
+        out[(k, ts)] = s
+    return out
+
+
+def _assert_ewma_matches_python(spark, rows, alpha):
+    df = spark.createDataFrame(rows, "k string, ts long, value double")
+    got = {(r.k, r.ts): r.ewma for r in ewma(df, "k", "ts", "value", alpha=alpha).collect()}
+    ref = _ewma_py(rows, alpha)
+    assert got.keys() == ref.keys()
+    for key, want in ref.items():
+        assert abs(got[key] - want) <= 1e-6
 
 
 @pytest.mark.slow
-def test_ewma_sliced_row_identical_to_plain(spark):
+def test_ewma_hot_key_matches_python(spark):
     import numpy as np
-
-    from opendosm_parquet_to_sqlite_spark.operators.skew import ewma_sliced
-    from opendosm_parquet_to_sqlite_spark.operators.temporal import ewma
 
     rng = np.random.default_rng(3)
     rows = []
-    # 90%-hot key plus two small ones; ts spans several slice bands
+    # 90%-hot key plus two small ones
     for i in range(900):
         rows.append(("hot", int(i * 10), float(rng.normal())))
     for key in ("a", "b"):
         for i in range(50):
             rows.append((key, int(i * 37), float(rng.normal())))
-    df = spark.createDataFrame(rows, "k string, ts long, value double")
-    plain = sorted(
-        (r.k, r.ts, r.ewma)
-        for r in ewma(df, "k", "ts", "value", alpha=0.25).collect()
-    )
-    sliced = sorted(
-        (r.k, r.ts, r.ewma)
-        for r in ewma_sliced(
-            df, "k", "ts", "value", alpha=0.25, n_slices=5
-        ).collect()
-    )
-    assert sliced == plain
+    _assert_ewma_matches_python(spark, rows, 0.25)
 
 
 @pytest.mark.slow
-def test_ewma_sliced_keys_absent_from_middle_slices(spark):
-    from opendosm_parquet_to_sqlite_spark.operators.skew import ewma_sliced
-    from opendosm_parquet_to_sqlite_spark.operators.temporal import ewma
-
-    # key "gap" has events only in the first and last band: its carry
-    # state must survive the silent middle slices unchanged
+def test_ewma_sparse_key_matches_python(spark):
+    # key "gap" has events only at the two ends of a busy key's span
     rows = [("gap", 0, 10.0), ("gap", 1000, 20.0)]
     rows += [("busy", t, float(t % 7)) for t in range(0, 1001, 50)]
-    df = spark.createDataFrame(rows, "k string, ts long, value double")
-    plain = sorted(
-        (r.k, r.ts, r.ewma)
-        for r in ewma(df, "k", "ts", "value", alpha=0.5).collect()
-    )
-    sliced = sorted(
-        (r.k, r.ts, r.ewma)
-        for r in ewma_sliced(
-            df, "k", "ts", "value", alpha=0.5, n_slices=4
-        ).collect()
-    )
-    assert sliced == plain
+    _assert_ewma_matches_python(spark, rows, 0.5)
 
 
-def test_ewma_sliced_single_slice_and_empty(spark):
-    from opendosm_parquet_to_sqlite_spark.operators.skew import ewma_sliced
-
+def test_ewma_single_row_and_empty(spark):
     df = spark.createDataFrame([("k", 5, 1.0)], "k string, ts long, value double")
-    out = ewma_sliced(df, "k", "ts", "value", n_slices=3).collect()
+    out = ewma(df, "k", "ts", "value").collect()
     assert [(r.k, r.ts, r.ewma) for r in out] == [("k", 5, 1.0)]
     empty = spark.createDataFrame([], "k string, ts long, value double")
-    assert ewma_sliced(empty, "k", "ts", "value", n_slices=3).count() == 0
+    assert ewma(empty, "k", "ts", "value").count() == 0
 
 
 # --- join_size_report --------------------------------------------------------

@@ -226,3 +226,25 @@ def test_failed_merge_leaves_file_and_next_run_applies_day_once(
     stream_prices_to_sqlite(spark, landing, db, ckpt, schema)  # nothing new
     assert _db_rows(db) == applied
 
+
+
+def test_null_price_key_fails_topup_and_leaves_file(spark, tmp_path):
+    """A day file with a NULL key fails the top-up and leaves the artifact
+    byte-identical. SQLite's UNIQUE index treats NULLs as distinct, so an
+    accepted NULL-keyed row would be appended again by every replay."""
+    _month, db = _month_artifact(spark, tmp_path, M1)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _month_file(landing / "day_2024-01-26.parquet", DAY + [
+        (datetime(2024, 1, 26), "101", None, "1.00"),
+    ])
+    schema = spark.read.parquet(str(landing)).schema
+    ckpt = tmp_path / "ckpt"
+    shipped = db.read_bytes()
+
+    for _ in range(2):  # the second run is a replay after checkpoint loss
+        with pytest.raises(Exception, match="NULL item_code in prices"):
+            stream_prices_to_sqlite(spark, landing, db, ckpt, schema)
+        assert db.read_bytes() == shipped
+        assert not db.with_name(db.name + "-journal").exists()
+        shutil.rmtree(ckpt, ignore_errors=True)
