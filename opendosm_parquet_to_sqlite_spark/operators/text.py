@@ -824,12 +824,11 @@ def normalize_text(
     whole-stage codegen. Narrow projection, zero exchanges; NULL text
     stays NULL (and NULL fp), so no row silently appears or vanishes.
     """
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     # no type hints: `from __future__ import annotations` stringifies
-    # them and the locally-imported `pd` alias is unresolvable to
-    # Spark's hint inference — pass series-to-series explicitly
+    # them, which Spark's hint inference cannot resolve here — pass
+    # series-to-series explicitly
     def _nfc(vs):
         import unicodedata
 
@@ -1131,7 +1130,6 @@ def compression_ratio(
     each batch), zero exchanges — the scan's narrow map.  Ratios can be
     computed per partition at any scale; nothing global.
     """
-    import pandas as pd  # noqa: F401  (Arrow batch type)
     from pyspark.sql.functions import pandas_udf
 
     lvl = int(level)

@@ -6,15 +6,19 @@ switching to this engine keeps that workflow: register the same table
 names as temp views and point spark.sql at them — Catalyst plans the same
 joins/filters the SQLite indexes were built for, except distributed.
 
-Views are lazy plan aliases: registration costs nothing until a query
-runs, and every registered view benefits from pushdown/pruning exactly
-like the DataFrame API (it IS the same plan representation).
+Like the reference's artifact, the views are built once: registration
+cleanses the three files, applies the flagship dedup, and caches each
+table, so a query reads the in-memory tables instead of re-scanning the
+parquet and re-running cleanse and the dedup shuffle. A registration is
+therefore a snapshot of the files as they were when it ran; register again
+after the sources change, which replaces the snapshot and frees the old one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import dedup
 from ..sources.parquet import load_tables
 from .pipeline import build_tables
 
@@ -39,13 +43,36 @@ def register_pricecatcher_views(
 ) -> dict[str, DataFrame]:
     """Expose the reference's three OUTPUT tables (cleansed, flagship
     dedup applied to prices) as views named exactly as in its SQLite DDL
-    (src/main.rs:193,197,203) — existing consumer SQL ports verbatim."""
-    tables = build_tables(
-        spark,
-        prices_path=prices_path,
-        premises_path=premises_path,
-        items_path=items_path,
-    )
+    (src/main.rs:193,197,203) — existing consumer SQL ports verbatim.
+
+    Each table is cached and filled by one job. For the two dimensions that
+    job is the unique-key check the reference's UNIQUE indexes make
+    (src/main.rs:198,204), so a duplicate or NULL premise_code/item_code
+    raises instead of double-counting in every join. The previous
+    registration's views and caches are dropped first; a registration that
+    raises leaves no views behind. Returns the cached tables.
+    """
+    for name in ("prices", "premises", "items"):
+        # Also uncaches the view's plan; the new read of the same paths would
+        # otherwise be served from the old snapshot's cache.
+        spark.catalog.dropTempView(name)
+    tables = {
+        name: df.persist()
+        for name, df in build_tables(
+            spark,
+            prices_path=prices_path,
+            premises_path=premises_path,
+            items_path=items_path,
+        ).items()
+    }
+    try:
+        tables["prices"].count()
+        dedup.assert_unique_key(tables["premises"], ["premise_code"])
+        dedup.assert_unique_key(tables["items"], ["item_code"])
+    except Exception:
+        for df in tables.values():
+            df.unpersist()
+        raise
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables

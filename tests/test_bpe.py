@@ -7,8 +7,6 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-import pytest
-
 from opendosm_parquet_to_sqlite_spark.operators.bpe import (
     END_MARK,
     _apply_merge,

@@ -1,4 +1,4 @@
-"""Parquet dataset export and schema evolution across parquet writes."""
+"""Parquet dataset export."""
 
 from __future__ import annotations
 
@@ -30,35 +30,3 @@ def test_write_dataset_partitioned_and_bounded(spark, tmp_path):
     some_day = tmp_path / "ds" / days[0]
     for f in some_day.glob("*.parquet"):
         assert pq.read_metadata(f).num_rows <= 100
-
-
-def test_schema_evolution_merge_read(spark, tmp_path):
-    """Schema evolution across incremental writes: old files lack a
-    column the new files carry. mergeSchema reconciles the footers into
-    the union schema with NULL backfill — the guard the reference lacks
-    entirely (its positional access would silently corrupt on any
-    upstream schema change, SURVEY 1.2)."""
-    p = str(tmp_path / "evolving")
-    old = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, name string"
-    )
-    old.write.parquet(p)
-    new = spark.createDataFrame(
-        [(3, "c", 1.5), (4, "d", 2.5)], "id long, name string, score double"
-    )
-    new.write.mode("append").parquet(p)
-
-    merged = spark.read.option("mergeSchema", "true").parquet(p)
-    assert set(merged.columns) == {"id", "name", "score"}
-    rows = {r.id: (r.name, r.score) for r in merged.collect()}
-    assert rows[1] == ("a", None)  # old rows: NULL backfill, not garbage
-    assert rows[3] == ("c", 1.5)
-    assert merged.count() == 4
-    # column pruning still reaches the scan on the merged schema
-    plan = (
-        merged.select("id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ReadSchema: struct<id:bigint>" in plan

@@ -4,7 +4,6 @@ clustered corpus_clean mode."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from opendosm_parquet_to_sqlite_spark.operators import corpus, graph
 

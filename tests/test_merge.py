@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.utils import PythonException
 
 from opendosm_parquet_to_sqlite_spark.operators import merge
 

@@ -22,8 +22,6 @@ REPO = Path(__file__).resolve().parent.parent
 PACKAGE = "opendosm_parquet_to_sqlite_spark"
 
 ALLOWED = {
-    "operators.dedup.assert_unique_key":
-        "perfbench's instrument wraps it by name (unique.check_s)",
     "plans.audit.assert_plan":
         "test helper: pins the physical plans of live queries",
     "operators.graph._persistent_rdd_ids":

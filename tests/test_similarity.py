@@ -285,8 +285,6 @@ def test_block_scorer_tiling_is_exact(spark, clustered):
         _block_pair_scorer,
     )
 
-    import pandas as pd
-
     g = clustered.toPandas()
     whole = _block_pair_scorer("vec_id", "embedding", 0.99, tile=10_000)(
         (), g

@@ -1,17 +1,94 @@
 """SQL-surface tests: consumer SQL written for the reference's SQLite
-artifact runs unchanged against the registered Spark views."""
+artifact runs unchanged against the registered Spark views, which read the
+tables cached at registration."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import subprocess
+import sys
+from datetime import datetime
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from opendosm_parquet_to_sqlite_spark.caching import release_cached
 from opendosm_parquet_to_sqlite_spark.plans.sql_surface import (
     register_pricecatcher_views,
     register_testdata_views,
 )
-from opendosm_parquet_to_sqlite_spark.sources.parquet import load_table
 
-from .conftest import SF0001
+from .conftest import REPO, SF0001
+
+CONSUMER_SQL = """
+    SELECT p.date, pr.premise, i.item, p.price
+    FROM prices p
+    JOIN premises pr ON p.premise_code = pr.premise_code
+    JOIN items i ON p.item_code = i.item_code
+    WHERE pr.state = 'Selangor'
+"""
+
+
+def _write_sources(
+    d, prices=((datetime(2024, 1, 1), "5.00"), (datetime(2024, 1, 9), "6.00")),
+    premise_codes=("101.0",), item_codes=("10",),
+):
+    """The three source files, codes typed as upstream often ships them
+    (strings, premise codes as floats). Every price row is (101, 10)."""
+    d.mkdir(exist_ok=True)
+    n, m = len(premise_codes), len(item_codes)
+    pq.write_table(pa.table({
+        "date": pa.array([p[0] for p in prices], pa.timestamp("us")),
+        "premise_code": pa.array(["101"] * len(prices)),
+        "item_code": pa.array(["10"] * len(prices)),
+        "price": pa.array([p[1] for p in prices]),
+    }), d / "prices.parquet")
+    pq.write_table(pa.table({
+        "premise_code": pa.array(list(premise_codes)),
+        "premise": pa.array(["Shop"] * n),
+        "address": pa.array(["1 Rd"] * n),
+        "premise_type": pa.array(["grocer"] * n),
+        "state": pa.array(["Selangor"] * n),
+        "district": pa.array(["PJ"] * n),
+    }), d / "premises.parquet")
+    pq.write_table(pa.table({
+        "item_code": pa.array(list(item_codes), pa.string()),
+        "item": pa.array(["Milk"] * m),
+        "unit": pa.array(["1l"] * m),
+        "item_group": pa.array(["dairy"] * m),
+        "item_category": pa.array(["drink"] * m),
+    }), d / "items.parquet")
+
+
+def _register(spark, d):
+    return register_pricecatcher_views(
+        spark,
+        prices_path=str(d / "prices.parquet"),
+        premises_path=str(d / "premises.parquet"),
+        items_path=str(d / "items.parquet"),
+    )
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _scan_leaves(df) -> list[str]:
+    """Node names of the executed plan's leaves, looking through adaptive
+    execution and its query stages (run the query first)."""
+
+    def leaves(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return leaves(node.executedPlan())
+        if "QueryStage" in name:
+            return leaves(node.plan())
+        kids = node.children()
+        if kids.isEmpty():
+            return [name]
+        return [n for i in range(kids.size()) for n in leaves(kids.apply(i))]
+
+    return leaves(df._jdf.queryExecution().executedPlan())
 
 
 def test_testdata_views_queryable_by_sql(spark):
@@ -30,50 +107,87 @@ def test_testdata_views_queryable_by_sql(spark):
 def test_pricecatcher_consumer_sql_ports_verbatim(spark, tmp_path):
     """The exact consumer query shape the reference's indexes were built
     for (filter by state, join both dims) runs against the views."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from datetime import datetime
-
-    d = tmp_path / "src"
-    d.mkdir()
-    pq.write_table(pa.table({
-        "date": pa.array([datetime(2024, 1, 1), datetime(2024, 1, 9)], pa.timestamp("us")),
-        "premise_code": pa.array(["101", "101"]),
-        "item_code": pa.array(["10", "10"]),
-        "price": pa.array(["5.00", "6.00"]),
-    }), d / "prices.parquet")
-    pq.write_table(pa.table({
-        "premise_code": pa.array(["101.0"]),
-        "premise": pa.array(["Shop"]),
-        "address": pa.array(["1 Rd"]),
-        "premise_type": pa.array(["grocer"]),
-        "state": pa.array(["Selangor"]),
-        "district": pa.array(["PJ"]),
-    }), d / "premises.parquet")
-    pq.write_table(pa.table({
-        "item_code": pa.array(["10"]),
-        "item": pa.array(["Milk"]),
-        "unit": pa.array(["1l"]),
-        "item_group": pa.array(["dairy"]),
-        "item_category": pa.array(["drink"]),
-    }), d / "items.parquet")
-
-    register_pricecatcher_views(
-        spark,
-        prices_path=str(d / "prices.parquet"),
-        premises_path=str(d / "premises.parquet"),
-        items_path=str(d / "items.parquet"),
-    )
-    got = spark.sql(
-        """
-        SELECT p.date, pr.premise, i.item, p.price
-        FROM prices p
-        JOIN premises pr ON p.premise_code = pr.premise_code
-        JOIN items i ON p.item_code = i.item_code
-        WHERE pr.state = 'Selangor'
-        """
-    ).collect()
+    _write_sources(tmp_path / "src")
+    _register(spark, tmp_path / "src")
+    got = spark.sql(CONSUMER_SQL).collect()
     assert len(got) == 1
     assert (got[0]["date"], got[0]["premise"], got[0]["item"], got[0]["price"]) == (
         "2024-01-09", "Shop", "Milk", 6.0
     )
+
+
+def test_queries_read_the_cache_not_the_parquet(spark, tmp_path):
+    """A consumer query scans the tables cached at registration: no
+    parquet scan, so no cleanse and no dedup shuffle per query."""
+    _write_sources(tmp_path / "src")
+    _register(spark, tmp_path / "src")
+    df = spark.sql(CONSUMER_SQL)
+    df.collect()
+    leaves = _scan_leaves(df)
+    assert leaves and set(leaves) == {"InMemoryTableScan"}, leaves
+
+
+def test_views_keep_their_cache_across_release_cached(spark, tmp_path):
+    """release_cached() frees operator scratch persists, not the views."""
+    _write_sources(tmp_path / "src")
+    _register(spark, tmp_path / "src")
+    release_cached()
+    assert all(spark.catalog.isCached(n) for n in ("prices", "premises", "items"))
+    df = spark.sql(CONSUMER_SQL)
+    assert len(df.collect()) == 1
+    assert set(_scan_leaves(df)) == {"InMemoryTableScan"}
+
+
+def test_reregistering_reads_the_new_month_and_frees_the_old(spark, tmp_path):
+    """A registration is a snapshot: after the month file is replaced, a
+    new registration serves the new champion, and the old snapshot's
+    caches are freed rather than left beside the new ones."""
+    d = tmp_path / "src"
+    _write_sources(d)
+    _register(spark, d)
+    cached = _persistent_rdds(spark)
+    assert spark.sql("SELECT price FROM prices").collect()[0]["price"] == 6.0
+
+    _write_sources(d, prices=(
+        (datetime(2024, 1, 9), "6.00"), (datetime(2024, 1, 20), "7.50"),
+    ))
+    _register(spark, d)
+    got = spark.sql(CONSUMER_SQL).collect()
+    assert [(r["date"], r["price"]) for r in got] == [("2024-01-20", 7.5)]
+    assert _persistent_rdds(spark) == cached
+
+
+@pytest.mark.parametrize(
+    "premise_codes, item_codes, key",
+    [
+        (("101", "101.0"), ("10",), "premise_code"),  # one premise, twice
+        (("101.0",), ("10", None), "item_code"),  # a NULL item key
+    ],
+)
+def test_dimension_key_violation_fails_registration(
+    spark, tmp_path, premise_codes, item_codes, key
+):
+    """The views keep the artifact's UNIQUE-index contract on the
+    dimension keys (src/main.rs:198,204): a duplicate or NULL key raises
+    instead of double-counting in every join, and leaves no views or
+    caches behind."""
+    d = tmp_path / "src"
+    _write_sources(d)
+    _register(spark, d)
+    cached = _persistent_rdds(spark)
+    _write_sources(d, premise_codes=premise_codes, item_codes=item_codes)
+    with pytest.raises(ValueError, match=key):
+        _register(spark, d)
+    assert not any(spark.catalog.tableExists(n) for n in ("prices", "premises", "items"))
+    assert _persistent_rdds(spark) == cached - 3
+
+
+def test_product_imports_do_not_load_the_query_registry():
+    """The product entry points import without the 249-query registry."""
+    code = (
+        "import sys\n"
+        "import opendosm_parquet_to_sqlite_spark.plans.pipeline\n"
+        "import opendosm_parquet_to_sqlite_spark.plans.sql_surface\n"
+        "assert 'opendosm_parquet_to_sqlite_spark.plans.queries' not in sys.modules\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True)
