@@ -1,10 +1,17 @@
 """CLI entry point: `python -m opendosm_parquet_to_sqlite_spark [--latest]`.
 
 Mirrors the reference binary's interface (src/main.rs:159-189): pick a
-PriceCatcher month (newest with --latest, or an explicit --month/--choice),
-build the SQLite artifact, package the zip. Exit code 0 when the cache was
-fresh and the rebuild was skipped (the reference exits 1 there — a failure
-code for a success condition, src/main.rs:243).
+PriceCatcher month, build the SQLite artifact, package the zip. The flags:
+
+  --latest | --month KEY | --choice N   which month (newest by default)
+  --out-dir DIR                         where the .db and .zip go
+  --cache-dir DIR                       the revalidating download cache
+  --base-url URL                        where the three sources are served
+  --force                               rebuild even if every source was fresh
+
+Exit code 0 when the cache was fresh and the rebuild was skipped (the
+reference exits 1 there — a failure code for a success condition,
+src/main.rs:243).
 """
 
 from __future__ import annotations
@@ -12,93 +19,6 @@ from __future__ import annotations
 import argparse
 import logging
 import sys
-
-
-def _prepare_corpus(args) -> int:
-    """`--prepare-corpus docs.parquet --corpus-out out/`: run the
-    end-to-end training-data pipeline (scrub → gates → dedup →
-    decontaminate → mix/split → pack) and write a split-partitioned
-    parquet dataset."""
-    from pyspark.sql import functions as F
-
-    from .caching import release_cached
-    from .operators.corpus import prepare_training_data
-    from .session import get_spark
-    from .sinks.dataset import write_dataset
-
-    spark = get_spark(app_name="prepare-corpus")
-    docs = spark.read.parquet(args.prepare_corpus)
-    if args.benchmark:
-        bench = spark.read.parquet(args.benchmark)
-        cand = docs
-    else:
-        # no eval set supplied: hold out a deterministic 1% as benchmark
-        bench = docs.filter(F.col("doc_id") % 97 == 0)
-        cand = docs.filter(F.col("doc_id") % 97 != 0)
-    out = prepare_training_data(
-        cand.select("doc_id", "source", "text"),
-        bench,
-        "text",
-        "doc_id",
-        "source",
-        rates={},
-        default_rate=args.sample_rate,
-        budget=args.budget,
-    )
-    write_dataset(
-        out,
-        args.corpus_out,
-        partition_by=["split"],
-        sort_within_by=["source", "block", "seq_in_block"],
-    )
-    n = spark.read.parquet(args.corpus_out).count()
-    release_cached()
-    print(f"wrote {n} packed rows → {args.corpus_out}")
-    return 0
-
-
-def _release_gate(args) -> int:
-    """`--release-gate docs.parquet`: run the five-check ship/no-ship
-    checklist and exit nonzero when any check fails — the CI hook form
-    of operators.corpus.release_gate."""
-    from .caching import release_cached
-    from .operators.corpus import release_gate
-    from .session import get_spark
-
-    spark = get_spark(app_name="release-gate")
-    docs = spark.read.parquet(args.release_gate)
-    rows = release_gate(docs, "text", "doc_id").collect()
-    failed = [r for r in rows if not r["pass"]]
-    for r in rows:
-        status = "PASS" if r["pass"] else "FAIL"
-        print(
-            f"{status} {r['check']}: {r['value']} "
-            f"(threshold {r['threshold']})"
-        )
-    release_cached()
-    return 1 if failed else 0
-
-
-def _explain(args) -> int:
-    """--explain QUERY: the plan-audit CLI — prints plan_report() facts
-    (exchanges, joins, pushed filters, codegen spans, Python presence)
-    as one JSON object so plan regressions are greppable in CI without
-    reading .explain() trees."""
-    import json
-
-    from .plans.audit import plan_report
-    from .plans.queries import QUERIES
-    from .session import get_spark
-
-    if args.explain not in QUERIES:
-        print(f"unknown query {args.explain!r}; registered: "
-              f"{', '.join(sorted(QUERIES))}", file=sys.stderr)
-        return 2
-    spark = get_spark(app_name="explain")
-    spark.sparkContext.setLogLevel("ERROR")
-    rep = plan_report(QUERIES[args.explain](spark, args.sf_dir))
-    print(json.dumps(rep, indent=1, sort_keys=True))
-    return 0
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -111,42 +31,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--cache-dir", default="./__cached__")
     p.add_argument("--base-url", default="https://storage.data.gov.my")
     p.add_argument("--force", action="store_true", help="rebuild even if fresh")
-    p.add_argument(
-        "--prepare-corpus",
-        metavar="DOCS_PARQUET",
-        help="run the training-data pipeline over a documents parquet "
-        "(columns doc_id, source, text) instead of the PriceCatcher ETL",
-    )
-    p.add_argument("--benchmark", help="eval-set parquet for decontamination")
-    p.add_argument(
-        "--release-gate",
-        metavar="DOCS_PARQUET",
-        help="run the ship/no-ship checklist on a corpus; exit 1 on any "
-        "failed check",
-    )
-    p.add_argument("--corpus-out", default="./corpus_out")
-    p.add_argument("--sample-rate", type=float, default=1.0)
-    p.add_argument("--budget", type=int, default=2048)
-    p.add_argument(
-        "--explain",
-        metavar="QUERY",
-        help="print the physical-plan audit (JSON) for a registered "
-        "query and exit — the shuffle/broadcast/pushdown facts "
-        "PLANS.md documents, live from the current build",
-    )
-    p.add_argument(
-        "--sf-dir", default="/root/testdata/sf0.001",
-        help="parquet directory --explain plans against",
-    )
     args = p.parse_args(argv)
 
     logging.basicConfig(level=logging.INFO)
-    if args.explain:
-        return _explain(args)
-    if args.release_gate:
-        return _release_gate(args)
-    if args.prepare_corpus:
-        return _prepare_corpus(args)
     from .plans.pipeline import run_pipeline
     from .session import get_spark
     from .sources.catalog import discover_months, pick_month

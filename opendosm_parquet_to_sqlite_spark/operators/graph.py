@@ -55,11 +55,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _persistent_rdd_ids(spark: SparkSession) -> set:
-    """Ids of all currently persisted RDDs (JVM-side registry)."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-
 def _ckpt_ids(df: DataFrame) -> set:
     """The id of the RDD backing a (local)checkpointed DataFrame, read
     straight off its LogicalRDD plan node.

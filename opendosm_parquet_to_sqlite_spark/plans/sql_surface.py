@@ -19,20 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import dedup
-from ..sources.parquet import load_tables
 from .pipeline import build_tables
-
-
-def register_testdata_views(
-    spark: SparkSession, sf_dir: str, *names: str
-) -> list[str]:
-    """Expose the testdata tables (region/nation/.../embeddings) as temp
-    views so spark.sql() queries them by name — the same names the DuckDB
-    oracle uses, so any oracle SQL in this repo ALSO runs on Spark."""
-    tables = load_tables(spark, sf_dir, *names)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return sorted(tables)
 
 
 def register_pricecatcher_views(

@@ -11,6 +11,8 @@ multi-executor cluster and merely *tested* on local[N]:
   cluster overrides — AQE coalesces down, so oversizing is safe,
   undersizing is not).
 - Arrow enabled for the (rare) pandas-UDF paths and driver interchange.
+- Driver memory from driver_memory(): the SPARK_GRAFT_DRIVER_MEM override,
+  else min(16 GiB, three quarters of physical RAM).
 - Session timezone pinned to UTC so date formatting is deterministic and
   matches the DuckDB oracle byte-for-byte.
 """
@@ -26,6 +28,14 @@ def task_cpus() -> int:
     """Task threads for local[N] and the shuffle partition count:
     SPARK_GRAFT_CPUS if set, else the CPUs this process may run on."""
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """spark.driver.memory: SPARK_GRAFT_DRIVER_MEM if set, else the smaller
+    of 16 GiB and three quarters of physical RAM, in whole MiB."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    default_mib = min(16 << 30, physical * 3 // 4) >> 20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{default_mib}m"
 
 
 def get_spark(
@@ -76,17 +86,18 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # Dimensions in this workload are tiny; keep default 10m threshold,
         # broadcast() hints are applied explicitly at join sites anyway.
-        # 16g: a long-lived session that runs hundreds of distinct query
+        # Up to 16g: a long-lived session that runs hundreds of distinct query
         # plans in one JVM accumulates un-reaped broadcast blocks +
         # codegen classes between GCs; at 8g the ~190-query bench suite
         # ran the heap to its ceiling (committed 7.6g) and the first
         # allocation-heavy query after the suite paid a multi-second
         # GC/cleanup storm (round-7 contamination_bloom "4.28x" — 0.9x
         # isolated). Headroom keeps old-gen pressure off the timings; a
-        # real cluster sizes the driver independently anyway. Still open:
-        # 16g ignores the host's memory, so small boxes must set
-        # SPARK_GRAFT_DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # real cluster sizes the driver independently anyway. The default
+        # is capped at three quarters of physical RAM (driver_memory()), so
+        # a box smaller than 16g still leaves room for the Python driver
+        # and the OS.
+        .config("spark.driver.memory", driver_memory())
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -56,13 +56,15 @@ def _create_table(con: sqlite3.Connection, table: str, schema: StructType) -> No
     con.execute(table_ddl(table, schema))
 
 
-def _insert_rows(
-    con: sqlite3.Connection, sql: str, rows, batch_rows: int = 10_000
-) -> None:
-    """executemany `sql` over an iterable of row tuples, `batch_rows` at a
+# Rows per executemany call in _insert_rows.
+BATCH_ROWS = 10_000
+
+
+def _insert_rows(con: sqlite3.Connection, sql: str, rows) -> None:
+    """executemany `sql` over an iterable of row tuples, BATCH_ROWS at a
     time, so memory holds one batch, never the whole iterable."""
     it = iter(rows)
-    while batch := list(islice(it, batch_rows)):
+    while batch := list(islice(it, BATCH_ROWS)):
         con.executemany(sql, batch)
 
 
@@ -86,7 +88,6 @@ def write_sqlite(
     tables: dict[str, DataFrame],
     db_path: str | Path,
     indexes: dict[str, list[tuple[str, bool]]] | None = None,
-    batch_rows: int = 10_000,
 ) -> dict[str, int]:
     """Write DataFrames into one SQLite file, streaming via toLocalIterator.
     Returns the number of rows inserted per table.
@@ -121,9 +122,7 @@ def write_sqlite(
             insert = f'INSERT INTO "{table}" VALUES ({placeholders})'
             out = _stringify_temporals(df)
             before = con.total_changes
-            _insert_rows(
-                con, insert, out.toLocalIterator(prefetchPartitions=True), batch_rows
-            )
+            _insert_rows(con, insert, out.toLocalIterator(prefetchPartitions=True))
             con.commit()
             counts[table] = con.total_changes - before
         for table, specs in (indexes or {}).items():

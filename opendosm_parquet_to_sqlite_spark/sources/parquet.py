@@ -82,8 +82,3 @@ def load_table(
                     ),
                 )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    use = names or tuple(TESTDATA_SCHEMAS)
-    return {n: load_table(spark, sf_dir, n) for n in use}

@@ -1,14 +1,12 @@
-"""Physical-plan audit as a first-class API — the programmatic form of
-the discipline PLANS.md applies by hand and tests/test_plans.py pins per
-query: before a plan ships to a 1000-executor cluster, count its
-exchanges, check its joins broadcast where they should, and verify
-filters/pruning actually reached the scans.
+"""Physical-plan audit for tests: the programmatic form of the discipline
+PLANS.md applies by hand and tests/test_plans.py pins per query. Count a
+plan's exchanges, check its joins broadcast where they should, and verify
+that filters and pruning reached the scans.
 
-The reference has no optimizer to audit (its engine is SQLite,
-src/main.rs:252-278); on Spark the physical plan IS the cost model, and
-regressions arrive silently — a dropped broadcast hint, a lost partition
-filter, a window that stopped sharing an exchange. plan_report turns
-"read the explain output" into assertable numbers.
+On Spark the physical plan is the cost model, and regressions arrive
+silently: a dropped broadcast hint, a lost partition filter, a window that
+stopped sharing an exchange. plan_report turns "read the explain output"
+into assertable numbers.
 """
 
 from __future__ import annotations

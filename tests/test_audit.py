@@ -1,14 +1,14 @@
-"""plans.audit: the programmatic plan-shape API. Sanity: its counts
-agree with the hand-pinned facts in tests/test_plans.py for known
-queries, and assert_plan raises usefully."""
+"""tests/plan_audit.py, the plan-shape helper: its counts agree with the
+hand-pinned facts in tests/test_plans.py for known queries, and
+assert_plan raises usefully."""
 
 from __future__ import annotations
 
 import pytest
 
-from opendosm_parquet_to_sqlite_spark.plans import audit
 from opendosm_parquet_to_sqlite_spark.plans.queries import QUERIES
 
+from . import plan_audit as audit
 from .conftest import SF0001
 
 
@@ -157,27 +157,3 @@ def test_column_entropy_key_vs_constant(spark):
     # NULL is a category, not a hole: all-NULL column reads constant
     assert out["nul"]["entropy"] == 0.0 and out["nul"]["n_distinct"] == 1
 
-
-@pytest.mark.slow
-def test_cli_explain_reports_plan_facts():
-    import json
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "-m", "opendosm_parquet_to_sqlite_spark",
-         "--explain", "dedup_exact"],
-        capture_output=True, text=True, timeout=240,
-        cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-500:]
-    rep = json.loads(out.stdout[out.stdout.index("{"):])
-    assert rep["n_cartesian"] == 0 and "scans" in rep
-
-    bad = subprocess.run(
-        [sys.executable, "-m", "opendosm_parquet_to_sqlite_spark",
-         "--explain", "nope"],
-        capture_output=True, text=True, timeout=120,
-        cwd="/root/repo",
-    )
-    assert bad.returncode == 2 and "unknown query" in bad.stderr

@@ -119,7 +119,7 @@ def test_preference_pairs_min_margin_gate(spark):
 
 
 def test_preference_pairs_single_partial_agg_plan(spark):
-    from opendosm_parquet_to_sqlite_spark.plans.audit import plan_report
+    from .plan_audit import plan_report
 
     df = spark.createDataFrame(
         [("g", i, float(i % 7)) for i in range(50)],

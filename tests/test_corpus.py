@@ -93,26 +93,6 @@ def test_release_gate_passes_clean_corpus(spark):
     assert all(r["pass"] for r in out.collect())
 
 
-def test_release_gate_cli(spark, tmp_path):
-    """--release-gate prints verdicts and exits 1 on failure, 0 on pass."""
-    from opendosm_parquet_to_sqlite_spark.__main__ import main
-
-    good = "the quick brown fox jumps over the lazy dog and runs to a river"
-    ok_path = str(tmp_path / "ok")
-    spark.createDataFrame(
-        [(i, f"{good} v{i}") for i in range(200)],
-        "doc_id long, text string",
-    ).write.parquet(ok_path)
-    assert main(["--release-gate", ok_path]) == 0
-
-    bad_path = str(tmp_path / "bad")
-    spark.createDataFrame(
-        [(i, "dup dup dup") for i in range(200)],
-        "doc_id long, text string",
-    ).write.parquet(bad_path)
-    assert main(["--release-gate", bad_path]) == 1
-
-
 # --- quality_percentile_gate ---------------------------------------------------
 
 

@@ -214,6 +214,8 @@ def test_prepare_training_data_semantics(spark, docs):
         budget=64, block_size=128,
     ).collect()
     assert out, "pipeline produced no training rows"
+    splits = {r.split for r in out}
+    assert splits <= {"train", "val", "test"} and "train" in splits
     # sequences never mix splits or sources (leak guard), and the greedy
     # budget invariant holds: sequence total minus its last doc < budget
     by_seq: dict[tuple, list] = {}
@@ -252,35 +254,6 @@ def test_repetition_profile_flags_degenerate_docs(spark):
     assert out[2].repetition_ok == 1
     assert out[2].distinct_ratio == 1.0
     assert out[3].n_tokens == 0 and out[3].repetition_ok == 0
-
-
-# --- CLI: --prepare-corpus ---------------------------------------------------
-
-
-@pytest.mark.slow
-def test_cli_prepare_corpus_writes_split_dataset(spark, tmp_path):
-    """python -m … --prepare-corpus runs the end-to-end pipeline and writes
-    a split-partitioned dataset (exercised in-process via main())."""
-    from opendosm_parquet_to_sqlite_spark.__main__ import main
-
-    out = str(tmp_path / "corpus_out")
-    rc = main(
-        [
-            "--prepare-corpus", f"{SF0001}/documents.parquet",
-            "--corpus-out", out,
-            "--sample-rate", "1.0",
-            "--budget", "256",
-        ]
-    )
-    assert rc == 0
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    splits = {r.split for r in got.select("split").distinct().collect()}
-    assert splits <= {"train", "val", "test"} and "train" in splits
-    # hive partitioning by split is real (directories, not a column file)
-    import os
-
-    assert any(d.startswith("split=") for d in os.listdir(out))
 
 
 # --- incremental ingest ------------------------------------------------------

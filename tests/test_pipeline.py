@@ -17,6 +17,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from opendosm_parquet_to_sqlite_spark.__main__ import main
 from opendosm_parquet_to_sqlite_spark.plans import pipeline
 from opendosm_parquet_to_sqlite_spark.sources import cache as cache_mod
 
@@ -202,6 +203,43 @@ def test_run_pipeline_offline_with_early_exit(spark, fixture_trio, tmp_path, mon
 
     r3 = pipeline.run_pipeline(spark, out, cache_dir, month="2024-01", force=True)
     assert not r3.skipped and r3.row_counts == r1.row_counts
+
+
+def test_cli_builds_skips_when_fresh_and_force_rebuilds(
+    spark, fixture_trio, tmp_path, capsys
+):
+    """The product CLI, offline over file:// sources laid out as the real
+    host serves them: the first run builds the .db and the .zip, a second
+    run finds every source fresh and leaves the artifact alone, --force
+    rebuilds it."""
+    served = tmp_path / "served"
+    served.mkdir()
+    fixture_trio.rename(served / "pricecatcher")
+    out = tmp_path / "out"
+    argv = [
+        "--month", "2024-01", "--base-url", f"file://{served}",
+        "--out-dir", str(out), "--cache-dir", str(tmp_path / "cache"),
+    ]
+    db, z = out / "pricecatcher_2024-01.db", out / "pricecatcher.zip"
+
+    assert main(argv) == 0
+    assert capsys.readouterr().out.startswith(f"built {db}")
+    with zipfile.ZipFile(z) as zf:
+        assert zf.read("pricecatcher.db") == db.read_bytes()
+    built = [(p.stat().st_ino, p.stat().st_mtime_ns, p.read_bytes()) for p in (db, z)]
+
+    assert main(argv) == 0
+    assert capsys.readouterr().out == "Data up-to-date — artifact not rebuilt.\n"
+    assert [(p.stat().st_ino, p.stat().st_mtime_ns, p.read_bytes()) for p in (db, z)] == built
+
+    assert main([*argv, "--force"]) == 0
+    assert capsys.readouterr().out.startswith(f"built {db}")
+    assert db.stat().st_ino != built[0][0] and z.stat().st_ino != built[1][0]
+    con = sqlite3.connect(db)
+    try:
+        assert con.execute("SELECT count(*) FROM prices").fetchone()[0] == 3
+    finally:
+        con.close()
 
 
 def test_schema_drift_aborts(spark, fixture_trio, tmp_path):

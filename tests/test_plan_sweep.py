@@ -27,10 +27,10 @@ from __future__ import annotations
 
 import pytest
 
-from opendosm_parquet_to_sqlite_spark.plans.audit import physical_plan
 from opendosm_parquet_to_sqlite_spark.plans.queries import QUERIES
 
 from .conftest import SF0001
+from .plan_audit import physical_plan
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

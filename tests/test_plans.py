@@ -8,10 +8,10 @@ from __future__ import annotations
 import contextlib
 import io
 
-from opendosm_parquet_to_sqlite_spark.plans.audit import assert_plan
 from opendosm_parquet_to_sqlite_spark.plans.queries import QUERIES
 
 from .conftest import SF0001
+from .plan_audit import assert_plan
 
 
 def _plan(spark, name: str) -> str:

@@ -133,7 +133,8 @@ def test_pool_embeddings_shuffle_is_group_dim_sized(spark):
     from opendosm_parquet_to_sqlite_spark.operators.projection import (
         pool_embeddings,
     )
-    from opendosm_parquet_to_sqlite_spark.plans.audit import plan_report
+
+    from .plan_audit import plan_report
 
     df = spark.createDataFrame(
         [("g", [float(i), float(i + 1)]) for i in range(100)],

@@ -22,12 +22,6 @@ REPO = Path(__file__).resolve().parent.parent
 PACKAGE = "opendosm_parquet_to_sqlite_spark"
 
 ALLOWED = {
-    "plans.audit.assert_plan":
-        "test helper: pins the physical plans of live queries",
-    "operators.graph._persistent_rdd_ids":
-        "test helper: checks that live graph queries release what they cache",
-    "plans.sql_surface.register_testdata_views":
-        "test helper: registers the testdata tables for the SQL surface tests",
     "operators.similarity.lsh_bucket": "column function re-exported by functions/",
     "operators.similarity.multi_lsh_buckets": "column function re-exported by functions/",
     "operators.multimodal.wav_metadata": "column function re-exported by functions/",

@@ -23,7 +23,7 @@ from opendosm_parquet_to_sqlite_spark.sinks.zipsink import zip_artifact
 def test_write_sqlite_multibatch_contents_and_types(spark, tmp_path):
     """A table spanning many insert batches round-trips exactly; temporal
     columns land as ISO TEXT (the reference's date-as-string convention)."""
-    n = 25_000  # >> batch_rows below, so the buffered path flushes repeatedly
+    n = 25_000  # several BATCH_ROWS, so the buffered path flushes repeatedly
     df = spark.range(n).select(
         F.col("id"),
         (F.col("id") * 2.5).alias("val"),
@@ -31,7 +31,7 @@ def test_write_sqlite_multibatch_contents_and_types(spark, tmp_path):
         F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
     )
     db = tmp_path / "out.db"
-    counts = write_sqlite({"t": df}, db, batch_rows=1_000)
+    counts = write_sqlite({"t": df}, db)
     con = sqlite3.connect(db)
     try:
         assert con.execute("SELECT count(*) FROM t").fetchone()[0] == n
@@ -104,7 +104,6 @@ def test_write_sqlite_fresh_file_needs_no_vacuum(spark, tmp_path):
         {"a": df, "b": df.filter(F.col("g") < 50)},
         db,
         indexes={"a": [("id", True), ("g", False)], "b": [("s", False)]},
-        batch_rows=1_000,
     )
     con = sqlite3.connect(db)
     try:

@@ -15,8 +15,8 @@ import pytest
 from opendosm_parquet_to_sqlite_spark.caching import release_cached
 from opendosm_parquet_to_sqlite_spark.plans.sql_surface import (
     register_pricecatcher_views,
-    register_testdata_views,
 )
+from opendosm_parquet_to_sqlite_spark.sources.parquet import load_table
 
 from .conftest import REPO, SF0001
 
@@ -92,8 +92,10 @@ def _scan_leaves(df) -> list[str]:
 
 
 def test_testdata_views_queryable_by_sql(spark):
-    names = register_testdata_views(spark, SF0001, "lineitem", "part")
-    assert names == ["lineitem", "part"]
+    """The testdata tables registered under the DuckDB oracle's names
+    answer oracle-style SQL on Spark."""
+    for name in ("lineitem", "part"):
+        load_table(spark, SF0001, name).createOrReplaceTempView(name)
     got = spark.sql(
         """
         SELECT p_brand, count(*) AS n
@@ -183,11 +185,19 @@ def test_dimension_key_violation_fails_registration(
 
 
 def test_product_imports_do_not_load_the_query_registry():
-    """The product entry points import without the 249-query registry."""
+    """The product entry points (the CLI with what it imports when it runs,
+    the month build, the SQL views and the top-up) load neither the
+    249-query registry, nor pandas, nor any operator family beyond cleanse
+    and dedup."""
     code = (
         "import sys\n"
-        "import opendosm_parquet_to_sqlite_spark.plans.pipeline\n"
-        "import opendosm_parquet_to_sqlite_spark.plans.sql_surface\n"
-        "assert 'opendosm_parquet_to_sqlite_spark.plans.queries' not in sys.modules\n"
+        "pkg = 'opendosm_parquet_to_sqlite_spark'\n"
+        "for m in ('__main__', 'plans.pipeline', 'plans.sql_surface', 'streaming',\n"
+        "          'session', 'sources.catalog'):\n"
+        "    __import__(f'{pkg}.{m}')\n"
+        "ops = {m for m in sys.modules if m.startswith(f'{pkg}.operators.')}\n"
+        "assert ops <= {f'{pkg}.operators.cleanse', f'{pkg}.operators.dedup'}, ops\n"
+        "assert f'{pkg}.plans.queries' not in sys.modules\n"
+        "assert 'pandas' not in sys.modules\n"
     )
     subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True)

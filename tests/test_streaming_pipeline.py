@@ -208,8 +208,8 @@ def test_failed_merge_leaves_file_and_next_run_applies_day_once(
 
     real = stream_pipeline._insert_rows
 
-    def fail_part_way(con, sql, rows, batch_rows=10_000):
-        real(con, sql, list(rows)[:1], batch_rows)
+    def fail_part_way(con, sql, rows):
+        real(con, sql, list(rows)[:1])
         assert con.total_changes > 0  # the failure comes after a write
         raise RuntimeError("merge interrupted")
 

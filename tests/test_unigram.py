@@ -216,14 +216,13 @@ def test_unigram_segment_requires_pieces(spark):
 
 @pytest.mark.slow
 def test_unigram_train_releases_checkpoint_blocks(spark):
-    from opendosm_parquet_to_sqlite_spark.operators.graph import (
-        _persistent_rdd_ids,
-    )
+    def persistent_rdd_ids() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
     df = spark.createDataFrame([(t,) for t in CORPUS[:5]], "text string")
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids()
     U.unigram_train(
         df, "text", vocab_size=20, seed_size=30, max_piece_len=3,
         n_em_iters=1,
     ).collect()
-    assert _persistent_rdd_ids(spark) == before
+    assert persistent_rdd_ids() == before

@@ -58,7 +58,8 @@ def test_extract_links_quote_styles_and_anchor_text(spark):
 
 def test_extract_links_is_narrow_until_anchor_explode(spark):
     from opendosm_parquet_to_sqlite_spark.operators.web import extract_links
-    from opendosm_parquet_to_sqlite_spark.plans.audit import plan_report
+
+    from .plan_audit import plan_report
 
     df = spark.createDataFrame(
         [(i, f'<a href="https://h{i}.com">x</a>') for i in range(50)],
