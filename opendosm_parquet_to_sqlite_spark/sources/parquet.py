@@ -10,16 +10,26 @@ for free. At 100 TB the difference is the whole ballgame — a query touching
 Schema handling (SURVEY §1.2): the reference trusts column *position*; we
 declare a StructType and verify it against the parquet footer so upstream
 schema drift fails loudly at plan time, not silently at read time.
+footer_schema reads that footer on the driver, so a caller can hand the
+schema to spark.read.schema(...) and skip Spark's inference job.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import (
+    DecimalType,
+    IntegerType,
     LongType,
+    ShortType,
+    StructField,
     StructType,
     TimestampNTZType,
     TimestampType,
@@ -41,6 +51,49 @@ def _verify_schema(declared: StructType, actual: StructType, table: str) -> None
             f"{actual_names} — refusing positional read (the reference would have "
             "silently corrupted output here; see src/main.rs:20,30,48)"
         )
+
+
+# Arrow types that Spark's parquet reader infers differently from pyspark's
+# Arrow mapping (which rejects them): unsigned ints widen to the next signed
+# type, UINT64 to decimal(20,0), and an all-NULL column reads as int.
+_SPARK_READS = {
+    pa.uint8(): ShortType(),
+    pa.uint16(): IntegerType(),
+    pa.uint32(): LongType(),
+    pa.uint64(): DecimalType(20, 0),
+    pa.null(): IntegerType(),
+}
+
+
+def footer_schema(path: str | Path, prefer_timestamp_ntz: bool = True) -> StructType:
+    """The schema spark.read.parquet infers for one file, read from the
+    file's footer on the driver instead of by a Spark job.
+
+    Every field is nullable, as Spark's file reader makes it. INT96 is
+    Spark's legacy instant type, so it maps to timestamp whatever Arrow
+    type the footer restores. A naive timestamp maps to timestamp_ntz when
+    prefer_timestamp_ntz (Spark's spark.sql.parquet.inferTimestampNTZ.enabled,
+    on by default). Spark cannot read INT64 TIMESTAMP(NANOS), so such a
+    column raises SchemaDriftError here, at plan time.
+    """
+    with pq.ParquetFile(path) as f:
+        arrow = f.schema_arrow
+        physical = {c.path: c.physical_type for c in f.schema}
+    fields = []
+    for col in arrow:
+        if physical.get(col.name) == "INT96":
+            spark_type = TimestampType()
+        elif pa.types.is_timestamp(col.type) and col.type.unit == "ns":
+            raise SchemaDriftError(
+                f"{path}: column {col.name!r} is INT64 TIMESTAMP(NANOS), "
+                "which Spark's parquet reader cannot read"
+            )
+        else:
+            spark_type = _SPARK_READS.get(col.type) or from_arrow_type(
+                col.type, prefer_timestamp_ntz
+            )
+        fields.append(StructField(col.name, spark_type, nullable=True))
+    return StructType(fields)
 
 
 def load_table(

@@ -20,8 +20,10 @@ artifact; the merge adds the (premise_code, item_code) unique index it
 needs to either.
 
 The merge runs driver-side because SQLite is single-writer; the rows
-crossing the driver are the microbatch's champions, streamed in bounded
-chunks, never the full table.
+crossing the driver are the microbatch's champions, never the whole table.
+They move as Arrow through the month build's insert routine, so the driver
+holds the batch's champion columns plus one BATCH_ROWS batch of Python
+tuples.
 """
 
 from __future__ import annotations
@@ -95,7 +97,7 @@ def stream_prices_to_sqlite(
             con.execute("BEGIN")
             con.execute(table_ddl("prices", latest.schema))
             con.execute(_KEY_INDEX)
-            _insert_rows(con, _MERGE, latest.toLocalIterator(prefetchPartitions=True))
+            _insert_rows(con, _MERGE, latest)
             con.execute("COMMIT")
         finally:
             con.close()

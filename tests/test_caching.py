@@ -4,12 +4,16 @@ accumulate cached blocks until LRU pressure degrades other cached data)."""
 
 from __future__ import annotations
 
+import pytest
+
 from opendosm_parquet_to_sqlite_spark.caching import release_cached
 from opendosm_parquet_to_sqlite_spark.operators.neardup import (
     ngram_jaccard_pairs,
 )
 
 from .conftest import SF0001
+
+pytestmark = pytest.mark.product
 
 
 def _n_cached(spark) -> int:

@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from opendosm_parquet_to_sqlite_spark.operators import cleanse
 
+pytestmark = pytest.mark.product
+
 
 @pytest.fixture()
 def dirty(spark):

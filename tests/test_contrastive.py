@@ -4,8 +4,6 @@ hand-built graph, preference-pair tie-breaks and margin gates."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from opendosm_parquet_to_sqlite_spark.operators import contrastive
 
 

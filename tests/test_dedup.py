@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from opendosm_parquet_to_sqlite_spark.operators import dedup
 from opendosm_parquet_to_sqlite_spark.sources.parquet import load_table
 
 from .conftest import SF0001
+
+pytestmark = pytest.mark.product
 
 
 def _events(spark):

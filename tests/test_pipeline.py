@@ -9,8 +9,12 @@ cache-driven early exit.
 from __future__ import annotations
 
 import sqlite3
+import time
+import uuid
 import zipfile
-from datetime import datetime
+from contextlib import contextmanager
+from datetime import date, datetime
+from decimal import Decimal
 
 import duckdb
 import pyarrow as pa
@@ -20,6 +24,12 @@ import pytest
 from opendosm_parquet_to_sqlite_spark.__main__ import main
 from opendosm_parquet_to_sqlite_spark.plans import pipeline
 from opendosm_parquet_to_sqlite_spark.sources import cache as cache_mod
+from opendosm_parquet_to_sqlite_spark.sources.parquet import (
+    SchemaDriftError,
+    footer_schema,
+)
+
+pytestmark = pytest.mark.product
 
 
 @pytest.fixture()
@@ -242,24 +252,167 @@ def test_cli_builds_skips_when_fresh_and_force_rebuilds(
         con.close()
 
 
-def test_schema_drift_aborts(spark, fixture_trio, tmp_path):
-    """A column reorder upstream aborts at plan time instead of silently
-    corrupting output (the reference reads by position, src/main.rs:20)."""
-    import pyarrow.parquet as pq2
-    from opendosm_parquet_to_sqlite_spark.sources.parquet import SchemaDriftError
+@contextmanager
+def _launches_no_spark_job(spark):
+    """Fail unless the body launches no Spark job. Each job started under
+    a probe job group is recorded by the status store in event order, so a
+    fence job run afterwards in its own group, once seen there, means any
+    job of the probe group would be seen too."""
+    sc = spark.sparkContext
+    group = f"no-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "must launch no Spark job")
+    try:
+        yield
+    finally:
+        sc.setJobGroup(f"{group}-fence", "fence")
+        spark.range(1).collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-fence"):
+        assert time.monotonic() < deadline, "fence job never reached the status store"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group) == []
 
-    t = pq2.read_table(fixture_trio / "lookup_item.parquet")
+
+def test_build_tables_launches_no_spark_job(spark, fixture_trio):
+    """Planning reads each schema from the parquet footer on the driver;
+    a schema-inferring spark.read.parquet would launch a job per file."""
+    with _launches_no_spark_job(spark):
+        pipeline.build_tables(
+            spark,
+            prices_path=fixture_trio / "pricecatcher_2024-01.parquet",
+            premises_path=fixture_trio / "lookup_premise.parquet",
+            items_path=fixture_trio / "lookup_item.parquet",
+        )
+
+
+def _type_matrix(d):
+    """One file per footer shape whose Spark type the build must get right:
+    every primitive PriceCatcher could plausibly ship, REQUIRED columns,
+    INT96, and the benchmark's dirty trio (float premise codes with NULLs,
+    string item and price codes, naive timestamp[us])."""
+    ts = [datetime(2024, 1, 1, 9, 30), None]
+    files = {
+        "primitives": pa.table({
+            "d32": pa.array([date(2024, 1, 1), None], pa.date32()),
+            "ts_us": pa.array(ts, pa.timestamp("us")),
+            "ts_ms": pa.array(ts, pa.timestamp("ms")),
+            "ts_us_utc": pa.array(ts, pa.timestamp("us", tz="UTC")),
+            "ts_ms_utc": pa.array(ts, pa.timestamp("ms", tz="UTC")),
+            "ts_us_kl": pa.array(ts, pa.timestamp("us", tz="Asia/Kuala_Lumpur")),
+            "i8": pa.array([1, None], pa.int8()),
+            "i16": pa.array([1, None], pa.int16()),
+            "i32": pa.array([1, None], pa.int32()),
+            "i64": pa.array([1, None], pa.int64()),
+            "u8": pa.array([1, None], pa.uint8()),
+            "u16": pa.array([1, None], pa.uint16()),
+            "u32": pa.array([1, None], pa.uint32()),
+            "u64": pa.array([1, None], pa.uint64()),
+            "f32": pa.array([1.5, None], pa.float32()),
+            "f64": pa.array([1.5, None], pa.float64()),
+            "bool": pa.array([True, None]),
+            "str": pa.array(["a", None]),
+            "large_str": pa.array(["a", None], pa.large_string()),
+            "dict_str": pa.array(["a", None]).dictionary_encode(),
+            "dec": pa.array([Decimal("1.23"), None], pa.decimal128(9, 2)),
+            "dec38": pa.array([Decimal("1.23"), None], pa.decimal128(38, 2)),
+            "bin": pa.array([b"x", None]),
+            "all_null": pa.array([None, None], pa.null()),
+        }),
+        "required": pa.table(
+            {"code": [1, 2], "name": ["a", "b"]},
+            schema=pa.schema([
+                pa.field("code", pa.int64(), nullable=False),
+                pa.field("name", pa.string(), nullable=False),
+            ]),
+        ),
+        "prices": pa.table({
+            "date": pa.array(ts, pa.timestamp("us")),
+            "premise_code": pa.array(["101", "102"]),
+            "item_code": pa.array(["10", None]),
+            "price": pa.array(["5.50", "6.10"]),
+        }),
+        "premises": pa.table({
+            "premise_code": pa.array([101.0, None], pa.float64()),
+            "premise": pa.array(["Shop", None]),
+        }),
+    }
+    paths = {}
+    for name, table in files.items():
+        paths[name] = d / f"{name}.parquet"
+        pq.write_table(table, paths[name])
+    paths["int96"] = d / "int96.parquet"
+    pq.write_table(
+        pa.table({"ts": pa.array(ts, pa.timestamp("us"))}), paths["int96"],
+        use_deprecated_int96_timestamps=True,
+    )
+    return paths
+
+
+@pytest.mark.parametrize("infer_ntz", [True, False])
+def test_footer_schema_matches_spark_inference(spark, tmp_path, infer_ntz):
+    """The schema build_tables reads from the footer is the one
+    spark.read.parquet infers, type and nullability, under either setting
+    of the session's naive-timestamp inference."""
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, str(infer_ntz).lower())
+    try:
+        for name, path in _type_matrix(tmp_path).items():
+            assert footer_schema(path, prefer_timestamp_ntz=infer_ntz) == (
+                spark.read.parquet(str(path)).schema
+            ), name
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_schema_drift_aborts(spark, fixture_trio, tmp_path):
+    """A column reorder upstream aborts at plan time, from the footer and
+    before any Spark job, instead of silently corrupting output (the
+    reference reads by position, src/main.rs:20)."""
+    t = pq.read_table(fixture_trio / "lookup_item.parquet")
     drifted = t.select([1, 0, 2, 3, 4])  # swap first two columns
     d = tmp_path / "drift"
     d.mkdir()
-    pq2.write_table(drifted, d / "lookup_item.parquet")
-    with pytest.raises(SchemaDriftError, match="positional read"):
+    pq.write_table(drifted, d / "lookup_item.parquet")
+    with _launches_no_spark_job(spark), pytest.raises(
+        SchemaDriftError, match="positional read"
+    ):
         pipeline.build_tables(
             spark,
             prices_path=fixture_trio / "pricecatcher_2024-01.parquet",
             premises_path=fixture_trio / "lookup_premise.parquet",
             items_path=d / "lookup_item.parquet",
         )
+
+
+def test_nanosecond_prices_fail_the_run_and_keep_last_good_pair(
+    spark, fixture_trio, tmp_path
+):
+    """Spark cannot read INT64 TIMESTAMP(NANOS); a prices file that ships
+    one fails run_pipeline and leaves the published .db and .zip as they
+    were."""
+    served = tmp_path / "served"
+    served.mkdir()
+    fixture_trio.rename(served / "pricecatcher")
+    out, cache_dir = tmp_path / "out", tmp_path / "cache"
+    base_url = f"file://{served}"
+    r = pipeline.run_pipeline(spark, out, cache_dir, "2024-01", base_url=base_url)
+    published = {p.name: p.read_bytes() for p in (r.db_path, r.zip_path)}
+
+    prices_file = served / "pricecatcher" / "pricecatcher_2024-01.parquet"
+    prices = pq.read_table(prices_file)
+    pq.write_table(
+        prices.set_column(0, "date", prices.column("date").cast(pa.timestamp("ns"))),
+        prices_file,
+    )
+    with pytest.raises(SchemaDriftError, match=r"TIMESTAMP\(NANOS\)"):
+        pipeline.run_pipeline(
+            spark, out, cache_dir, "2024-01", base_url=base_url, force=True
+        )
+    assert {p.name: p.read_bytes() for p in out.iterdir()} == published
 
 
 def test_unique_key_violation_aborts(spark, tmp_path):

@@ -18,6 +18,10 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
+import pytest
+
+pytestmark = pytest.mark.product
+
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = "opendosm_parquet_to_sqlite_spark"
 

@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from opendosm_parquet_to_sqlite_spark.session import driver_memory, task_cpus
+
+pytestmark = pytest.mark.product
 
 
 def test_task_cpus_defaults_to_affinity(monkeypatch):

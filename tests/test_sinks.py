@@ -19,6 +19,8 @@ from opendosm_parquet_to_sqlite_spark.sinks.sqlite import (
 )
 from opendosm_parquet_to_sqlite_spark.sinks.zipsink import zip_artifact
 
+pytestmark = pytest.mark.product
+
 
 def test_write_sqlite_multibatch_contents_and_types(spark, tmp_path):
     """A table spanning many insert batches round-trips exactly; temporal

@@ -12,6 +12,8 @@ from opendosm_parquet_to_sqlite_spark.sources.parquet import (
 
 from .conftest import SF0001
 
+pytestmark = pytest.mark.product
+
 
 def test_verified_load(spark):
     df = load_table(spark, SF0001, "region")

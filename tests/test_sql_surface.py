@@ -20,6 +20,8 @@ from opendosm_parquet_to_sqlite_spark.sources.parquet import load_table
 
 from .conftest import REPO, SF0001
 
+pytestmark = pytest.mark.product
+
 CONSUMER_SQL = """
     SELECT p.date, pr.premise, i.item, p.price
     FROM prices p

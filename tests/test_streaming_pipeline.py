@@ -18,6 +18,8 @@ from opendosm_parquet_to_sqlite_spark.sinks.sqlite import REFERENCE_INDEXES, ind
 from opendosm_parquet_to_sqlite_spark.streaming import pipeline as stream_pipeline
 from opendosm_parquet_to_sqlite_spark.streaming.pipeline import stream_prices_to_sqlite
 
+pytestmark = pytest.mark.product
+
 
 def _month_file(path, rows):
     pq.write_table(
@@ -208,8 +210,8 @@ def test_failed_merge_leaves_file_and_next_run_applies_day_once(
 
     real = stream_pipeline._insert_rows
 
-    def fail_part_way(con, sql, rows):
-        real(con, sql, list(rows)[:1])
+    def fail_part_way(con, sql, df):
+        real(con, sql, df.limit(1))
         assert con.total_changes > 0  # the failure comes after a write
         raise RuntimeError("merge interrupted")
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from opendosm_parquet_to_sqlite_spark.operators import unigram as U
 
