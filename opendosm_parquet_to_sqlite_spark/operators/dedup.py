@@ -9,9 +9,12 @@ key per group, explicit tie-break.
 
 Scale notes (100 TB stance):
 - latest_per_group is a single hash-shuffle on the group keys. The window
-  variant sorts within partitions; the max_by variant is a partial-aggregating
-  hash agg (map-side combine → much less shuffle IO when groups repeat within
-  input partitions). Both provided; max_by is the default at scale.
+  variant sorts within partitions; the max_by variant is a partial + final
+  SortAggregate, not a hash aggregate, because its struct buffer is not
+  fixed-width. Its map side (sort, then partial aggregate) runs in one task
+  per input row group and combines before the shuffle, so much less shuffle
+  IO when groups repeat within a row group. Both provided; max_by is the
+  default at scale.
 - exact_dedup is a hash aggregate on a digest — shuffle carries only
   (digest, min_id), not document text.
 """
@@ -57,8 +60,10 @@ def latest_per_group_maxby(
 ) -> DataFrame:
     """Argmax-per-group as an aggregate: max_by(struct(payload), orderkey).
 
-    Same result as latest_per_group but executed as a hash aggregate with
-    map-side partial aggregation — at 100 TB this shuffles one row per
+    Same result as latest_per_group but executed as a partial + final
+    SortAggregate (a struct aggregation buffer is not fixed-width, so Spark
+    cannot hash-aggregate it). The map side sorts and partially aggregates
+    in one task per input row group, so at 100 TB this shuffles one row per
     (group, mapper) instead of every input row, typically a 10-100x shuffle
     reduction for hot groups. Preferred at scale when the full row payload
     is modest.

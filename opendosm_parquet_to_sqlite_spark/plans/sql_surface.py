@@ -12,6 +12,16 @@ table, so a query reads the in-memory tables instead of re-scanning the
 parquet and re-running cleanse and the dedup shuffle. A registration is
 therefore a snapshot of the files as they were when it ran; register again
 after the sources change, which replaces the snapshot and frees the old one.
+
+Each table is cached in one partition. One partition already has the
+clustering a GROUP BY needs and the ordering a global ORDER BY needs, so a
+consumer query plans no shuffle: the rollup over all three views runs as
+two dimension broadcasts and one result job, where the dedup's shuffle
+partitions cost it a hash exchange and a sampled range exchange (6 jobs).
+The tables are small once deduplicated: all three views together cache to
+0.52 MB on the benchmark month and 4.09 MB at real-month scale (2M source
+rows, 327k champions), far below the 128 MB per-task input bound the
+session sets (`spark.sql.files.maxPartitionBytes`).
 """
 
 from __future__ import annotations
@@ -32,7 +42,9 @@ def register_pricecatcher_views(
     dedup applied to prices) as views named exactly as in its SQLite DDL
     (src/main.rs:193,197,203) — existing consumer SQL ports verbatim.
 
-    Each table is cached and filled by one job. For the two dimensions that
+    Each table is cached in one partition (see the module docstring) and
+    filled by one job. `repartition(1)`, not `coalesce(1)`: coalesce would
+    pull the dedup's final aggregate into one task. For the two dimensions that
     job is the unique-key check the reference's UNIQUE indexes make
     (src/main.rs:198,204), so a duplicate or NULL premise_code/item_code
     raises instead of double-counting in every join. The previous
@@ -44,7 +56,7 @@ def register_pricecatcher_views(
         # otherwise be served from the old snapshot's cache.
         spark.catalog.dropTempView(name)
     tables = {
-        name: df.persist()
+        name: df.repartition(1).persist()
         for name, df in build_tables(
             spark,
             prices_path=prices_path,

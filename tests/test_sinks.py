@@ -7,6 +7,7 @@ and zip packaging (src/main.rs:312-325).
 
 from __future__ import annotations
 
+import os
 import sqlite3
 import zipfile
 
@@ -17,7 +18,7 @@ from opendosm_parquet_to_sqlite_spark.sinks.sqlite import (
     REFERENCE_INDEXES,
     write_sqlite,
 )
-from opendosm_parquet_to_sqlite_spark.sinks.zipsink import zip_artifact
+from opendosm_parquet_to_sqlite_spark.sinks.zipsink import DEFLATE_LEVEL, zip_artifact
 
 pytestmark = pytest.mark.product
 
@@ -133,6 +134,29 @@ def test_zip_artifact_roundtrip(tmp_path):
         assert zf.read("pricecatcher.db") == src.read_bytes()
         info = zf.getinfo("pricecatcher.db")
         assert info.compress_type == zipfile.ZIP_DEFLATED
+
+
+def test_zip_artifact_is_deterministic(tmp_path):
+    """The same .db zips to the same bytes whatever its mtime, and to as
+    many bytes as ZipFile.write at DEFLATE_LEVEL: only the stamp differs."""
+    src = tmp_path / "pricecatcher.db"
+    src.write_bytes(
+        b"".join(b"%08d,shop %d,%d.50\n" % (i, i % 97, i % 13) for i in range(50_000))
+    )
+    zips = []
+    for n, mtime in enumerate((1_700_000_000, 1_710_000_000)):
+        os.utime(src, (mtime, mtime))
+        z = zip_artifact(src, tmp_path / f"{n}.zip", arcname="pricecatcher.db")
+        zips.append(z.read_bytes())
+    assert zips[0] == zips[1]
+    with zipfile.ZipFile(
+        tmp_path / "write.zip", "w", zipfile.ZIP_DEFLATED, compresslevel=DEFLATE_LEVEL
+    ) as z:
+        z.write(src, "pricecatcher.db")
+    assert len(zips[0]) == (tmp_path / "write.zip").stat().st_size
+    with zipfile.ZipFile(tmp_path / "0.zip") as z:
+        assert z.getinfo("pricecatcher.db").date_time == (1980, 1, 1, 0, 0, 0)
+        assert z.read("pricecatcher.db") == src.read_bytes()
 
 
 def test_partitioned_dataset_prunes_at_scan(spark, tmp_path):

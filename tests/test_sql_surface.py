@@ -75,22 +75,25 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-def _scan_leaves(df) -> list[str]:
-    """Node names of the executed plan's leaves, looking through adaptive
-    execution and its query stages (run the query first)."""
+def _executed_nodes(df) -> list:
+    """Nodes of the executed plan, looking through adaptive execution and
+    its query stages (run the query first)."""
 
-    def leaves(node):
+    def walk(node):
         name = node.nodeName()
         if name == "AdaptiveSparkPlan":
-            return leaves(node.executedPlan())
+            return walk(node.executedPlan())
         if "QueryStage" in name:
-            return leaves(node.plan())
+            return walk(node.plan())
         kids = node.children()
-        if kids.isEmpty():
-            return [name]
-        return [n for i in range(kids.size()) for n in leaves(kids.apply(i))]
+        return [node] + [n for i in range(kids.size()) for n in walk(kids.apply(i))]
 
-    return leaves(df._jdf.queryExecution().executedPlan())
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def _scan_leaves(df) -> list[str]:
+    """Node names of the executed plan's leaves."""
+    return [n.nodeName() for n in _executed_nodes(df) if n.children().isEmpty()]
 
 
 def test_testdata_views_queryable_by_sql(spark):
@@ -129,6 +132,35 @@ def test_queries_read_the_cache_not_the_parquet(spark, tmp_path):
     df.collect()
     leaves = _scan_leaves(df)
     assert leaves and set(leaves) == {"InMemoryTableScan"}, leaves
+
+
+def test_views_are_cached_in_one_partition_so_rollups_do_not_shuffle(spark, tmp_path):
+    """Each view is cached in one partition, which already has the
+    clustering a GROUP BY needs and the ordering an ORDER BY needs: a
+    rollup over the three views (the consumer's GROUP BY + ORDER BY shape)
+    plans no shuffle, only the dimension broadcasts."""
+    _write_sources(
+        tmp_path / "src",
+        prices=[(datetime(2024, 1, d), f"{d}.00") for d in range(1, 29)],
+        premise_codes=("101.0", "102.0"), item_codes=("10", "11"),
+    )
+    tables = _register(spark, tmp_path / "src")
+    assert {n: spark.table(n).rdd.getNumPartitions() for n in tables} == {
+        "prices": 1, "premises": 1, "items": 1,
+    }
+    df = spark.sql(
+        """
+        SELECT pr.state, i.item_group, count(*) AS n, avg(p.price) AS avg_price
+        FROM prices p
+        JOIN premises pr ON p.premise_code = pr.premise_code
+        JOIN items i ON p.item_code = i.item_code
+        GROUP BY pr.state, i.item_group
+        ORDER BY pr.state, i.item_group
+        """
+    )
+    assert [tuple(r) for r in df.collect()] == [("Selangor", "dairy", 1, 28.0)]
+    exchanges = [n.nodeName() for n in _executed_nodes(df) if "Exchange" in n.nodeName()]
+    assert exchanges and set(exchanges) == {"BroadcastExchange"}, exchanges
 
 
 def test_views_keep_their_cache_across_release_cached(spark, tmp_path):
