@@ -9,7 +9,9 @@ row-at-a-time paths — and extends it with the LLM-data-pipeline operators
 100 TB-scale training-data workloads.
 
 Layout:
-  session    — tuned SparkSession builder (AQE, shuffle sizing, Arrow)
+  session    — SparkSession builder: local[N] and shuffle partitions from
+               the CPUs, AQE's 64k coalescing floor, Arrow, UTC; every
+               other setting is Spark's default
   schemas    — explicit StructType per table (reference declares schemas as
                comments + DDL, src/main.rs:20,30,48,192-207)
   sources/   — parquet scan helpers, remote catalog discovery, caching ingest
@@ -17,10 +19,11 @@ Layout:
                multimodal (binary payload metadata + mapInPandas decode)
   plans/     — queries registry + the end-to-end PriceCatcher pipeline
                (the reference's main(), re-expressed lazily; plans.pipeline)
-  sinks/     — SQLite + zip artifact writers (src/main.rs:284-325) and the
-               parquet dataset writer (write_dataset)
+  sinks/     — the reference's SQLite artifact and its zip
+               (src/main.rs:192-207,284-325), and the parquet dataset
+               writer (sinks.dataset.write_dataset)
   streaming/ — the Structured Streaming top-up of the SQLite artifact
-               (stream_prices_to_sqlite)
+               (streaming.pipeline.stream_prices_to_sqlite)
 """
 
 __version__ = "0.1.0"

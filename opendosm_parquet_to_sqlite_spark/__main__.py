@@ -41,8 +41,7 @@ def main(argv: list[str] | None = None) -> int:
     month = args.month
     if month is None:
         months = discover_months()
-        month = pick_month(months, latest=args.latest or args.choice is None,
-                           choice=args.choice)
+        month = pick_month(months, choice=args.choice)
 
     spark = get_spark(app_name="pricecatcher-etl")
     result = run_pipeline(

@@ -41,12 +41,7 @@ from ..schemas import (
     PRICECATCHER_PREMISES,
     PRICECATCHER_PRICES,
 )
-from ..sinks.sqlite import (
-    REFERENCE_INDEXES,
-    index_name,
-    verify_sqlite_artifact,
-    write_sqlite,
-)
+from ..sinks.sqlite import verify_sqlite_artifact, write_sqlite
 from ..sinks.zipsink import zip_artifact
 from ..sources.cache import SourceCache, pricecatcher_urls
 from ..sources.parquet import _verify_schema, footer_schema
@@ -180,14 +175,11 @@ def build_artifact(
     z = out_dir / "pricecatcher.zip"
     tmp_db, tmp_zip = (p.with_name(f".{p.name}.{os.getpid()}.tmp") for p in (db, z))
     try:
-        counts = write_sqlite(tables, tmp_db, indexes=REFERENCE_INDEXES)
-        names = [
-            index_name(t, c) for t, specs in REFERENCE_INDEXES.items() for c, _ in specs
-        ]
-        gate = verify_sqlite_artifact(str(tmp_db), counts, names)
+        counts = write_sqlite(tables, tmp_db)
+        gate = verify_sqlite_artifact(str(tmp_db), counts)
         if not gate["ok"]:
             raise RuntimeError(f"artifact failed its ship gate: {gate}")
-        zip_artifact(tmp_db, tmp_zip, arcname="pricecatcher.db")
+        zip_artifact(tmp_db, tmp_zip)
         os.replace(tmp_db, db)
         os.replace(tmp_zip, z)
     finally:

@@ -20,8 +20,8 @@ two dimension broadcasts and one result job, where the dedup's shuffle
 partitions cost it a hash exchange and a sampled range exchange (6 jobs).
 The tables are small once deduplicated: all three views together cache to
 0.52 MB on the benchmark month and 4.09 MB at real-month scale (2M source
-rows, 327k champions), far below the 128 MB per-task input bound the
-session sets (`spark.sql.files.maxPartitionBytes`).
+rows, 327k champions), far below Spark's default 128 MB per-task input
+bound (`spark.sql.files.maxPartitionBytes`).
 """
 
 from __future__ import annotations

@@ -2,9 +2,11 @@
 
 The reference declares source schemas only as comments and reads columns by
 position (/root/reference/src/main.rs:20,30,48 — a silent-corruption hazard
-its SURVEY calls out). Here every table has a declared StructType which is
-*verified* against the parquet footer at read time (sources.parquet.load_table),
-so upstream drift fails loudly instead of corrupting output.
+its SURVEY calls out). Here every table has a declared StructType. The
+PRICECATCHER_* schemas are *verified* against each file's parquet footer
+(sources.parquet.footer_schema) before plans.pipeline.build_tables reads
+it, and the TESTDATA_* ones at read time (sources.parquet.load_table), so
+upstream drift fails loudly instead of corrupting output.
 
 Two families:
 - PRICECATCHER_*: the reference's own data model (DDL src/main.rs:192-207).

@@ -4,8 +4,11 @@ The reference runs single-threaded with everything in RAM
 (/root/reference/src/main.rs:191,253). Here every default is chosen for a
 multi-executor cluster and merely *tested* on local[N]:
 
-- AQE on: runtime coalescing of shuffle partitions + skew-join splitting,
-  so the same plan survives sf0.001 and 100 TB.
+- Spark's own defaults are kept, not restated: AQE with partition
+  coalescing and skew-join splitting, runtime bloom filters, and the
+  128 MB per-task input bound (spark.sql.files.maxPartitionBytes). Only
+  settings that differ from a default, or pin determinism, are set here.
+- AQE's coalescing floor lowered to 64k (see get_spark).
 - local[N] and shuffle.partitions both sized by task_cpus(): the
   SPARK_GRAFT_CPUS override, else the CPUs this process may run on (a real
   cluster overrides — AQE coalesces down, so oversizing is safe,
@@ -56,8 +59,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's coalescing floor (Spark default 1m) sets the MINIMUM
         # post-shuffle partition size. With parallelismFirst=true (also
         # default) AQE targets max(shuffleBytes/parallelism, floor) — so
@@ -73,17 +74,8 @@ def get_spark(
         # those stages are sub-second either way, while mis-coalescing a
         # compute-dense small shuffle serializes the cluster at any scale.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Runtime bloom filters: for shuffle joins with a selective build
-        # side (the dedup survivor anti-joins, index probes), inject a
-        # bloom filter on the probe side so non-matching rows drop at the
-        # scan instead of crossing the exchange — free at local scale,
-        # material at 100 TB.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # 100 TB stance: bound per-task input so scans parallelize evenly.
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         # Dimensions in this workload are tiny; keep default 10m threshold,
         # broadcast() hints are applied explicitly at join sites anyway.
         # Up to 16g: a long-lived session that runs hundreds of distinct query

@@ -1,4 +1,12 @@
-"""SQLite artifact sink.
+"""SQLite artifact sink: writes the reference's artifact and nothing more
+general.
+
+The artifact is the reference's three tables, prices, premises and items,
+with its nine indexes (src/main.rs:192-207). This module is the one place
+that knows that layout: write_sqlite builds REFERENCE_INDEXES for every
+table it writes, verify_sqlite_artifact checks them, and table_ddl maps
+only the three column types the cleanse stack produces (long, double,
+string).
 
 Reference: the in-memory DB is exported to a file via the C-level
 sqlite3_backup API, 1000 pages/step (/root/reference/src/main.rs:284-311),
@@ -9,8 +17,8 @@ driver holds one table's Arrow columns plus one batch of Python tuples.
 (SQLite is a single-writer format — a distributed writer cannot append to
 one .db.)
 
-Index DDL mirrors src/main.rs:192-207 and is applied AFTER load (the
-reference creates indexes before inserting — strictly slower).
+The indexes are created AFTER load (the reference creates them before
+inserting — strictly slower).
 """
 
 from __future__ import annotations
@@ -21,34 +29,27 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
-_SPARK_TO_SQLITE = {
-    "long": "INTEGER",
-    "int": "INTEGER",
-    "short": "INTEGER",
-    "byte": "INTEGER",
-    "double": "REAL",
-    "float": "REAL",
-    "string": "TEXT",
-    "boolean": "INTEGER",
-    "date": "TEXT",
-    "timestamp": "TEXT",
-    "timestamp_ntz": "TEXT",
-    "binary": "BLOB",
-}
-
-
-def _ddl_type(spark_type: str) -> str:
-    return _SPARK_TO_SQLITE.get(spark_type, "TEXT")
+# The column types of the cleansed tables: cleanse_prices, cleanse_premises
+# and cleanse_items cast every column to one of these, whatever the source
+# type, so no other type can reach the sink.
+_SQLITE_TYPES = {"long": "INTEGER", "double": "REAL", "string": "TEXT"}
 
 
 def table_ddl(table: str, schema: StructType) -> str:
-    """CREATE TABLE IF NOT EXISTS for a DataFrame schema, one SQLite type
-    per Spark type. Every writer of a table takes its DDL from here, so a
-    table has one schema whichever path created it."""
-    cols = ", ".join(
-        f'"{f.name}" {_ddl_type(f.dataType.typeName())}' for f in schema.fields
-    )
-    return f'CREATE TABLE IF NOT EXISTS "{table}" ({cols})'
+    """CREATE TABLE IF NOT EXISTS for a cleansed table's schema. Every
+    writer of a table takes its DDL from here, so a table has one schema
+    whichever path created it. A column of any type the cleanse stack does
+    not produce raises TypeError."""
+    cols = []
+    for f in schema.fields:
+        spark_type = f.dataType.typeName()
+        if spark_type not in _SQLITE_TYPES:
+            raise TypeError(
+                f"{table}.{f.name} is {spark_type}; the artifact holds only "
+                f"{', '.join(_SQLITE_TYPES)} columns"
+            )
+        cols.append(f'"{f.name}" {_SQLITE_TYPES[spark_type]}')
+    return f'CREATE TABLE IF NOT EXISTS "{table}" ({", ".join(cols)})'
 
 
 # Rows per executemany call in _insert_rows.
@@ -62,29 +63,11 @@ def _insert_rows(con: sqlite3.Connection, sql: str, df: DataFrame) -> None:
         con.executemany(sql, zip(*(col.to_pylist() for col in batch.columns)))
 
 
-def _stringify_temporals(df: DataFrame) -> DataFrame:
-    """Date/timestamp columns → ISO strings, honoring SQLite TEXT affinity
-    (the reference stores dates as strings, src/main.rs:23) and avoiding
-    Python's deprecated sqlite3 datetime adapters."""
-    temporal = [
-        f.name
-        for f in df.schema.fields
-        if f.dataType.typeName() in ("date", "timestamp", "timestamp_ntz")
-    ]
-    if not temporal:
-        return df
-    from pyspark.sql import functions as F
-
-    return df.withColumns({c: F.col(c).cast("string") for c in temporal})
-
-
-def write_sqlite(
-    tables: dict[str, DataFrame],
-    db_path: str | Path,
-    indexes: dict[str, list[tuple[str, bool]]] | None = None,
-) -> dict[str, int]:
-    """Write DataFrames into one SQLite file, one table at a time.
-    Returns the number of rows inserted per table.
+def write_sqlite(tables: dict[str, DataFrame], db_path: str | Path) -> dict[str, int]:
+    """Write the reference's artifact: each of `tables` (keyed by the
+    reference's table names) into one fresh SQLite file, followed by that
+    table's REFERENCE_INDEXES. Returns the number of rows inserted per
+    table. It writes no other layout.
 
     Each table moves to the driver as Arrow (toArrow) and is inserted
     BATCH_ROWS rows per executemany, so the driver holds one table's Arrow
@@ -93,9 +76,8 @@ def write_sqlite(
     month, 11.9 MB for 327k rows at real-month scale (2M source rows), and
     about 1.3 MB for one batch of Python values.
 
-    indexes: table -> [(column, unique)] applied after load; mirrors the
-    reference DDL (src/main.rs:194-206) where the caller passes it. A
-    unique column is a key: a duplicate or a NULL in it raises
+    The indexes are built after every table is loaded. A unique index
+    makes its column a key: a duplicate or a NULL in it raises
     ValueError("unique key violated ..."). The duplicate is caught by
     CREATE UNIQUE INDEX itself, the reference's own failure point
     (src/main.rs:42,57); SQLite's UNIQUE admits repeated NULLs, so those
@@ -118,11 +100,11 @@ def write_sqlite(
             placeholders = ", ".join("?" for _ in df.schema.fields)
             insert = f'INSERT INTO "{table}" VALUES ({placeholders})'
             before = con.total_changes
-            _insert_rows(con, insert, _stringify_temporals(df))
+            _insert_rows(con, insert, df)
             con.commit()
             counts[table] = con.total_changes - before
-        for table, specs in (indexes or {}).items():
-            for col, unique in specs:
+        for table in tables:
+            for col, unique in REFERENCE_INDEXES[table]:
                 _create_index(con, table, col, unique)
         con.commit()
     finally:
@@ -170,15 +152,11 @@ REFERENCE_INDEXES: dict[str, list[tuple[str, bool]]] = {
 }
 
 
-def verify_sqlite_artifact(
-    db_path: str,
-    expected_tables: dict[str, int],
-    expected_indexes: list[str] | None = None,
-) -> dict:
+def verify_sqlite_artifact(db_path: str, expected_tables: dict[str, int]) -> dict:
     """Ship-gate for a produced artifact: row counts per table match
-    expectations, declared indexes exist, and PRAGMA integrity_check
-    passes — the checklist a consumer runs before replacing last
-    month's .db (the reference ships artifacts with no verification at
+    expectations, the REFERENCE_INDEXES of those tables exist, and PRAGMA
+    integrity_check passes — the checklist a consumer runs before replacing
+    last month's .db (the reference ships artifacts with no verification at
     all; a truncated upload or a crashed VACUUM is silently served).
 
     Returns {"ok": bool, "counts": {...}, "missing_indexes": [...],
@@ -197,7 +175,12 @@ def verify_sqlite_artifact(
                 "SELECT name FROM sqlite_master WHERE type = 'index'"
             )
         }
-        missing = [i for i in (expected_indexes or []) if i not in have]
+        missing = [
+            index_name(t, col)
+            for t in expected_tables
+            for col, _ in REFERENCE_INDEXES[t]
+            if index_name(t, col) not in have
+        ]
         integrity = con.execute("PRAGMA integrity_check").fetchone()[0]
     finally:
         con.close()

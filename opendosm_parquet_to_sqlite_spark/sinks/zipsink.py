@@ -1,5 +1,6 @@
 """Zip packaging sink (reference: src/main.rs:312-325 — the
-.db stored as /pricecatcher.db inside the archive).
+.db stored as /pricecatcher.db inside the archive, whatever the .db's own
+file name).
 
 The reference compresses at Deflate level 9; this sink uses level 6
 (DEFLATE_LEVEL). On a 2.0 MB month artifact (4-vCPU VM), level 9 took
@@ -18,17 +19,15 @@ import zipfile
 from pathlib import Path
 
 DEFLATE_LEVEL = 6
+MEMBER_NAME = "pricecatcher.db"
 MEMBER_DATE_TIME = (1980, 1, 1, 0, 0, 0)
 
 
-def zip_artifact(
-    src: str | Path,
-    zip_path: str | Path,
-    arcname: str | None = None,
-) -> Path:
+def zip_artifact(src: str | Path, zip_path: str | Path) -> Path:
+    """Zip `src` into `zip_path` as the one member pricecatcher.db."""
     src, zip_path = Path(src), Path(zip_path)
     zip_path.parent.mkdir(parents=True, exist_ok=True)
-    info = zipfile.ZipInfo.from_file(src, arcname or src.name)
+    info = zipfile.ZipInfo.from_file(src, MEMBER_NAME)
     info.date_time = MEMBER_DATE_TIME
     # open(info, "w") takes the method and level from the ZipInfo, not the
     # archive. The level's public name, compress_level, is Python 3.13+.

@@ -7,9 +7,10 @@ pipeline can early-exit when every source is fresh (src/main.rs:241-244).
 
 Driver-side by design — Spark executors read the *cached local files*; the
 WAN fetch is a one-time driver action, not a distributed op. Upgrades over
-the reference: ETag/Last-Modified validators when the server provides them
-(size equality is a weak revision check), streaming download (the reference
-buffers whole files in RAM), and exit code 0 for the all-fresh case (the
+the reference: an ETag validator when the server sends one, with the
+reference's size check as the fallback (size equality is a weak revision
+check), streaming download (the reference buffers whole files in RAM), and
+exit code 0 for the all-fresh case (the
 reference exits 1 — a failure code for a success condition,
 src/main.rs:243).
 """
@@ -77,7 +78,7 @@ class SourceCache:
     def _save_meta(self, name: str, headers: dict[str, str]) -> None:
         keep = {
             k: headers[k]
-            for k in ("content-length", "etag", "last-modified")
+            for k in ("content-length", "etag")
             if k in headers
         }
         self._meta_path(name).write_text(json.dumps(keep))

@@ -100,14 +100,11 @@ def discover_months(
     return months
 
 
-def pick_month(months: list[str], latest: bool = False, choice: int | None = None) -> str:
-    """Dataset selection (src/main.rs:169-189). The reference's interactive
-    loop has an off-by-one (`num > len - 1` rejects the last valid index,
-    src/main.rs:178); here any 0 <= choice < len is accepted. An explicit
-    `choice` always wins; passing both latest=True and a choice is a caller
-    bug and raises."""
-    if latest and choice is not None:
-        raise ValueError("pass either latest=True or choice, not both")
+def pick_month(months: list[str], choice: int | None = None) -> str:
+    """Dataset selection (src/main.rs:169-189): the newest month, or the
+    month at catalog index `choice`. The reference's interactive loop has an
+    off-by-one (`num > len - 1` rejects the last valid index,
+    src/main.rs:178); here any 0 <= choice < len is accepted."""
     if choice is None:
         return months[-1]
     if not 0 <= choice < len(months):

@@ -8,9 +8,6 @@ whose checkpoint records the files already merged, drained by an
 availableNow trigger that processes exactly the files landed since the
 last run and then stops. Each microbatch's latest-per-(premise, item)
 champions are merged into the SQLite file by a guarded UPSERT; the file is
-the only state, and a replayed microbatch changes nothing.
+the only state, and a replayed microbatch changes nothing
+(streaming.pipeline.stream_prices_to_sqlite).
 """
-
-from .pipeline import stream_prices_to_sqlite
-
-__all__ = ["stream_prices_to_sqlite"]

@@ -10,6 +10,7 @@ local HTTP server serves the cache tests, catalog uses an injected fetcher.
 
 from __future__ import annotations
 
+import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -63,16 +64,13 @@ def test_discover_months_empty_raises():
 
 def test_pick_month():
     months = ["2023-11", "2023-12", "2024-01"]
-    assert pick_month(months, latest=True) == "2024-01"
-    assert pick_month(months) == "2024-01"  # no choice → newest
+    assert pick_month(months) == "2024-01"  # no choice → newest (--latest)
     # the last valid index IS selectable (reference off-by-one fixed,
     # src/main.rs:178)
     assert pick_month(months, choice=2) == "2024-01"
     assert pick_month(months, choice=0) == "2023-11"
     with pytest.raises(IndexError):
         pick_month(months, choice=3)
-    with pytest.raises(ValueError, match="not both"):
-        pick_month(months, latest=True, choice=1)
 
 
 def test_pricecatcher_urls_match_reference():
@@ -91,7 +89,8 @@ def test_pricecatcher_urls_match_reference():
 
 
 class _Handler(BaseHTTPRequestHandler):
-    """Serves self.server.files {path: (bytes, etag|None)}; counts requests."""
+    """Serves self.server.files {path: (bytes, etag|None)} with a fixed
+    Last-Modified; counts requests."""
 
     def _serve(self, body: bool) -> None:
         entry = self.server.files.get(self.path)
@@ -106,6 +105,7 @@ class _Handler(BaseHTTPRequestHandler):
         self.send_header("Content-Length", str(len(data)))
         if etag:
             self.send_header("ETag", etag)
+        self.send_header("Last-Modified", "Mon, 01 Jan 2024 00:00:00 GMT")
         self.end_headers()
         if body:
             self.wfile.write(data)
@@ -168,6 +168,25 @@ def test_cache_size_revalidation_without_etag(http_server, tmp_path):
     http_server.files["/f.parquet"] = (b"123456789", None)  # length changed
     r3 = cache.get("f.parquet", _url(http_server, "/f.parquet"))
     assert not r3.cache_hit and r3.path.read_bytes() == b"123456789"
+
+
+def test_cache_sidecar_keeps_only_read_validators(http_server, tmp_path):
+    """Last-Modified is not stored (nothing revalidates on it), and an
+    older sidecar that still holds it loads as before."""
+    http_server.files["/f.parquet"] = (b"payload-v1", '"v1"')
+    url = _url(http_server, "/f.parquet")
+    cache = SourceCache(tmp_path, timeout=5)
+    cache.get("f.parquet", url)
+    meta = tmp_path / "f.parquet.meta.json"
+    assert json.loads(meta.read_text()) == {"content-length": "10", "etag": '"v1"'}
+    meta.write_text(json.dumps({
+        "content-length": "10", "etag": '"v1"',
+        "last-modified": "Mon, 01 Jan 2024 00:00:00 GMT",
+    }))
+    assert cache.get("f.parquet", url).cache_hit
+    http_server.files["/f.parquet"] = (b"payload-v2", '"v2"')
+    assert not cache.get("f.parquet", url).cache_hit
+    assert http_server.counts[("GET", "/f.parquet")] == 2
 
 
 def test_cache_offline_fallback(http_server, tmp_path):

@@ -501,9 +501,11 @@ def test_failed_build_keeps_last_good_artifact(spark, fixture_trio, tmp_path):
     db, z, _ = pipeline.build_artifact(tables, out, "2024-01")
     published = {p.name: p.read_bytes() for p in (db, z)}
 
-    # items is written last, so prices and premises are already in the file
+    # items is written last, so prices and premises are already in the file.
+    # The cast keeps the column a string, a type the artifact holds, so the
+    # failure comes from Spark while the rows are inserted.
     failing = dict(tables, items=tables["items"].withColumn(
-        "item", F.raise_error(F.lit("upstream failure"))
+        "item", F.raise_error(F.lit("upstream failure")).cast("string")
     ))
     with pytest.raises(Exception, match="upstream failure"):
         pipeline.build_artifact(failing, out, "2024-01")

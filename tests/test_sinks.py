@@ -1,8 +1,10 @@
 """Tests for the SQLite + zip artifact sinks.
 
-Reference behaviors covered: index DDL set (src/main.rs:192-207), the
-backup-to-file export (src/main.rs:284-311 — here a direct streamed write),
-and zip packaging (src/main.rs:312-325).
+Reference behaviors covered: the artifact's three tables and index DDL set
+(src/main.rs:192-207), the backup-to-file export (src/main.rs:284-311 —
+here a direct streamed write), and zip packaging (src/main.rs:312-325).
+The sink writes only that artifact, so every case here writes the product
+tables.
 """
 
 from __future__ import annotations
@@ -10,12 +12,24 @@ from __future__ import annotations
 import os
 import sqlite3
 import zipfile
+from datetime import datetime
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
+from opendosm_parquet_to_sqlite_spark.plans.pipeline import build_tables
 from opendosm_parquet_to_sqlite_spark.sinks.sqlite import (
-    REFERENCE_INDEXES,
+    table_ddl,
+    verify_sqlite_artifact,
     write_sqlite,
 )
 from opendosm_parquet_to_sqlite_spark.sinks.zipsink import DEFLATE_LEVEL, zip_artifact
@@ -23,52 +37,72 @@ from opendosm_parquet_to_sqlite_spark.sinks.zipsink import DEFLATE_LEVEL, zip_ar
 pytestmark = pytest.mark.product
 
 
-def test_write_sqlite_multibatch_contents_and_types(spark, tmp_path):
-    """A table spanning many insert batches round-trips exactly; temporal
-    columns land as ISO TEXT (the reference's date-as-string convention)."""
-    n = 25_000  # several BATCH_ROWS, so the buffered path flushes repeatedly
-    df = spark.range(n).select(
-        F.col("id"),
-        (F.col("id") * 2.5).alias("val"),
-        F.concat(F.lit("name_"), F.col("id")).alias("name"),
-        F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("ts"),
+def _prices(spark, n: int):
+    """n distinct-key `prices` rows, as the month build leaves them."""
+    return spark.range(n).select(
+        F.format_string("2024-01-%02d", F.col("id") % 28 + 1).alias("date"),
+        F.col("id").alias("premise_code"),
+        (F.col("id") % 97).alias("item_code"),
+        (F.col("id") * 2.5).alias("price"),
     )
+
+
+def _premises(spark, codes):
+    return spark.createDataFrame(
+        [(c, f"shop {i}", "addr", "grocer", "Selangor", "PJ") for i, c in enumerate(codes)],
+        "premise_code long, premise string, address string, premise_type string, "
+        "state string, district string",
+    )
+
+
+def _items(spark, codes):
+    return spark.createDataFrame(
+        [(c, f"item {i}", "1l", "dairy", "drink") for i, c in enumerate(codes)],
+        "item_code long, item string, unit string, item_group string, item_category string",
+    )
+
+
+def _artifact(spark, db, n_prices: int = 10, n_dims: int = 3) -> dict[str, int]:
+    return write_sqlite(
+        {
+            "prices": _prices(spark, n_prices),
+            "premises": _premises(spark, range(n_dims)),
+            "items": _items(spark, range(n_dims)),
+        },
+        db,
+    )
+
+
+def test_write_sqlite_multibatch_contents_and_types(spark, tmp_path):
+    """A prices table spanning many insert batches round-trips exactly,
+    each column with its SQLite storage class."""
+    n = 25_000  # several BATCH_ROWS, so the insert loop runs repeatedly
     db = tmp_path / "out.db"
-    counts = write_sqlite({"t": df}, db)
+    counts = write_sqlite({"prices": _prices(spark, n)}, db)
     con = sqlite3.connect(db)
     try:
-        assert con.execute("SELECT count(*) FROM t").fetchone()[0] == n
-        assert counts == {"t": n}
-        assert con.execute("SELECT sum(id) FROM t").fetchone()[0] == n * (n - 1) // 2
+        assert counts == {"prices": n}
+        assert con.execute("SELECT count(*) FROM prices").fetchone()[0] == n
+        assert (
+            con.execute("SELECT sum(premise_code) FROM prices").fetchone()[0]
+            == n * (n - 1) // 2
+        )
         row = con.execute(
-            "SELECT id, val, name, ts FROM t WHERE id = 7"
+            "SELECT date, premise_code, item_code, price, typeof(date), "
+            "typeof(premise_code), typeof(item_code), typeof(price) "
+            "FROM prices WHERE premise_code = 7"
         ).fetchone()
-        assert row[0] == 7 and row[1] == 17.5 and row[2] == "name_7"
-        assert isinstance(row[3], str) and row[3].startswith("2023-11-14")
+        assert row == ("2024-01-08", 7, 7, 17.5, "text", "integer", "integer", "real")
     finally:
         con.close()
 
 
 def test_write_sqlite_reference_index_ddl(spark, tmp_path):
-    """The emitted index set matches the reference DDL (src/main.rs:194-206):
-    unique on dimension keys, non-unique on fact join keys + filter columns."""
-    prices = spark.createDataFrame(
-        [("2024-01-01", 1, 10, 5.5)], "date string, premise_code long, item_code long, price double"
-    )
-    premises = spark.createDataFrame(
-        [(1, "shop", "addr", "grocer", "Selangor", "PJ")],
-        "premise_code long, premise string, address string, premise_type string, state string, district string",
-    )
-    items = spark.createDataFrame(
-        [(10, "milk", "1l", "dairy", "drink")],
-        "item_code long, item string, unit string, item_group string, item_category string",
-    )
+    """The emitted index set matches the reference DDL (src/main.rs:194-206)
+    without the caller naming it: unique on dimension keys, non-unique on
+    fact join keys + filter columns."""
     db = tmp_path / "pc.db"
-    write_sqlite(
-        {"prices": prices, "premises": premises, "items": items},
-        db,
-        indexes=REFERENCE_INDEXES,
-    )
+    _artifact(spark, db)
     con = sqlite3.connect(db)
     try:
         idx = {
@@ -96,18 +130,11 @@ def test_write_sqlite_reference_index_ddl(spark, tmp_path):
 
 
 def test_write_sqlite_fresh_file_needs_no_vacuum(spark, tmp_path):
-    """A freshly written artifact, several tables with indexes over many
-    insert batches, has no free pages and passes quick_check, so the
+    """A freshly written artifact, all three tables with their indexes over
+    many insert batches, has no free pages and passes quick_check, so the
     sink skips VACUUM."""
-    df = spark.range(20_000).select(
-        F.col("id"), (F.col("id") % 97).alias("g"), F.concat(F.lit("v"), F.col("id")).alias("s")
-    )
     db = tmp_path / "fresh.db"
-    write_sqlite(
-        {"a": df, "b": df.filter(F.col("g") < 50)},
-        db,
-        indexes={"a": [("id", True), ("g", False)], "b": [("s", False)]},
-    )
+    _artifact(spark, db, n_prices=20_000, n_dims=12_000)
     con = sqlite3.connect(db)
     try:
         assert con.execute("PRAGMA freelist_count").fetchone()[0] == 0
@@ -118,17 +145,63 @@ def test_write_sqlite_fresh_file_needs_no_vacuum(spark, tmp_path):
 
 @pytest.mark.parametrize("keys", [[1, 2, 2], [1, None, None]], ids=["duplicate", "null"])
 def test_write_sqlite_unique_index_rejects_bad_keys(spark, tmp_path, keys):
-    """A unique index spec makes the column a key: a duplicate (caught by
-    CREATE UNIQUE INDEX) or a NULL (which SQLite's UNIQUE admits) raises."""
-    df = spark.createDataFrame([(k, "x") for k in keys], "k long, v string")
-    with pytest.raises(ValueError, match=r"unique key violated on t\.k"):
-        write_sqlite({"t": df}, tmp_path / "k.db", indexes={"t": [("k", True)]})
+    """The dimension keys are keys: a duplicate (caught by CREATE UNIQUE
+    INDEX) or a NULL (which SQLite's UNIQUE admits) in items.item_code or
+    premises.premise_code raises."""
+    for table, frame in (("items", _items), ("premises", _premises)):
+        key = f"{table[:-1]}_code"
+        with pytest.raises(ValueError, match=rf"unique key violated on {table}\.{key}"):
+            write_sqlite({table: frame(spark, keys)}, tmp_path / f"{table}.db")
+
+
+def test_table_ddl_pins_the_cleansed_schemas(tmp_path, spark):
+    """The three tables' DDL, from the schemas build_tables produces out of
+    file-native source types (string codes, a naive timestamp date, a
+    float premise code). These strings fix the artifact's bytes."""
+    src = {
+        "prices": pa.table({
+            "date": pa.array([datetime(2024, 1, 1, 9, 30)], pa.timestamp("us")),
+            "premise_code": ["101"], "item_code": ["10"], "price": ["5.50"],
+        }),
+        "premises": pa.table({
+            "premise_code": [101.0], "premise": ["a"], "address": ["b"],
+            "premise_type": ["c"], "state": ["d"], "district": ["e"],
+        }),
+        "items": pa.table({
+            "item_code": ["10"], "item": ["a"], "unit": ["b"],
+            "item_group": ["c"], "item_category": ["d"],
+        }),
+    }
+    for name, table in src.items():
+        pq.write_table(table, tmp_path / f"{name}.parquet")
+    tables = build_tables(
+        spark, *(tmp_path / f"{name}.parquet" for name in ("prices", "premises", "items"))
+    )
+    assert {t: table_ddl(t, df.schema) for t, df in tables.items()} == {
+        "prices": 'CREATE TABLE IF NOT EXISTS "prices" ("date" TEXT, '
+        '"premise_code" INTEGER, "item_code" INTEGER, "price" REAL)',
+        "premises": 'CREATE TABLE IF NOT EXISTS "premises" ("premise_code" INTEGER, '
+        '"premise" TEXT, "address" TEXT, "premise_type" TEXT, "state" TEXT, '
+        '"district" TEXT)',
+        "items": 'CREATE TABLE IF NOT EXISTS "items" ("item_code" INTEGER, '
+        '"item" TEXT, "unit" TEXT, "item_group" TEXT, "item_category" TEXT)',
+    }
+
+
+@pytest.mark.parametrize("dtype", [TimestampType(), BooleanType()], ids=["timestamp", "boolean"])
+def test_table_ddl_rejects_types_the_cleanse_does_not_produce(dtype):
+    """Only long, double and string columns reach the artifact; any other
+    type raises instead of being written as TEXT."""
+    schema = StructType([StructField("premise_code", LongType()), StructField("x", dtype)])
+    with pytest.raises(TypeError, match=rf"prices\.x is {dtype.typeName()}"):
+        table_ddl("prices", schema)
 
 
 def test_zip_artifact_roundtrip(tmp_path):
-    src = tmp_path / "pricecatcher.db"
+    """The member is pricecatcher.db whatever the .db's file name."""
+    src = tmp_path / "pricecatcher_2024-01.db"
     src.write_bytes(b"sqlite-bytes" * 1000)
-    z = zip_artifact(src, tmp_path / "pricecatcher.zip", arcname="pricecatcher.db")
+    z = zip_artifact(src, tmp_path / "pricecatcher.zip")
     with zipfile.ZipFile(z) as zf:
         assert zf.namelist() == ["pricecatcher.db"]
         assert zf.read("pricecatcher.db") == src.read_bytes()
@@ -146,7 +219,7 @@ def test_zip_artifact_is_deterministic(tmp_path):
     zips = []
     for n, mtime in enumerate((1_700_000_000, 1_710_000_000)):
         os.utime(src, (mtime, mtime))
-        z = zip_artifact(src, tmp_path / f"{n}.zip", arcname="pricecatcher.db")
+        z = zip_artifact(src, tmp_path / f"{n}.zip")
         zips.append(z.read_bytes())
     assert zips[0] == zips[1]
     with zipfile.ZipFile(
@@ -180,23 +253,23 @@ def test_partitioned_dataset_prunes_at_scan(spark, tmp_path):
 
 
 def test_verify_sqlite_artifact_gates(spark, tmp_path):
-    import sqlite3
-
-    from opendosm_parquet_to_sqlite_spark.sinks.sqlite import (
-        verify_sqlite_artifact,
-        write_sqlite,
-    )
-
-    df = spark.range(10)
     db = str(tmp_path / "a.db")
-    write_sqlite({"t": df}, db)
+    counts = _artifact(spark, db)
+    ok = verify_sqlite_artifact(db, counts)
+    assert ok["ok"] and ok["integrity"] == "ok" and ok["missing_indexes"] == []
+    bad_count = verify_sqlite_artifact(db, {**counts, "items": counts["items"] + 1})
+    assert not bad_count["ok"]
+
+
+def test_verify_sqlite_artifact_names_a_dropped_reference_index(spark, tmp_path):
+    """The gate checks the reference indexes of the tables it is given,
+    without the caller listing them."""
+    db = str(tmp_path / "a.db")
+    counts = _artifact(spark, db)
     con = sqlite3.connect(db)
-    con.execute("CREATE INDEX idx_t_id ON t (id)")
+    con.execute('DROP INDEX "idx_premises_state"')
     con.commit()
     con.close()
-    ok = verify_sqlite_artifact(db, {"t": 10}, ["idx_t_id"])
-    assert ok["ok"] and ok["integrity"] == "ok"
-    bad_count = verify_sqlite_artifact(db, {"t": 11}, [])
-    assert not bad_count["ok"]
-    bad_idx = verify_sqlite_artifact(db, {"t": 10}, ["missing_idx"])
-    assert not bad_idx["ok"] and bad_idx["missing_indexes"] == ["missing_idx"]
+    gate = verify_sqlite_artifact(db, counts)
+    assert not gate["ok"] and gate["missing_indexes"] == ["idx_premises_state"]
+    assert verify_sqlite_artifact(db, {"items": counts["items"]})["ok"]
