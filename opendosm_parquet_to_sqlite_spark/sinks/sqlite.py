@@ -4,7 +4,7 @@ general.
 The artifact is the reference's three tables, prices, premises and items,
 with its nine indexes (src/main.rs:192-207). This module is the one place
 that knows that layout: write_sqlite builds REFERENCE_INDEXES for every
-table it writes, verify_sqlite_artifact checks them, and table_ddl maps
+table it writes (and raises if one cannot be built), and table_ddl maps
 only the three column types the cleanse stack produces (long, double,
 string).
 
@@ -154,13 +154,14 @@ REFERENCE_INDEXES: dict[str, list[tuple[str, bool]]] = {
 
 def verify_sqlite_artifact(db_path: str, expected_tables: dict[str, int]) -> dict:
     """Ship-gate for a produced artifact: row counts per table match
-    expectations, the REFERENCE_INDEXES of those tables exist, and PRAGMA
-    integrity_check passes — the checklist a consumer runs before replacing
-    last month's .db (the reference ships artifacts with no verification at
-    all; a truncated upload or a crashed VACUUM is silently served).
+    expectations and PRAGMA integrity_check passes — the checklist a
+    consumer runs before replacing last month's .db (the reference ships
+    artifacts with no verification at all; a truncated upload or a crashed
+    VACUUM is silently served). The indexes need no check here:
+    write_sqlite raises if any of them cannot be built.
 
-    Returns {"ok": bool, "counts": {...}, "missing_indexes": [...],
-    "integrity": str} — callers gate on ok.
+    Returns {"ok": bool, "counts": {...}, "integrity": str} — callers gate
+    on ok.
     """
     con = sqlite3.connect(db_path)
     try:
@@ -169,29 +170,8 @@ def verify_sqlite_artifact(db_path: str, expected_tables: dict[str, int]) -> dic
             counts[t] = con.execute(
                 f'SELECT count(*) FROM "{t}"'
             ).fetchone()[0]
-        have = {
-            r[0]
-            for r in con.execute(
-                "SELECT name FROM sqlite_master WHERE type = 'index'"
-            )
-        }
-        missing = [
-            index_name(t, col)
-            for t in expected_tables
-            for col, _ in REFERENCE_INDEXES[t]
-            if index_name(t, col) not in have
-        ]
         integrity = con.execute("PRAGMA integrity_check").fetchone()[0]
     finally:
         con.close()
-    ok = (
-        counts == dict(expected_tables)
-        and not missing
-        and integrity == "ok"
-    )
-    return {
-        "ok": ok,
-        "counts": counts,
-        "missing_indexes": missing,
-        "integrity": integrity,
-    }
+    ok = counts == dict(expected_tables) and integrity == "ok"
+    return {"ok": ok, "counts": counts, "integrity": integrity}

@@ -55,8 +55,8 @@ def _download(url: str, dest: Path, timeout: float) -> dict[str, str]:
 class SourceCache:
     """Cache dir of remote files with size/ETag revalidation.
 
-    Validators are persisted next to each file as `<name>.meta.json` so
-    ETag checks survive process restarts (the reference re-derives state
+    The ETag is persisted next to each file as `<name>.meta.json` so ETag
+    checks survive process restarts (the reference re-derives state
     from file size alone, src/main.rs:134-146).
     """
 
@@ -76,11 +76,7 @@ class SourceCache:
             return {}
 
     def _save_meta(self, name: str, headers: dict[str, str]) -> None:
-        keep = {
-            k: headers[k]
-            for k in ("content-length", "etag")
-            if k in headers
-        }
+        keep = {"etag": headers["etag"]} if "etag" in headers else {}
         self._meta_path(name).write_text(json.dumps(keep))
 
     def _is_fresh(self, local: Path, name: str, headers: dict[str, str]) -> bool:

@@ -171,14 +171,15 @@ def test_cache_size_revalidation_without_etag(http_server, tmp_path):
 
 
 def test_cache_sidecar_keeps_only_read_validators(http_server, tmp_path):
-    """Last-Modified is not stored (nothing revalidates on it), and an
-    older sidecar that still holds it loads as before."""
+    """Only the ETag is stored: nothing revalidates on Last-Modified, and
+    the size check compares the HEAD's Content-Length with the file. An
+    older sidecar that still holds both loads as before."""
     http_server.files["/f.parquet"] = (b"payload-v1", '"v1"')
     url = _url(http_server, "/f.parquet")
     cache = SourceCache(tmp_path, timeout=5)
     cache.get("f.parquet", url)
     meta = tmp_path / "f.parquet.meta.json"
-    assert json.loads(meta.read_text()) == {"content-length": "10", "etag": '"v1"'}
+    assert json.loads(meta.read_text()) == {"etag": '"v1"'}
     meta.write_text(json.dumps({
         "content-length": "10", "etag": '"v1"',
         "last-modified": "Mon, 01 Jan 2024 00:00:00 GMT",
