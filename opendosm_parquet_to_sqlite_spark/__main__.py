@@ -7,11 +7,12 @@ PriceCatcher month, build the SQLite artifact, package the zip. The flags:
   --out-dir DIR                         where the .db and .zip go
   --cache-dir DIR                       the revalidating download cache
   --base-url URL                        where the three sources are served
-  --force                               rebuild even if every source was fresh
+  --force                               rebuild even if the artifact is current
 
-Exit code 0 when the cache was fresh and the rebuild was skipped (the
-reference exits 1 there — a failure code for a success condition,
-src/main.rs:243).
+The build is skipped when the published .db and .zip are both newer than
+every cached source. Exit code 0 then (the reference skips when every
+download was a cache hit and exits 1 there — a failure code for a success
+condition, src/main.rs:243).
 """
 
 from __future__ import annotations
@@ -30,7 +31,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out-dir", default="./out")
     p.add_argument("--cache-dir", default="./__cached__")
     p.add_argument("--base-url", default="https://storage.data.gov.my")
-    p.add_argument("--force", action="store_true", help="rebuild even if fresh")
+    p.add_argument(
+        "--force", action="store_true",
+        help="rebuild even if the .db and .zip are newer than every source",
+    )
     args = p.parse_args(argv)
 
     logging.basicConfig(level=logging.INFO)

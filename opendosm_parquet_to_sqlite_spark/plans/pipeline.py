@@ -6,7 +6,9 @@ Reference: main() at /root/reference/src/main.rs:159-328. Stages, in order:
                                            __main__.py, before run_pipeline)
 2. month selection (--latest / pick)       (src/main.rs:169-189; the CLI)
 3. fetch 3 parquets through the cache      (src/main.rs:214-239)
-4. early exit when every source was fresh  (src/main.rs:241-244)
+4. early exit when the published .db and   (src/main.rs:241-244, which
+   .zip are both newer than every cached   exits when every download
+   source (make's rule)                    was a cache hit instead)
 5. cleanse-load the three tables           (src/main.rs:21-58,247-249)
 6. flagship latest-per-(premise,item)      (src/main.rs:252-278)
 7. SQLite artifact + index DDL             (src/main.rs:192-208,280-311)
@@ -16,8 +18,9 @@ Reference: main() at /root/reference/src/main.rs:159-328. Stages, in order:
 
 Spark-first differences: the load+cleanse+dedup is ONE lazy DataFrame plan
 per table (no per-row inserts, no collect-and-reinsert round trip); indexes
-are created after load, not before; the early-exit uses status code 0
-semantics (the reference exits 1 — a failure code — on success).
+are created after load, not before; the early exit looks at what was
+published, not at what was downloaded, and uses status code 0 semantics
+(the reference exits 1 — a failure code — on success).
 
 Everything network-y is injectable so the whole pipeline unit-tests offline
 (tests/test_pipeline.py drives it on a synthetic fixture trio and checks
@@ -28,6 +31,7 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -52,7 +56,7 @@ log = logging.getLogger(__name__)
 @dataclass
 class PipelineResult:
     month: str
-    skipped: bool  # all sources fresh → nothing rebuilt (src/main.rs:241-244)
+    skipped: bool  # published pair newer than every source → nothing rebuilt
     db_path: Path | None = None
     zip_path: Path | None = None
     row_counts: dict[str, int] = field(default_factory=dict)
@@ -156,6 +160,12 @@ def build_tables(
     return {"prices": latest, "premises": premises, "items": items}
 
 
+def published_pair(out_dir: str | Path, month: str) -> tuple[Path, Path]:
+    """The two files a month build publishes: (.db, .zip)."""
+    out_dir = Path(out_dir)
+    return out_dir / f"pricecatcher_{month}.db", out_dir / "pricecatcher.zip"
+
+
 def build_artifact(
     tables: dict[str, DataFrame],
     out_dir: str | Path,
@@ -165,14 +175,12 @@ def build_artifact(
     pricecatcher.zip. Returns (db, zip, row counts).
 
     Both files are written under temporary names in out_dir and pass the
-    ship gate (row counts as inserted, the nine reference indexes,
-    integrity_check) before they replace the published pair, .db first.
-    A build that fails at any step leaves the last good .db and .zip as
-    they were.
+    ship gate (row counts as inserted, integrity_check; write_sqlite has
+    already raised if an index could not be built) before they replace
+    the published pair, .db first. A build that fails at any step leaves
+    the last good .db and .zip as they were.
     """
-    out_dir = Path(out_dir)
-    db = out_dir / f"pricecatcher_{month}.db"
-    z = out_dir / "pricecatcher.zip"
+    db, z = published_pair(out_dir, month)
     tmp_db, tmp_zip = (p.with_name(f".{p.name}.{os.getpid()}.tmp") for p in (db, z))
     try:
         counts = write_sqlite(tables, tmp_db)
@@ -188,6 +196,16 @@ def build_artifact(
     return db, z, counts
 
 
+def _newer_than(targets: Iterable[Path], sources: Iterable[Path]) -> bool:
+    """make's rule: every target exists and its mtime is strictly greater
+    than every source's."""
+    try:
+        oldest = min(t.stat().st_mtime_ns for t in targets)
+    except FileNotFoundError:
+        return False
+    return all(oldest > s.stat().st_mtime_ns for s in sources)
+
+
 def run_pipeline(
     spark: SparkSession,
     out_dir: str | Path,
@@ -199,13 +217,22 @@ def run_pipeline(
     """The reference main() for one month: cache → early-exit → build.
 
     Choosing the month (catalog discovery, latest or interactive pick) is
-    the CLI's job. force=True rebuilds even when every source was a cache
-    hit.
+    the CLI's job.
+
+    The published pair, not the download cache, decides the early exit,
+    by make's rule: skip only when the .db and the .zip both exist and
+    each was modified strictly after every cached source. A tie rebuilds.
+    So a build that failed after its download, a deleted .db or .zip, or
+    a source downloaded after the pair was built all rebuild on the next
+    run, online or offline. force=True rebuilds regardless.
     """
     cache = SourceCache(cache_dir)
-    paths, all_fresh = cache.get_all(pricecatcher_urls(month, base=base_url))
-    if all_fresh and not force:
-        log.info("Data up-to-date — skipping rebuild (src/main.rs:241-244)")
+    paths = {
+        name: cache.get(name, url).path
+        for name, url in pricecatcher_urls(month, base=base_url).items()
+    }
+    if not force and _newer_than(published_pair(out_dir, month), paths.values()):
+        log.info("Data up-to-date — skipping rebuild")
         return PipelineResult(month=month, skipped=True)
     tables = build_tables(
         spark,

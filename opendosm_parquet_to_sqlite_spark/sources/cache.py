@@ -2,17 +2,18 @@
 
 Reference: get_file / download_file / get_file_latest_revision at
 /root/reference/src/main.rs:95-149: HEAD for Content-Length, compare with
-the local file size, re-download on mismatch, and report cache-hit so the
-pipeline can early-exit when every source is fresh (src/main.rs:241-244).
+the local file size, re-download on mismatch, and report cache-hit. The
+reference early-exits when every source was a cache hit
+(src/main.rs:241-244); here the cache only avoids re-downloading, and
+run_pipeline decides the early exit from the published pair's file times.
 
 Driver-side by design — Spark executors read the *cached local files*; the
 WAN fetch is a one-time driver action, not a distributed op. Upgrades over
 the reference: an ETag validator when the server sends one, with the
 reference's size check as the fallback (size equality is a weak revision
-check), streaming download (the reference buffers whole files in RAM), and
-exit code 0 for the all-fresh case (the
-reference exits 1 — a failure code for a success condition,
-src/main.rs:243).
+check), and streaming download (the reference buffers whole files in RAM).
+A download writes a new file, so its mtime marks when the source last
+changed locally.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ log = logging.getLogger(__name__)
 @dataclass
 class FetchResult:
     path: Path
-    cache_hit: bool
+    cache_hit: bool  # read by perfbench's traced cache.hit_ratio only
 
 
 def _head(url: str, timeout: float) -> dict[str, str]:
@@ -114,13 +115,6 @@ class SourceCache:
         # stored), falling back to HEAD's for any the GET omitted
         self._save_meta(name, {**headers, **got})
         return FetchResult(local, cache_hit=False)
-
-    def get_all(self, sources: dict[str, str]) -> tuple[dict[str, Path], bool]:
-        """Fetch every source; all_fresh=True → caller may skip the rebuild
-        (the reference's early exit, src/main.rs:241-244)."""
-        results = {name: self.get(name, url) for name, url in sources.items()}
-        all_fresh = all(r.cache_hit for r in results.values())
-        return {n: r.path for n, r in results.items()}, all_fresh
 
 
 def pricecatcher_urls(month: str, base: str = "https://storage.data.gov.my") -> dict[str, str]:

@@ -3,9 +3,11 @@
 Reference behaviors pinned: the HTML section/link selector semantics
 (src/main.rs:75-89), month-key normalization '/'→'-' (src/main.rs:87-89),
 month selection incl. the fixed off-by-one (src/main.rs:169-189), size/ETag
-revalidation (src/main.rs:104-149), all-fresh early exit (src/main.rs:241-244),
-and the three source URLs (src/main.rs:219,226,233). No real network: a
-local HTTP server serves the cache tests, catalog uses an injected fetcher.
+revalidation (src/main.rs:104-149), and the three source URLs
+(src/main.rs:219,226,233). The early exit (src/main.rs:241-244) is not the
+cache's: run_pipeline decides it from the published pair's file times, and
+tests/test_pipeline.py covers it. No real network: a local HTTP server
+serves the cache tests, catalog uses an injected fetcher.
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ from opendosm_parquet_to_sqlite_spark.sources.catalog import (
     parse_catalog_html,
     pick_month,
 )
+
+pytestmark = pytest.mark.product
 
 CATALOG_HTML = """
 <html><body>
@@ -202,18 +206,3 @@ def test_cache_offline_fallback(http_server, tmp_path):
     assert r.cache_hit and r.path.read_bytes() == b"data"
     with pytest.raises(OSError):
         cache.get("missing.parquet", _url(http_server, "/missing.parquet"))
-
-
-def test_get_all_all_fresh_flag(http_server, tmp_path):
-    """all_fresh drives the pipeline early exit (src/main.rs:241-244)."""
-    http_server.files["/a"] = (b"aa", '"a1"')
-    http_server.files["/b"] = (b"bb", '"b1"')
-    cache = SourceCache(tmp_path, timeout=5)
-    sources = {"a.parquet": _url(http_server, "/a"), "b.parquet": _url(http_server, "/b")}
-    paths, fresh = cache.get_all(sources)
-    assert not fresh and set(paths) == {"a.parquet", "b.parquet"}
-    _, fresh2 = cache.get_all(sources)
-    assert fresh2
-    http_server.files["/b"] = (b"bb2", '"b2"')  # one stale → not all fresh
-    _, fresh3 = cache.get_all(sources)
-    assert not fresh3

@@ -3,7 +3,7 @@ checked against a DuckDB oracle of the same transform.
 
 Mirrors the reference's full main() (src/main.rs:159-328): cleanse-load,
 flagship latest-per-(premise,item), unique-key enforcement, index DDL, zip,
-cache-driven early exit.
+and the early exit, which the published pair decides.
 """
 
 from __future__ import annotations
@@ -180,39 +180,112 @@ def test_build_tables_matches_duckdb_oracle(spark, fixture_trio, tmp_path):
     assert counts == {"prices": 3, "premises": 3, "items": 2}
 
 
-def test_run_pipeline_offline_with_early_exit(spark, fixture_trio, tmp_path, monkeypatch):
-    """Full run_pipeline with the network stubbed to serve the fixture files:
-    first run builds, second run early-exits on all-fresh, force rebuilds."""
+@pytest.mark.parametrize(
+    "history, rebuilds",
+    [
+        (["build"], False),
+        (["fail"], True),
+        (["build", "new_etag", "fail"], True),
+        (["build", "rm_db"], True),
+        (["build", "rm_zip"], True),
+        (["build", "offline"], False),
+        (["fail", "offline"], True),
+    ],
+    ids=[
+        "unchanged",
+        "failed-build",
+        "old-pair-new-etag-failed-build",
+        "db-deleted",
+        "zip-deleted",
+        "offline-with-pair",
+        "offline-without-pair",
+    ],
+)
+def test_run_pipeline_offline_with_early_exit(
+    spark, fixture_trio, tmp_path, monkeypatch, history, rebuilds
+):
+    """Full run_pipeline with the network stubbed to serve the fixture files.
+    The published pair decides the early exit (make's rule): a run skips only
+    when the .db and the .zip both exist and are newer than every cached
+    source. After each history, the next run rebuilds or skips as the case
+    says, the run after it skips, and force rebuilds."""
     served = {
         "lookup_item.parquet": fixture_trio / "lookup_item.parquet",
         "lookup_premise.parquet": fixture_trio / "lookup_premise.parquet",
         "pricecatcher_2024-01.parquet": fixture_trio / "pricecatcher_2024-01.parquet",
     }
+    etags = {name: f'"{name}-v1"' for name in served}
+    online = [True]
 
     def fake_head(url, timeout):
+        if not online[0]:
+            raise OSError("network unreachable")
         name = url.rsplit("/", 1)[1]
         data = served[name].read_bytes()
-        return {"content-length": str(len(data)), "etag": f'"{name}-v1"'}
+        return {"content-length": str(len(data)), "etag": etags[name]}
 
     def fake_download(url, dest, timeout):
         name = url.rsplit("/", 1)[1]
         data = served[name].read_bytes()
         dest.write_bytes(data)
-        return {"content-length": str(len(data)), "etag": f'"{name}-v1"'}
+        return {"content-length": str(len(data)), "etag": etags[name]}
 
     monkeypatch.setattr(cache_mod, "_head", fake_head)
     monkeypatch.setattr(cache_mod, "_download", fake_download)
 
     out, cache_dir = tmp_path / "out", tmp_path / "cache"
-    r1 = pipeline.run_pipeline(spark, out, cache_dir, month="2024-01")
-    assert not r1.skipped and r1.db_path.exists() and r1.zip_path.exists()
-    assert r1.row_counts["prices"] == 3
+    db, z = out / "pricecatcher_2024-01.db", out / "pricecatcher.zip"
+    counts = {"prices": 3, "premises": 3, "items": 2}
 
-    r2 = pipeline.run_pipeline(spark, out, cache_dir, month="2024-01")
-    assert r2.skipped and r2.db_path is None
+    def run(**kw):
+        return pipeline.run_pipeline(spark, out, cache_dir, month="2024-01", **kw)
 
-    r3 = pipeline.run_pipeline(spark, out, cache_dir, month="2024-01", force=True)
-    assert not r3.skipped and r3.row_counts == r1.row_counts
+    def build():
+        r = run()
+        assert not r.skipped and (r.db_path, r.zip_path) == (db, z)
+        assert r.row_counts == counts
+
+    def fail():
+        # the sources are downloaded, then the build fails
+        pair = {p: p.read_bytes() for p in (db, z) if p.exists()}
+
+        def broken(*a, **k):
+            raise RuntimeError("build failed after the download")
+
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "build_tables", broken)
+            with pytest.raises(RuntimeError, match="build failed"):
+                run()
+        assert {p: p.read_bytes() for p in (db, z) if p.exists()} == pair
+
+    def new_etag():
+        etags["lookup_item.parquet"] = '"lookup_item.parquet-v2"'
+
+    def offline():
+        online[0] = False
+
+    steps = {
+        "build": build,
+        "fail": fail,
+        "new_etag": new_etag,
+        "rm_db": db.unlink,
+        "rm_zip": z.unlink,
+        "offline": offline,
+    }
+    for step in history:
+        steps[step]()
+
+    if rebuilds:
+        build()
+    else:
+        pair = [(p.stat().st_ino, p.read_bytes()) for p in (db, z)]
+        r = run()
+        assert r.skipped and r.db_path is None
+        assert [(p.stat().st_ino, p.read_bytes()) for p in (db, z)] == pair
+
+    assert run().skipped
+    r = run(force=True)
+    assert not r.skipped and r.row_counts == counts
 
 
 def test_cli_builds_skips_when_fresh_and_force_rebuilds(
@@ -220,8 +293,8 @@ def test_cli_builds_skips_when_fresh_and_force_rebuilds(
 ):
     """The product CLI, offline over file:// sources laid out as the real
     host serves them: the first run builds the .db and the .zip, a second
-    run finds every source fresh and leaves the artifact alone, --force
-    rebuilds it."""
+    run finds both newer than every cached source and leaves them alone,
+    --force rebuilds them."""
     served = tmp_path / "served"
     served.mkdir()
     fixture_trio.rename(served / "pricecatcher")
